@@ -5,12 +5,16 @@ and shipped as HTTP pipeline payloads with per-table concurrency
 (:114-161).
 
 Spark-first shape: everything here is a *sink* stage — no relational
-semantics.  Rows leave the cluster through ``toLocalIterator`` (one
-partition in driver memory at a time, never a full ``collect``), and the
-HTTP transport is injectable so tests and offline runs exercise the full
-payload path without a network.  At 100 TB marts are small aggregates by
-construction (the reports are bounded by entity counts, not fact rows), so
-a driver-side publish of *marts* stays cheap even when facts do not.
+semantics.  At 100 TB marts are small aggregates by construction (the
+dims and reports are bounded by entity counts, not fact rows), so each
+mart leaves the cluster in ONE Arrow collect (``DataFrame.toArrow``: one
+job per mart, not one per partition), and a driver-side publish of
+*marts* stays cheap even when facts do not.  The marts
+``pipeline.run_models`` returns are cached, so the collect reads the
+result the model writes materialized instead of re-running the DAG.
+Timestamps are rendered in the session time zone, never the driver
+process's ``TZ``.  The HTTP transport is injectable so tests and offline
+runs exercise the full payload path without a network.
 """
 
 from __future__ import annotations
@@ -19,7 +23,9 @@ import sqlite3
 from collections.abc import Callable, Iterable
 from concurrent.futures import ThreadPoolExecutor
 from datetime import date, datetime
+from zoneinfo import ZoneInfo
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 _SQLITE_TYPES = {
@@ -41,19 +47,31 @@ def _sqlite_type(spark_type: str) -> str:
     return _SQLITE_TYPES.get(spark_type, "TEXT")
 
 
-def _to_py(v: object) -> object:
+def _to_py(v: object, tz: ZoneInfo) -> object:
     # sqlite has no date/timestamp affinity; ISO text matches what the
-    # reference's sqlite dump carries.
+    # reference's sqlite dump carries.  Arrow hands zoned timestamps over
+    # as UTC; render them as wall time in the session zone.
     if isinstance(v, datetime):
+        if v.tzinfo is not None:
+            v = v.astimezone(tz).replace(tzinfo=None)
         return v.isoformat(sep=" ")
     if isinstance(v, date):
         return v.isoformat()
     return v
 
 
+def _column(col: pa.ChunkedArray, tz: ZoneInfo) -> list:
+    values = col.to_pylist()
+    if pa.types.is_timestamp(col.type) or pa.types.is_date(col.type):
+        return [_to_py(v, tz) for v in values]
+    return values
+
+
 def copy_to_sqlite(models: dict[str, DataFrame], db_path: str) -> None:
     """Cross-DB copy: DROP + CREATE + INSERT each mart into a SQLite file
-    (mirrors ATTACH/CTAS at dbt_build_and_load_turso.py:53-79)."""
+    (mirrors ATTACH/CTAS at dbt_build_and_load_turso.py:53-79).  Each mart
+    is collected with one ``toArrow`` call, so it must fit in driver
+    memory — true of the entity-bounded marts this sink publishes."""
     conn = sqlite3.connect(db_path)
     try:
         for name, df in models.items():
@@ -64,15 +82,12 @@ def copy_to_sqlite(models: dict[str, DataFrame], db_path: str) -> None:
             conn.execute(f'DROP TABLE IF EXISTS "{name}"')
             conn.execute(f'CREATE TABLE "{name}" ({cols})')
             placeholders = ", ".join("?" * len(df.columns))
-            ins = f'INSERT INTO "{name}" VALUES ({placeholders})'
-            batch: list[tuple] = []
-            for row in df.toLocalIterator():
-                batch.append(tuple(_to_py(v) for v in row))
-                if len(batch) >= 10_000:
-                    conn.executemany(ins, batch)
-                    batch.clear()
-            if batch:
-                conn.executemany(ins, batch)
+            tz = ZoneInfo(df.sparkSession.conf.get("spark.sql.session.timeZone"))
+            table = df.toArrow()
+            conn.executemany(
+                f'INSERT INTO "{name}" VALUES ({placeholders})',
+                zip(*(_column(c, tz) for c in table.columns)),
+            )
         conn.commit()
     finally:
         conn.close()
@@ -179,17 +194,18 @@ def publish_roundtrip(spark, sf_dir: str) -> DataFrame:
     from ..pipeline import run_models
 
     mart = run_models(spark, sf_dir)["rpt_artist_counts"]
-    db_path = tempfile.mktemp(prefix="publish_", suffix=".db")
-    counts = publish_models({"rpt_artist_counts": mart}, db_path)
-    assert counts["rpt_artist_counts"] >= 1
+    with tempfile.TemporaryDirectory(prefix="publish_") as tmp:
+        db_path = f"{tmp}/publish.db"
+        counts = publish_models({"rpt_artist_counts": mart}, db_path)
+        assert counts["rpt_artist_counts"] >= 1
 
-    conn = sqlite3.connect(db_path)
-    try:
-        rows = conn.execute(
-            'SELECT artists, plays, minutes_played FROM "rpt_artist_counts"'
-        ).fetchall()
-    finally:
-        conn.close()
+        conn = sqlite3.connect(db_path)
+        try:
+            rows = conn.execute(
+                'SELECT artists, plays, minutes_played FROM "rpt_artist_counts"'
+            ).fetchall()
+        finally:
+            conn.close()
     schema = T.StructType(
         [
             T.StructField("artists", T.StringType()),

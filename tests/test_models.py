@@ -55,6 +55,10 @@ def test_write_models_fact_partition_pruning(spark, tmp_path):
 
     part_dirs = [d for d in os.listdir(f"{out}/fct_played_track") if d.startswith("play_date=")]
     assert len(part_dirs) > 1, "fact not date-partitioned"
+    # the write is spread across cores, but each date stays one file
+    for d in part_dirs:
+        files = [f for f in os.listdir(f"{out}/fct_played_track/{d}") if f.endswith(".parquet")]
+        assert len(files) == 1, f"{d}: {files}"
 
     fct = spark.read.parquet(f"{out}/fct_played_track")
     one_day = sorted(part_dirs)[0].split("=", 1)[1]

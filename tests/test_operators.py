@@ -5,7 +5,7 @@ hash-parity gate can't express: invariants, idempotence, recall bounds."""
 from __future__ import annotations
 
 import sqlite3
-import tempfile
+import time
 
 from pyspark.sql import functions as F
 
@@ -167,9 +167,9 @@ def test_langid_pred_domain(spark):
 
 # --- publish sinks ---
 
-def test_publish_pipeline_roundtrip(spark):
+def test_publish_pipeline_roundtrip(spark, tmp_path):
     docs = read_table(spark, SF_SMOKE, "documents").select("doc_id", "lang", "n_chars")
-    db = tempfile.mktemp(suffix=".db")
+    db = str(tmp_path / "publish.db")
     n = docs.count()
     sent = publish_models({"docs": docs}, db, batch_size=7)
     creates, inserts = sql_dump(db)
@@ -192,18 +192,43 @@ def test_http_batch_payloads_shape():
     assert total == 5
 
 
-def test_copy_to_sqlite_preserves_nulls(spark):
-    df = spark.createDataFrame(
-        [(1, None, 2.5), (2, "x", None)], "id: long, s: string, d: double"
-    )
-    db = tempfile.mktemp(suffix=".db")
-    copy_to_sqlite({"t": df}, db)
+def _sqlite_rows(db: str, table: str) -> list[tuple]:
     conn = sqlite3.connect(db)
     try:
-        rows = sorted(conn.execute('SELECT * FROM "t"').fetchall())
+        return sorted(conn.execute(f'SELECT * FROM "{table}"').fetchall())
     finally:
         conn.close()
-    assert rows == [(1, None, 2.5), (2, "x", None)]
+
+
+def test_copy_to_sqlite_preserves_nulls(spark, tmp_path):
+    df = spark.createDataFrame(
+        [(1, None, 2.5, "2001-09-15", "2001-09-15 23:59:58.250"),
+         (2, "x", None, None, None),
+         (3, "y", 0.5, "1995-01-02", "1995-03-29 15:37:13")],
+        "id: long, s: string, d: double, dt: string, ts: string",
+    ).select("id", "s", "d", F.to_date("dt").alias("dt"), F.to_timestamp("ts").alias("ts"))
+    db = str(tmp_path / "t.db")
+    copy_to_sqlite({"t": df}, db)
+    assert _sqlite_rows(db, "t") == [
+        (1, None, 2.5, "2001-09-15", "2001-09-15 23:59:58.250000"),
+        (2, "x", None, None, None),
+        (3, "y", 0.5, "1995-01-02", "1995-03-29 15:37:13"),
+    ]
+
+
+def test_copy_to_sqlite_timestamps_ignore_driver_tz(spark, tmp_path, monkeypatch):
+    """Timestamps are published as wall time in the session zone (UTC),
+    whatever zone the driver process runs in."""
+    df = spark.range(1).select(F.to_timestamp(F.lit("1995-03-29 15:37:13")).alias("ts"))
+    db = str(tmp_path / "tz.db")
+    try:
+        monkeypatch.setenv("TZ", "America/Boise")
+        time.tzset()
+        copy_to_sqlite({"t": df}, db)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert _sqlite_rows(db, "t") == [("1995-03-29 15:37:13",)]
 
 
 # --- extension queries all have an oracle entry (closed contract) ---
