@@ -23,6 +23,8 @@ play date (partition pruning for the trailing-window reports), dims plain.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .config import RUN_DATE
@@ -46,6 +48,8 @@ from .plans import (
 # the driver's independent per-query calls instead of recomputed eight times.
 _MEMO: dict[tuple[int, str, str, bool], dict[str, DataFrame]] = {}
 
+_CACHED_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
 
 def run_models(
     spark: SparkSession, sf_dir: str, run_date: str = RUN_DATE, cache: bool = True
@@ -61,9 +65,27 @@ def run_models(
 def _build_models(
     spark: SparkSession, sf_dir: str, run_date: str, cache: bool
 ) -> dict[str, DataFrame]:
-    def materialize(df: DataFrame) -> DataFrame:
-        return df.cache() if cache else df
+    if not cache:
+        return _model_dag(spark, sf_dir, run_date, lambda df: df)
+    # Spark 4.1 caches a plan with AQE's partition coalescing switched off
+    # unless this is true, and a small cached mart is then written as one
+    # file per shuffle partition.  The setting is read when ``.cache()``
+    # registers the plan, so it is scoped to the mart caches here: every
+    # other cache in the session keeps Spark's default.
+    prior = spark.conf.get(_CACHED_PARTITIONING)
+    spark.conf.set(_CACHED_PARTITIONING, "true")
+    try:
+        return _model_dag(spark, sf_dir, run_date, DataFrame.cache)
+    finally:
+        spark.conf.set(_CACHED_PARTITIONING, prior)
 
+
+def _model_dag(
+    spark: SparkSession,
+    sf_dir: str,
+    run_date: str,
+    materialize: Callable[[DataFrame], DataFrame],
+) -> dict[str, DataFrame]:
     stg = materialize(stg_recent_tracks(src_recent_tracks(spark, sf_dir)))
     dt = materialize(dim_track(stg))
     da = materialize(dim_artist(stg))

@@ -11,9 +11,6 @@ knobs are the ones that matter on a 1000-executor cluster:
   decode) rides vectorized Arrow transfer instead of row pickling.
 - shuffle partitions sized to the local core count; on a real cluster this is
   overridden per-job (or left to AQE's coalescing with a high initial value).
-- AQE may change a cached plan's output partitioning, so a cached mart is
-  coalesced like an uncached one: a small mart is written as one file, not
-  one file per shuffle partition (Spark 4.1 defaults this to false).
 """
 
 from __future__ import annotations
@@ -61,7 +58,6 @@ def get_spark(app_name: str = "spotify-tracks-spark", cpus: int | None = None) -
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local[32] = driver and all executor threads share ONE heap; 8g
         # produced multi-second GC pauses (bench variance up to 4× on the

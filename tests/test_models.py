@@ -72,6 +72,30 @@ def test_write_models_fact_partition_pruning(spark, tmp_path):
         assert spark.read.parquet(f"{out}/{name}").count() == df.count()
 
 
+def test_cached_marts_write_one_file_and_leave_session_conf(spark, tmp_path):
+    """The marts are cached with AQE free to coalesce them, so each small
+    cached model is still written as one file.  That setting is scoped to
+    the mart caches: the session's own value is unchanged afterwards."""
+    import os
+
+    from spotify_tracks_spark.pipeline import write_models
+
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    before = spark.conf.get(key)
+    # a run_date of its own, so this builds (and caches) a fresh DAG
+    models = run_models(spark, SF_SMOKE, run_date="2020-01-01")
+    assert spark.conf.get(key) == before
+    cached = {n: df for n, df in models.items() if df.is_cached}
+    assert set(cached) == set(models) - {"fct_played_track"}
+    out = str(tmp_path / "marts")
+    write_models(cached, out)
+    for name in cached:
+        files = [f for f in os.listdir(f"{out}/{name}") if f.endswith(".parquet")]
+        assert len(files) == 1, f"{name}: {files}"
+    for df in cached.values():
+        df.unpersist()
+
+
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     """fct and dim_track bucketed by track_id into the same bucket count
     must join bucket-to-bucket: SortMergeJoin with ZERO Exchange nodes,
