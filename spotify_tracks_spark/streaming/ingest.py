@@ -16,8 +16,8 @@ mapping:
   available, checkpoint, exit.
 
 At scale: the state store shards by key hash across executors; the
-watermark keeps it bounded to ~1 day of keys; the foreachBatch anti-join
-shuffles only the micro-batch (small) against the sink's key index.
+watermark keeps it bounded to ~1 day of keys; the foreachBatch append
+ranks the micro-batch with the sink's key projection in one exchange.
 """
 
 from __future__ import annotations

@@ -75,6 +75,31 @@ def test_flatten_payload(spark):
     assert b.track_popularity == pytest.approx(55.0)
 
 
+def test_pages_to_df_empty_batch(spark):
+    raw = pages_to_df(spark, [])
+    assert raw.schema.simpleString() == "struct<payload:string>"
+    assert raw.count() == 0
+
+
+def test_flatten_payload_keeps_non_ascii(spark):
+    names = ("Sigur Rós", "坂本龍一", "Björk")
+    page = {"items": [_item(names[0], names[1], [names[2], names[0]], "2024-01-01T10:00:00Z")],
+            "next": None}
+    row = flatten_payload(pages_to_df(spark, [page])).collect()[0]
+    assert (row.track_name, row.track_album, row.track_artists) == (
+        names[0], names[1], f"{names[2]}, {names[0]}"
+    )
+
+
+def test_page_frame_plans_without_python_rdd(spark):
+    """The page frame is a local relation: no pickled Python RDD scan (and
+    its conversion stage) under the flatten."""
+    flat = flatten_payload(pages_to_df(spark, fetch_pages(_fetcher)))
+    plan = flat._jdf.queryExecution().sparkPlan().toString()
+    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan
+
+
 def test_ingest_end_to_end_dedup(spark):
     flat = flatten_payload(pages_to_df(spark, fetch_pages(_fetcher)))
     key = ["track_name", "track_album", "track_artists", "played_at"]

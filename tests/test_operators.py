@@ -47,6 +47,47 @@ def test_idempotent_union_is_set_union(spark):
     assert got == want
 
 
+def test_append_if_absent_keeps_incoming_column_order(spark):
+    """A key that is not the leading columns must not move to the front:
+    every file appended to a sink keeps the sink's column layout."""
+    schema = "name string, pop double, played_at string, ctx string"
+    existing = spark.createDataFrame([("a", 1.0, "t1", "x")], schema)
+    incoming = spark.createDataFrame([("a", 2.0, "t1", "y"), ("b", 3.0, "t2", None)], schema)
+    fresh = append_if_absent(existing, incoming, ["name", "played_at"])
+    assert fresh.columns == incoming.columns
+    assert [tuple(r) for r in fresh.collect()] == [("b", 3.0, "t2", None)]
+
+
+def test_append_if_absent_null_keys_and_batch_winner(spark):
+    """Planted edge rules of ON CONFLICT DO NOTHING: a key with a NULL
+    component never matches the sink, even the same NULL-bearing key held
+    there; such rows still collapse within the batch; and a within-batch
+    duplicate keeps the row whose non-key columns are smallest as
+    coalesced strings (NULL renders as "~", "10.0" < "2.0")."""
+    schema = "k1 string, k2 long, v string, n double"
+    existing = spark.createDataFrame(
+        [("a", None, "held", 0.0), (None, None, "held", 0.0), ("b", 1, "held", 0.0)], schema
+    )
+    incoming = spark.createDataFrame(
+        [
+            ("a", None, "z", 1.0),
+            ("a", None, "y", 9.0),
+            (None, None, "w", 1.0),
+            ("b", 1, "new", 1.0),
+            ("c", 2, None, 1.0),
+            ("c", 2, "m", 5.0),
+            ("d", 3, "q", 2.0),
+            ("d", 3, "q", 10.0),
+        ],
+        schema,
+    )
+    got = sorted(map(tuple, append_if_absent(existing, incoming, ["k1", "k2"]).collect()), key=repr)
+    assert got == sorted(
+        [("a", None, "y", 9.0), (None, None, "w", 1.0), ("c", 2, "m", 5.0), ("d", 3, "q", 10.0)],
+        key=repr,
+    )
+
+
 # --- dedup invariants ---
 
 def test_dedup_exact_canonical_is_min(spark):
