@@ -9,11 +9,11 @@ harness cap, oracle-checked by pytest instead (tests/test_extra_parity.py).
 
 HARNESS CAP — why queries() holds exactly 50 entries.  The driver's
 correctness run records at most ~50 queries: round 1 recorded all 47
-entries then present (CORRECTNESS_r01.json), round 2 recorded exactly the
-FIRST 50 of 63 in dict order (CORRECTNESS_r02.json) — the final 13 got no
-row at all even though all 13 pass the same oracle locally
-(scripts/check_parity.py, sf0.01).  So the driver surface is pinned to the
-50 highest-value entries — every distinct operator keeps its entry — and
+entries then present, round 2 recorded exactly the FIRST 50 of 63 in dict
+order — the final 13 got no row at all even though all 13 pass the same
+oracle locally (scripts/check_parity.py, sf0.01).  So the driver surface is
+pinned to the 50 highest-value entries — every distinct operator keeps its
+entry — and
 same-oracle variants plus approximate (rows-only-by-design) operators moved
 to ``extra_queries()``, where a parametrized pytest runs the identical
 hash-compare at sf0.001 every suite run.  Entries the round-2 harness never
@@ -358,178 +358,19 @@ def _events_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """The driver-checked surface: exactly 50 entries (see module docstring
-    for the harness-cap evidence); every entry here has an exact oracle.
-
-    ROUND-4 ROTATION: the driver oracle is the hard correctness signal,
-    so ~10 long-stable entries (q3/q4/q5/q7, events_summary/pivot/
-    percentiles/gap_fill/dedup_latest, text_langid — green in every round
-    they were recorded) rotated OUT to the pytest-parity tier, and 10
-    high-value operators that never had a driver row rotated IN
-    (scd2, pit_join, merge_upsert, growth_accounting, dedup_paragraph,
-    dedup_keep_list, tfidf, contamination, corpus_split, markov).  This
-    broadens the driver's lifetime coverage of the full query surface at
-    zero cap cost; swapped-out entries keep the identical hash-compare in
-    tests/test_extra_parity.py.
-
-    ROUND-5 ROTATION (same policy): the 10 round-4 additions that only
-    had pytest rows rotated IN (triangles, doc_similarity,
-    cms_heavy_hitters, stream_cms, dedup_recall_eval,
-    supplier_nation_share, sales_by_region_quarter, dedup_windowed,
-    dup_inflation, dedup_clusters_sql); rotated OUT 10 entries
-    driver-green ≥2 rounds (events_retention/funnel/set_ops/
-    active_users/sessionize/rollup, text_tokens/quality/fingerprint,
-    multimodal_frames).
-
-    ROUND-6 ROTATION (same policy): the 13 statistics/survival
-    operators that landed after the round-5 capture and so never had a
-    driver row rotated IN (wilson, ab_test, cuped, holt, theil_sen,
-    mann_whitney, gini, ks_test, benford, cohort_ltv, kaplan_meier,
-    log_rank, kmv_distinct); rotated OUT 13 entries driver-green ≥2
-    rounds (the 10 round-4 rotations — scd2, pit_join, merge_upsert,
-    growth_accounting, dedup_paragraph, dedup_keep_list, tfidf,
-    contamination, corpus_split, markov — plus dedup_exact,
-    ann_topk_bruteforce, corpus_prep, each green r2–r5).
-
-    ROUND-7 ROTATION (same policy): 13 never-driver-rowed operators
-    IN (pagerank, jaccard_exact_join, containment, clusters_star,
-    semantic_ivf, welch_ttest, bootstrap_ci, bootstrap_ab, srm_check,
-    cuped_ab_test, curriculum_order, quantile_hist batch+stream — the
-    round-6 additions plus the heaviest pytest-only plans); rotated
-    OUT the 13 longest-green: the whole round-5 rotation cohort
-    (triangles, doc_similarity, cms_heavy_hitters, stream_cms,
-    dedup_recall_eval, supplier_nation_share, sales_by_region_quarter,
-    dedup_windowed, dup_inflation, clusters_sql — each green r5–r6)
-    plus sql_top_artists, dedup_minhash_lsh, dedup_simhash (green
-    since r2).  The round-6 cohort stays (1 driver round so far;
-    policy is ≥2 before rotating out).
-
-    ROUND-8 ROTATION (same policy): 13 never-driver-rowed operators
-    IN (communities, substitutes, sequential_ab batch+stream twin,
-    did, retention_curve_fit, naive_bayes_langid, rfm, pareto,
-    pack_sequences, bpe_merges, span_corruption, ann_recall_eval_all
-    — the heaviest / most-distinct of the never-rowed tail, per the
-    round-7 verdict's own shortlist); rotated OUT the round-6
-    statistics cohort, now driver-green exactly 2 rounds (r6+r7):
-    wilson, ab_test, cuped, holt, theil_sen, mann_whitney, gini,
-    ks_test, benford, cohort_ltv, kaplan_meier, log_rank,
-    kmv_distinct.  The round-7 cohort stays (1 driver round).
-
-    ROUND-9 ROTATION (widened 13 → 20 per the round-8 verdict: 101/230
-    registered queries had never held a driver slot and the 13/round
-    pace needed ~8 more rounds): 20 never-driver-rowed operators IN —
-    the mechanically-computed heaviest of the never-rowed tail (union
-    over CORRECTNESS_r01–r08 keys, ranked by BENCH_FULL_r08 time):
-    q8/q6 streaming-incremental marts, eigencentrality, basket_rules,
-    bpe_encode (double duty with the regression diagnosis),
-    stream_join_outer, the KMV/HLL set ops + streaming fold, the
-    stream_kmv/hll/bloom folds, dedup_within_watermark,
-    stream_peak_rate, part_supplier_diversity, truncation_recall,
-    vocab_encode, corpus_survival, part_min_cost_supplier,
-    token_budget_pack.  Rotated OUT the 20 longest-green: the four
-    8-round entries (q2 streaming twin, publish_roundtrip,
-    dedup_clusters, ann_topk_ivf), the six 7-round entries
-    (idempotent_append, multimodal_bytes, stream_dedup/window/
-    sessionize/join) and the whole 4-round round-5 cohort
-    (hll_distinct, bloom_membership, minhash_incremental, kcore, the
-    tpch trio, temperature_sample, split_drift, bm25).  The round-7
-    (2 driver rounds) and round-8 (1 round) cohorts stay.
-
-    ROUND-10 ROTATION (widened 20 → 26: 90/239 registered queries had
-    never held a driver slot after round 9 and both sitting cohorts
-    were rotation-eligible): 26 never-driver-rowed operators IN — the
-    mechanically-computed heaviest of the never-rowed tail (union over
-    CORRECTNESS_r01–r09 keys, ranked by BENCH_FULL_r09 time), which by
-    construction covers all nine round-9 additions
-    (kmv_anotb batch+stream, stream_hll_set_ops, adamic_adar,
-    clustering_coef, seasonal_decompose, attribution_time_decay,
-    source_cap, quality_sweep) plus the heaviest never-rowed tail
-    (excess_supply_candidates, dedup_ngram_jaccard_uncapped,
-    part_small_qty_revenue, dedup_edit_distance,
-    orders_top_revenue_unshipped, corpus_repeated_ngrams, the five
-    remaining nation_* warehouse shapes, orders_large_volume,
-    ann_topk_ivfpq, text_bigram_lm_score, lineitem_late_shipment_modes,
-    events_profile, events_session_cooccurrence).  Rotated OUT the 26
-    longest-green: the whole round-7 cohort (3 driver rounds r7–r9:
-    pagerank, jaccard_exact_join, containment, clusters_star,
-    semantic_ivf, welch_ttest, bootstrap_ci, bootstrap_ab, srm_check,
-    cuped_ab_test, curriculum_order, quantile_hist batch+stream) and
-    the whole round-8 cohort (2 driver rounds r8–r9: communities,
-    substitutes, sequential_ab batch+stream, did, retention_curve_fit,
-    naive_bayes_langid, rfm, pareto, pack_sequences, bpe_merges,
-    span_corruption, ann_recall_eval_all).  The round-9 cohort stays
-    (1 driver round).  Never-rowed tail after this round: 64.
-
-    ROUND-11 ROTATION (same policy, 20 slots): 20 never-driver-rowed
-    operators IN — the mechanically-computed heaviest of the
-    never-rowed tail (union over CORRECTNESS_r01–r10 keys, 89 entries,
-    ranked by BENCH_FULL_r10 time), which covers the round-10
-    verdict's entire shortlist: parts_copurchase_modularity, ppr,
-    docs_stream_heavy_terms, q7 streaming-incremental twin,
-    embedding_top_component, corpus_source_divergence,
-    ann_topk_rrf_fusion, events_rolling_7d, ann_topk_ivf_nprobe,
-    ann_topk_pq, text_heavy_terms_mg, parts_copurchase_jaccard_links,
-    embedding_quantize, embedding_pq, corpus_gopher_rules,
-    corpus_tokenizer_fertility, embedding_dispersion,
-    events_grouping_sets, dim_calendar, documents_profile.  Rotated
-    OUT the whole round-9 cohort (driver-green exactly 2 rounds,
-    r9+r10): the q8/q6 streaming-incremental marts, eigencentrality,
-    basket_rules, bpe_encode, stream_join_outer, the KMV/HLL set-op
-    family and streaming folds, dedup_within_watermark,
-    stream_peak_rate, part_supplier_diversity, truncation_recall,
-    vocab_encode, corpus_survival, part_min_cost_supplier,
-    token_budget_pack.  The round-10 cohort stays (1 driver round).
-    Never-rowed tail after this round: 69 (tracked by the
-    rotation_debt gauge in bench.py and pinned monotonically
-    decreasing by tests/test_rotation_debt.py).
-
-    ROUND-12 ROTATION (round-11 verdict item 6; 21 slots this round):
-    21 never-driver-rowed operators IN — the 20 mechanically-heaviest
-    of the 69 PRE-EXISTING never-rowed tail (union over
-    CORRECTNESS_r01–r11 keys, ranked by the committed BENCH_FULL_r11
-    times: nation_supplier_hhi, events_stream_enrich,
-    text_rake_phrases, events_stream_sliding, promo_revenue_share,
-    orders_priority_late_ship, customers_returned_revenue,
-    orders_fulfillment_latency, events_mad_outliers,
-    events_session_paths, corpus_train_manifest,
-    events_autocorrelation, lineitem_pricing_summary,
-    events_dau_wau_mau, events_k_anonymity,
-    disjunctive_branch_revenue, customers_reorder_intervals,
-    events_session_overlap, events_stream_update_counts,
-    events_window_funnel) PLUS ann_topk_bruteforce_capped (registered
-    round 11; the verdict asked for its cap-binding oracle to get a
-    driver row).  Rotated OUT 21 of the 26-strong round-10 cohort
-    (driver-green exactly 2 rounds, r10+r11).  Five round-10 entries
-    stay a third round, each for a stated reason: the three
-    shared-artifact CARRIERS (parts_copurchase_clustering_coef carries
-    the triangle build, dedup_ngram_jaccard_uncapped the shingle+ngram
-    pair builds, dedup_edit_distance the minhash+edit pair builds —
-    keeping them in the driver tier keeps the bench ``carriers`` map
-    and the BASELINE anchors stable) and the two heaviest non-carriers
-    (ann_topk_ivfpq — also first _TOPK consumer of its own family list
-    — and text_bigram_lm_score) so the driver tier keeps its heaviest
-    distinct plans.  The round-11 cohort stays (1 driver round).
-    Carrier diff vs round 11 (adjudicated): only ``ann_exact_baseline``
-    — ann_topk_bruteforce_capped now runs in the driver tier before the
-    extras' ann_topk_bruteforce and populates _BRUTE_MEMO first (with
-    its OWN probe_mod=2/cap=16 key), so the gauge attributes the family
-    to it; the default-key exact baseline is still built and paid by
-    ann_topk_bruteforce exactly as before (different memo key — no cost
-    moved).  Pre-existing never-rowed tail after this round:
-    69 − 20 = 49 (ceiling ratcheted 69 → 49 in
-    tests/test_rotation_debt.py, which now reads the committed
-    BENCH_FULL_r11.json manifest instead of deriving the round from
-    driver-written files)."""
+    for the harness-cap evidence), each with an exact oracle in
+    ``oracle_sql()``.  Every other registered operator lives in
+    ``extra_queries()``, where tests/test_extra_parity.py runs the same
+    hash-compare; ``test_driver_surface_is_exactly_fifty`` pins the size,
+    the oracle coverage and that the two surfaces are disjoint."""
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        # reference model chain (SURVEY.md §2.1).  q3/q4/q5/q7 rotated to
+        # reference model chain (SURVEY.md §2.1).  q3/q4/q5/q7 live in
         # the extras tier (run_models builds every mart anyway — q1/q2/q6/
         # q8 still drive the full DAG through the driver oracle).
         "q1_stg_recent_tracks": _model("stg_recent_tracks"),
         "q2_dim_track": _model("dim_track"),
         "q6_rpt_track_counts": _model("rpt_track_counts"),
         "q8_rpt_discovery_rate": _model("rpt_discovery_rate"),
-        # --- rotated IN round 11: first-ever driver rows, fronted (the
-        # mechanically-heaviest of the never-rowed tail per
-        # BENCH_FULL_r10, covering the round-10 verdict's shortlist) ---
         # Newman modularity Q of the LPA partition (shared edge memo)
         "parts_copurchase_modularity": _graph_modularity,
         # personalized PageRank from a pinned seed (bounded iterations)
@@ -573,10 +414,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dim_calendar": _ts.dim_calendar,
         # one-scan per-column profile of the documents table
         "documents_profile": _profile.documents_profile,
-        # --- rotated IN round 12: first-ever driver rows (the 20
-        # mechanically-heaviest of the pre-existing never-rowed tail per
-        # the committed BENCH_FULL_r11, plus the cap-binding ANN panel
-        # the round-11 verdict asked to row) ---
         # Herfindahl supplier-concentration index per nation
         "nation_supplier_hhi": _tpch.nation_supplier_hhi,
         # stream-static broadcast enrichment join (complete-mode drain)
@@ -620,20 +457,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # probe-panel cap BINDING path: 16-probe lowest-vec_id panel
         # over ~|corpus|/2 candidates, oracle computes the same panel
         "ann_topk_bruteforce_capped": _sim.ann_topk_bruteforce_capped,
-        # --- round-10 cohort members kept a third round (see the
-        # ROUND-12 ROTATION docstring: three shared-artifact carriers +
-        # the two heaviest non-carriers) ---
         # per-node local clustering coefficient off the session-shared
-        # triangle counts.  NOTE: triangles lives in the extras tier,
-        # so in bench order THIS query fronts the wedge-join build and
-        # is the copurchase_triangles carrier — kept in the driver tier
-        # so the carrier does not shift (round-12 rotation).
+        # triangle counts (triangles itself lives in the extras tier)
         "parts_copurchase_clustering_coef": _graph_clustering_coef,
-        # uncapped exhaustive blocked-Jaccard (full reference semantics);
-        # carrier of the shingle + ngram pair builds — kept (round 12)
+        # uncapped exhaustive blocked-Jaccard (full reference semantics)
+        # over the session-shared shingle + ngram pair builds
         "dedup_ngram_jaccard_uncapped": _ngram_jaccard_uncapped,
-        # fifth dedup family: Levenshtein verify over LSH candidates;
-        # carrier of the minhash + edit pair builds — kept (round 12)
+        # fifth dedup family: Levenshtein verify over LSH candidates
+        # (session-shared minhash + edit pair builds)
         "dedup_edit_distance": _dedup.dedup_edit_distance,
         # IVF×PQ composed index: cell prune + code-only ADC rerank
         "ann_topk_ivfpq": _sim.ann_topk_ivfpq,
@@ -656,9 +487,7 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # --- rotated OUT of the driver surface in round 12 (21 of the
         # round-10 cohort, driver-green r10+r11; identical hash-compare
-        # continues here every pytest run).  Placed FIRST among the
-        # extras so each entry keeps its bench position ahead of every
-        # other family member — no shared-artifact carrier shifts. ---
+        # continues here every pytest run) ---
         # streaming fold of the HLL pair report (register-max drain)
         "events_stream_hll_set_ops": _events_stream_hll_set_ops,
         # theta-sketch A-NOT-B: directional audience difference per
@@ -733,10 +562,8 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- rotated OUT of the driver surface in round 7 (driver-green
         # ≥2 rounds; identical hash-compare continues here every run) ---
         # NOTE: triangles shares the wedge-join artifact with the
-        # clustering-coefficient query, which round 10 rotated INTO the
-        # driver tier — in bench order clustering_coef now runs first
-        # and carries the build; this row reads the warm memo (both
-        # re-anchored, carriers key records the swap).
+        # clustering-coefficient query (driver tier); whichever runs
+        # first in a session pays the build, the other reads the memo.
         "parts_copurchase_triangles": parts_copurchase_triangles,
         "text_doc_similarity": _text.text_doc_similarity,
         "events_cms_heavy_hitters": _events.events_cms_heavy_hitters,
@@ -1153,7 +980,6 @@ def oracle_sql() -> dict[str, str]:
         "events_grouping_sets": oracles_ext.EVENTS_GROUPING_SETS,
         "dim_calendar": oracles_ext.DIM_CALENDAR,
         "documents_profile": oracles_ext.DOCUMENTS_PROFILE,
-        # round-12 rotation: first-ever driver rows
         "nation_supplier_hhi": oracles_ext.NATION_SUPPLIER_HHI,
         "events_stream_enrich": oracles_ext.EVENTS_STREAM_ENRICH,
         "text_rake_phrases": oracles_ext.TEXT_RAKE_PHRASES,
@@ -1179,7 +1005,6 @@ def oracle_sql() -> dict[str, str]:
         "events_stream_update_counts": oracles_ext.EVENTS_STREAM_UPDATE_COUNTS,
         "events_window_funnel": oracles_ext.EVENTS_WINDOW_FUNNEL,
         "ann_topk_bruteforce_capped": oracles_ext.ANN_TOPK_BRUTEFORCE_CAPPED,
-        # round-10 cohort members kept a third round (carriers + heaviest)
         "parts_copurchase_clustering_coef": (
             oracles_ext.PARTS_COPURCHASE_CLUSTERING_COEF
         ),

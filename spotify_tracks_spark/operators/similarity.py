@@ -89,7 +89,7 @@ def _queries_and_corpus(
 # the full probe x corpus cosine scan for the SAME exact result.  The
 # output is |probes| x k rows (tiny), checkpointed once per parameter
 # set; at 100 TB the exact baseline is a written evaluation table
-# computed once per corpus snapshot.  bench.py clears this per pass.
+# computed once per corpus snapshot.  clear_similarity_memo() frees it.
 _BRUTE_MEMO: dict[tuple[int, str, int, int, int], DataFrame] = {}
 
 # Session-memoized APPROXIMATE top-k lists (round-11 optimization), the
@@ -101,8 +101,8 @@ _BRUTE_MEMO: dict[tuple[int, str, int, int, int], DataFrame] = {}
 # ``ann_topk_rrf_fusion`` each re-scored the corpus for identical lists.
 # At 100 TB the served index's result lists are exactly the artifact an
 # evaluation pipeline reads back rather than recomputes.  Keyed by every
-# semantic parameter; bench.py clears this per cold-cache pass and its
-# carrier tracker records which query paid each family's build.
+# semantic parameter; whichever consumer runs first pays the family's
+# build, and clear_similarity_memo() releases it.
 _TOPK_MEMO: dict[tuple, DataFrame] = {}
 
 

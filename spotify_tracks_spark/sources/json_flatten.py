@@ -11,10 +11,7 @@ Output columns/order = the source INSERT list (:221-223).
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import udtf
 
 from ..schemas import RECENTLY_PLAYED_PAYLOAD
 
@@ -40,58 +37,3 @@ def flatten_payload(raw: DataFrame, json_col: str = "payload") -> DataFrame:
             track["duration_ms"].alias("duration_ms"),
         )
     )
-
-
-# popularity/duration are DOUBLES at ingest, matching the reference's
-# pydantic float declarations (schemas.py:5-6) and the expression flatten.
-_FLATTEN_UDTF_SCHEMA = (
-    "track_name: string, track_album: string, track_artists: string,"
-    " album_release_date: string, release_date_precision: string,"
-    " track_popularity: double, played_at: string, context: string,"
-    " duration_ms: double"
-)
-
-
-@udtf(returnType=_FLATTEN_UDTF_SCHEMA)
-class FlattenPayloadUDTF:
-    """Python UDTF (table function) form of the flatten — one payload row
-    in, one row per item out, the lateral-join API class the expression
-    surface doesn't exercise.  Row-at-a-time Python IS the slow path
-    (SURVEY.md §7.3); this exists as API coverage pinned byte-equal to
-    ``flatten_payload``, which stays the hot path.  The dict-walking body
-    mirrors the reference's ``_get_items`` (pull_recent_tracks.py:112-151)
-    shape: UDTFs are where genuinely imperative per-record logic would
-    live if expressions could not express it."""
-
-    def eval(self, payload: str):
-        if not payload:
-            return
-        body = json.loads(payload)
-        for item in body.get("items") or []:
-            track = item.get("track") or {}
-            album = track.get("album") or {}
-            context = item.get("context") or None
-            artists = [
-                a.get("name")
-                for a in (track.get("artists") or [])
-                if a.get("name") is not None
-            ]
-            yield (
-                track.get("name"),
-                album.get("name"),
-                ", ".join(artists),
-                album.get("release_date"),
-                album.get("release_date_precision"),
-                track.get("popularity"),
-                item.get("played_at"),
-                context.get("type") if context else None,
-                track.get("duration_ms"),
-            )
-
-
-def flatten_payload_udtf(raw: DataFrame, json_col: str = "payload") -> DataFrame:
-    """UDTF-based flatten over the same payload column; output pinned
-    equal to ``flatten_payload`` by ``tests/test_ingest.py``."""
-    return raw.lateralJoin(
-        FlattenPayloadUDTF(F.col(json_col).outer())
-    ).drop(json_col)

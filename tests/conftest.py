@@ -26,10 +26,10 @@ def spark():
 # takes 28-54 min — past the driver's verify budget, whose captured
 # transcript died at ~40% with zero failures in round 11.  The DEFAULT
 # tier (everything not listed here) is bounded to ~10-15 min and keeps
-# a gate per surface: the rotating sf0.01 extras-parity slice (40
-# oracle compares at the driver's own scale, window advances per
-# round), the 265-query plan linter, the model chain, the operator /
-# graph / dedup planted-fixture tests, and the bookkeeping ratchets.
+# a gate per surface: the fixed sf0.01 extras-parity slice (40
+# oracle compares at the driver's own scale), the 265-query plan
+# linter, the model chain, and the operator / graph / dedup
+# planted-fixture tests.
 # The SLOW tier (run with `-m slow`) holds the exhaustive/brute-force
 # complements: the full sf0.001 extras sweep (every oracled extra —
 # the same compare the slice samples), the brute-force property tests,
@@ -51,7 +51,7 @@ _SLOW_MODULES = {
 }
 _SLOW_TESTS = {
     # the full sf0.001 extras sweep (212 oracle compares, ~400 s); the
-    # rotating 40-query sf0.01 slice STAYS in the default tier
+    # 40-query sf0.01 slice STAYS in the default tier
     "test_extra_entry_matches_oracle",
     # single >200 s plan walks / brute-force one-offs
     "test_no_accidental_cartesian_products",

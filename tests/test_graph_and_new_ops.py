@@ -399,9 +399,10 @@ def test_explode_edge_build_equals_join_form(spark):
         clear_copurchase_memo,
         copurchase_edges,
     )
+    from tests.conftest import SF_SMOKE
 
     clear_copurchase_memo()
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMOKE
     fast = copurchase_edges(spark, sf)
     ref = _copurchase_edges_join_form(spark, sf)
     assert fast.exceptAll(ref).count() == 0

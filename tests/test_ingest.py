@@ -130,14 +130,18 @@ def test_custom_datasource_reads_pages(spark, tmp_path):
 
 def test_custom_datasource_matches_expression_flatten(spark, tmp_path):
     """Two independent flatten implementations — the executor-side Python
-    DataSource and the from_json/explode expression path — must agree."""
+    DataSource and the from_json/explode expression path — must agree,
+    including on a NULL context, an empty artists list and an empty page."""
     import json
 
     from spotify_tracks_spark.sources.recent_tracks_datasource import (
         RecentTracksDataSource,
     )
 
-    pages = fetch_pages(_fetcher)
+    pages = fetch_pages(_fetcher) + [
+        {"items": [_item("Song D", "Album Z", [], "2024-05-02T09:30:00Z")], "next": None},
+        {"items": [], "next": None},
+    ]
     pages_file = tmp_path / "pages.json"
     pages_file.write_text(json.dumps(pages))
     spark.dataSource.register(RecentTracksDataSource)
@@ -147,9 +151,10 @@ def test_custom_datasource_matches_expression_flatten(spark, tmp_path):
         .load()
     )
     via_expr = flatten_payload(pages_to_df(spark, pages))
-    assert sorted(map(tuple, via_source.collect())) == sorted(
-        map(tuple, via_expr.collect())
-    )
+    rows = via_expr.collect()
+    assert len(rows) == 5
+    assert [r.track_artists for r in rows if r.track_name == "Song D"] == [""]
+    assert sorted(map(tuple, via_source.collect())) == sorted(map(tuple, rows))
 
 
 def test_custom_datasource_page_cap(spark, tmp_path):
@@ -306,29 +311,6 @@ def test_token_provider_refresh_failure_raises():
     provider = TokenProvider(InMemoryTokenStore("stale", "r"), dead_transport)
     with pytest.raises(RefreshError):
         provider.token()
-
-
-def test_flatten_udtf_equals_expression_flatten(spark):
-    """The Python UDTF flatten (lateral join API class) is pinned
-    byte-equal to the expression flatten — same rows, same columns."""
-    from spotify_tracks_spark.sources.json_flatten import (
-        flatten_payload,
-        flatten_payload_udtf,
-    )
-
-    pages = [
-        {"items": [
-            _item("Song A", "Album X", ["P1", "P2"], "2024-05-01T10:00:00Z"),
-            _item("Song B", "Album Y", ["Q"], "2024-05-01T11:00:00Z", context="playlist"),
-        ], "next": "u2"},
-        {"items": [_item("Song C", "Album X", [], "2024-05-02T09:30:00Z")], "next": None},
-        {"items": [], "next": None},
-    ]
-    raw = pages_to_df(spark, pages)
-    want = flatten_payload(raw)
-    got = flatten_payload_udtf(raw)
-    assert got.columns == want.columns
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 # --- OAuth authorization-code capture (sources/login.py) ---

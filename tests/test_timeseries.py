@@ -372,8 +372,9 @@ def test_theil_sen_sampled_pins_to_exact_at_mod_one(spark):
         events_theil_sen,
         events_theil_sen_sampled,
     )
+    from tests.conftest import SF_SMOKE
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMOKE
     exact = {r.event_type: r for r in events_theil_sen(spark, sf).collect()}
     pinned = {
         r.event_type: r
