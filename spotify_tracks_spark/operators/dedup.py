@@ -679,7 +679,9 @@ def _min_label_components(pairs: DataFrame) -> DataFrame:
       ONCE and feeds both the convergence count and the next round —
       the previous persist() chain left lineage growing linearly with
       rounds (plan size, planning time) and re-planned the full history
-      every round;
+      every round; the previous round's checkpoint is released once the
+      next one is materialized, so a deep graph holds one label vector,
+      not one per round;
     - the changed-row count folds into the SAME frame (old label
       carried alongside the stepped label) instead of the previous
       extra new⋈old join per round — one pass over |V| does both jobs;
@@ -718,6 +720,7 @@ def _min_label_components(pairs: DataFrame) -> DataFrame:
             .withColumn("comp", F.col("doc_id"))
             .localCheckpoint(eager=True)
         )
+        held = labels  # the checkpoint the current labels read from
 
         while True:
             nbr_min = (
@@ -736,19 +739,31 @@ def _min_label_components(pairs: DataFrame) -> DataFrame:
                 )
                 .localCheckpoint(eager=True)
             )
+            # the new round is materialized: the previous one's blocks go
+            _drop_checkpoint(held)
+            held = stepped
             changed = stepped.filter(F.col("comp") != F.col("prev_comp")).count()
             labels = stepped.select("doc_id", "comp")
             if changed == 0:
                 break
 
         sizes = labels.groupBy("comp").agg(F.count("*").alias("cluster_size"))
-        return (
+        out = (
             labels.join(sizes, "comp")
             .select("doc_id", F.col("comp").alias("cluster_id"), "cluster_size")
             .localCheckpoint(eager=True)
         )
+        _drop_checkpoint(held)
+        return out
     finally:
         edges.unpersist()
+
+
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Release the blocks of a ``localCheckpoint``ed frame.  They live in
+    the checkpointed RDD, which ``DataFrame.unpersist`` does not reach;
+    nothing may read ``df`` afterwards (its lineage is truncated)."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 PARA_TOKENS = 12

@@ -23,7 +23,6 @@ from .joins import (
     stream_events_enrich,
 )
 from .stateful import stream_sessionize
-from .stateful_tws import stream_sessionize_tws
 from .windowed import (
     stream_events_peak_rate,
     stream_events_sliding,
@@ -38,7 +37,6 @@ __all__ = [
     "stream_events_update_counts",
     "stream_events_windowed",
     "stream_sessionize",
-    "stream_sessionize_tws",
     "stream_click_purchase_join",
     "stream_click_purchase_join_outer",
     "stream_events_enrich",

@@ -32,12 +32,18 @@ write ``state_b{batch_id}``) — the single-process analog of a
 transactional table format's snapshot log, and the snapshot name doubles
 as the applied-batch marker that makes the fold replay-idempotent under
 foreachBatch's at-least-once contract.  Delta/Iceberg MERGE would replace
-both on a real deployment without changing the dataflow.
+both on a real deployment without changing the dataflow.  ``_drain_fold``
+holds that protocol once for every snapshot fold in the engine: these
+marts and the mergeable sketches of ``streaming/sketch.py``.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import re
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -51,14 +57,16 @@ N_SLICES = 2
 # maxFilesPerTrigger=FILES_PER_BATCH re-groups them into the same
 # n_slices micro-batches.  Batch composition shifts with file ordering,
 # which is irrelevant: the fold is associative/commutative and the
-# contract is the drained result, not per-batch contents.
+# contract is the drained result, not per-batch contents.  The sketch
+# folds pass files_per_batch=1 instead: a planted source of a few rows
+# then still spans n_slices micro-batches.
 FILES_PER_BATCH = 16
 
 _ATTRS = ("album_id", "album", "track_name", "artists")
 
-# (session id, sf_dir) -> materialized source-slice dir; see
-# stream_dim_track_incremental for why fixture prep is shared.
-_SRC_CACHE: dict[tuple[int, str], str] = {}
+# (source tag, session id, sf_dir) -> materialized source-slice dir, one
+# dict for every fold; see _drain_fold for why fixture prep is shared.
+_SRC_CACHE: dict[tuple[str, int, str], str] = {}
 
 
 def _partials(stg: DataFrame) -> DataFrame:
@@ -87,54 +95,56 @@ def _remerge(u: DataFrame) -> DataFrame:
 def _drain_fold(
     spark: SparkSession,
     sf_dir: str,
-    base: str | None,
-    partials_fn,
-    remerge_fn,
+    tag: str,
+    source: Callable[[SparkSession, str], DataFrame],
+    partials: Callable[[DataFrame], DataFrame],
+    remerge: Callable[[DataFrame], DataFrame],
+    base: str | None = None,
     n_slices: int = N_SLICES,
+    files_per_batch: int = FILES_PER_BATCH,
     prefix: str = "incr_dim_",
 ) -> DataFrame:
-    """Generic snapshot-fold drain shared by the incremental marts.
+    """The snapshot-fold drain: every streaming fold in the engine (these
+    marts and the ``streaming/sketch.py`` sketches) runs through it.
 
-    ``partials_fn(stg_batch)`` maps one staged micro-batch to state-grain
-    partial aggregates; ``remerge_fn(state ∪ partials)`` folds back to one
-    row per state key (associative, and may EVICT state rows that can
-    never contribute again — the trailing-window mart's mechanism for
-    keeping state bounded).  Returns the final state DataFrame read from
-    the durable snapshot.
+    ``source(spark, sf_dir)`` is the frame sliced into
+    ``n_slices × files_per_batch`` parquet files; each availableNow
+    trigger drains ``files_per_batch`` of them.  ``partials(batch_df)``
+    maps one micro-batch to state-grain partials; ``remerge(state ∪
+    partials)`` folds back to one row per state key (associative, and may
+    EVICT state rows that can never contribute again — the trailing-window
+    mart's mechanism for keeping state bounded).  Returns the final state
+    read from the durable snapshot; a source that yields no micro-batch
+    returns the fold of an empty batch.
 
     ``base`` is the state/checkpoint root.  Pass the SAME directory on a
     restarted run to resume: the snapshot scan below picks up the last
     applied batch and the stream resumes from its checkpoint, so already-
     folded batches are skipped, not double-counted.  The default (None)
     allocates a fresh tempdir — a single from-scratch drain."""
-    import os
-
     if base is None:
         base = tempfile.mkdtemp(prefix=prefix)
-        # Fresh-base runs share one materialized source per (session, sf):
-        # slicing the deduped log into arrival files is FIXTURE PREP (the
-        # stand-in for files landing from an ingest), not part of the
-        # incremental fold being measured — and it costs ~3× the fold
-        # itself at sf0.1.  Same contract as run_models' memoized staging.
+        # Fresh-base runs share one materialized source per (tag, session,
+        # sf): slicing the source into arrival files is FIXTURE PREP (the
+        # stand-in for files landing from an ingest), not part of the fold
+        # being measured — and it costs ~3× the fold itself at sf0.1.
         # State + checkpoint stay per-call (fresh fold every run); an
         # explicit ``base`` keeps everything under one dir for the
         # restart-recovery contract.
-        src_path = _SRC_CACHE.get((id(spark), sf_dir))
+        key = (tag, id(spark), sf_dir)
+        src_path = _SRC_CACHE.get(key)
         if src_path is None or not os.path.isdir(src_path):
-            src_path = tempfile.mkdtemp(prefix="incr_dim_src_") + "/src"
-            _SRC_CACHE[(id(spark), sf_dir)] = src_path
+            src_path = tempfile.mkdtemp(prefix=f"{prefix}src_") + "/src"
+            _SRC_CACHE[key] = src_path
     else:
         src_path = f"{base}/src"
-    # Materialize the deduped source log sliced into files; each trigger
-    # drains FILES_PER_BATCH of them, standing in for one ingest window's
-    # arrivals, and the write parallelizes across all cores.  A resumed
-    # run reuses the already-written slices (same files ⇒ same offsets
-    # for the checkpointed stream).
+    # A resumed run reuses the already-written slices (same files ⇒ same
+    # offsets for the checkpointed stream).
     if not os.path.isdir(src_path):
-        src_recent_tracks(spark, sf_dir).repartition(
-            n_slices * FILES_PER_BATCH
-        ).write.parquet(src_path)
-    schema = spark.read.parquet(src_path).schema
+        source(spark, sf_dir).repartition(n_slices * files_per_batch).write.parquet(
+            src_path
+        )
+    slices = spark.read.parquet(src_path)
 
     # State snapshots are named by the batch id that produced them — the
     # snapshot name IS the applied-batch marker, so a micro-batch
@@ -143,23 +153,20 @@ def _drain_fold(
     # after a restart) is detected and skipped instead of double-counted.
     # A transactional table format (Delta/Iceberg MERGE) subsumes this on
     # a real deployment; the recovery scan below is its snapshot log.
-    import glob as globmod
-    import re as remod
-
     done = sorted(
         int(m.group(1))
-        for p in globmod.glob(f"{base}/state_b*")
-        if (m := remod.search(r"state_b(\d+)$", p))
+        for p in glob.glob(f"{base}/state_b*")
+        if (m := re.search(r"state_b(\d+)$", p))
     )
     cur: dict = {"batch": done[-1] if done else -1, "df": None}
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= cur["batch"]:
             return  # replayed batch: already folded into the snapshot
-        partial = partials_fn(stg_recent_tracks(batch_df))
+        partial = partials(batch_df)
         if cur["batch"] >= 0:
-            # previous state: the in-memory cache from the prior batch of
-            # THIS run, else (resumed run) the last snapshot on disk
+            # previous state: the in-memory hand-off from the prior batch
+            # of THIS run, else (resumed run) the last snapshot on disk
             prev = (
                 cur["df"]
                 if cur["df"] is not None
@@ -169,7 +176,7 @@ def _drain_fold(
         # persist-then-write: the snapshot write computes the fold once and
         # the cache serves the NEXT batch's read side without a parquet
         # round-trip (the snapshot files stay the replay-idempotence log)
-        merged = remerge_fn(partial).persist()
+        merged = remerge(partial).persist()
         merged.write.mode("overwrite").parquet(f"{base}/state_b{batch_id}")
         if cur["df"] is not None:
             cur["df"].unpersist()
@@ -180,8 +187,8 @@ def _drain_fold(
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", str(FILES_PER_BATCH))
+            spark.readStream.schema(slices.schema)
+            .option("maxFilesPerTrigger", str(files_per_batch))
             .parquet(src_path)
             .writeStream.foreachBatch(merge)
             .option("checkpointLocation", f"{base}/ckpt")
@@ -191,13 +198,32 @@ def _drain_fold(
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prior)
+        # release the hand-off: the result is read from the durable
+        # snapshot, so it never depends on executor memory state
+        if cur["df"] is not None:
+            cur["df"].unpersist()
+    if cur["batch"] < 0:
+        return remerge(partials(slices.limit(0)))
+    return spark.read.parquet(f"{base}/state_b{cur['batch']}")
 
-    # return from the durable snapshot (not the cache) and release the
-    # cache — the result must not depend on executor memory state
-    state = spark.read.parquet(f"{base}/state_b{cur['batch']}")
-    if cur["df"] is not None:
-        cur["df"].unpersist()
-    return state
+
+def _drain_mart(
+    spark: SparkSession,
+    sf_dir: str,
+    base: str | None,
+    partials: Callable[[DataFrame], DataFrame],
+    remerge: Callable[[DataFrame], DataFrame],
+    n_slices: int,
+    prefix: str,
+) -> DataFrame:
+    """``_drain_fold`` over the play log, shared by the four mart folds:
+    each micro-batch of the deduped log is staged on arrival, then folded
+    by the mart's own partials."""
+    return _drain_fold(
+        spark, sf_dir, "plays", src_recent_tracks,
+        lambda batch_df: partials(stg_recent_tracks(batch_df)), remerge,
+        base, n_slices, prefix=prefix,
+    )
 
 
 def stream_dim_track_incremental(
@@ -210,7 +236,7 @@ def stream_dim_track_incremental(
     (availableNow drain) and return the final mart — hash-equal to the
     batch ``dim_track`` (same Q2 oracle).  See ``_drain_fold`` for the
     snapshot/restart contract."""
-    state = _drain_fold(
+    state = _drain_mart(
         spark, sf_dir, base, _partials, _remerge, n_slices, prefix="incr_dim_"
     )
     first_date = F.col("dttm_first_played").cast("date")
@@ -464,7 +490,7 @@ def stream_rpt_discovery_rate_incremental(
     the batch build (same Q8 oracle)."""
     from ..functions.math_utils import safe_divide
 
-    state = _drain_fold(
+    state = _drain_mart(
         spark, sf_dir, base, _q8_partials, _q8_remerge, n_slices,
         prefix="incr_q8_",
     )
@@ -553,7 +579,7 @@ def stream_rpt_artist_counts_incremental(
     this state (every fct track has a dim row by construction), and the
     artists label rides the sentinel rows min-folded — functionally
     dependent on track_id, the dim_track attribute argument."""
-    state = _drain_fold(
+    state = _drain_mart(
         spark, sf_dir, base, _rpt_partials, _rpt_remerge, n_slices,
         prefix="incr_rpt7_",
     )
@@ -597,7 +623,7 @@ def stream_rpt_track_counts_incremental(
     dependent on track_id, so min = the value — the same argument as
     dim_track's attribute columns, making the batch build's broadcast
     dim joins unnecessary here)."""
-    state = _drain_fold(
+    state = _drain_mart(
         spark, sf_dir, base, _rpt_partials, _rpt_remerge, n_slices,
         prefix="incr_rpt_",
     )

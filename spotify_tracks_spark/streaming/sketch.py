@@ -1,4 +1,4 @@
-"""Streaming sketch maintenance — a Count-Min sketch folded forward per
+"""Streaming sketch maintenance — mergeable sketches folded forward per
 micro-batch.
 
 MERGEABILITY is the whole point of keeping a sketch instead of exact
@@ -10,32 +10,57 @@ other stateful streaming ops (dedup/sessionize hold per-key state
 bounded only by the watermark); the sketch is the unbounded-cardinality
 answer.
 
-The fold reuses the replay-idempotence discipline of
-``streaming/incremental.py``: per-batch state snapshots named by batch
-id, so an at-least-once re-delivery is detected and skipped instead of
-double-added.  The drained sketch is hash-equal to the batch-computed
-one (same seeded portable hash as ``events_cms_heavy_hitters``), which
-is the exact-oracle contract.
+Every fold here is a ``partials``/``remerge`` pair plus an output tail;
+the drain itself is ``streaming/incremental.py::_drain_fold``, the one
+snapshot-fold protocol in the engine: per-batch state snapshots named by
+batch id, so an at-least-once re-delivery is detected and skipped instead
+of double-added, and ``base=`` resumes a restarted run.  The sketches
+slice their source into ``n_slices`` files drained one per trigger.  Each
+drained sketch is hash-equal to its batch-computed twin (same seeded
+portable hash as the batch operators), which is the exact-oracle
+contract.
 """
 
 from __future__ import annotations
 
-import glob
-import os
-import re
-import tempfile
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import portable_hash60
 from ..operators.events import CMS_DEPTH, CMS_WIDTH
 from ..sources.tables import normalize_events_ts
+from .incremental import _drain_fold
 
 N_SLICES = 4
 
-# (session id, sf_dir) -> materialized sliced-source dir (fixture prep,
-# shared per session like incremental.py's _SRC_CACHE)
-_SRC_CACHE: dict[tuple, str] = {}
+
+def _events(*cols: str):
+    """Source of the event folds: the normalized events table, projected
+    to what the fold reads (the projection names its slice-cache tag)."""
+
+    def source(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return normalize_events_ts(
+            spark.read.parquet(f"{sf_dir}/events.parquet")
+        ).select(*cols)
+
+    return source
+
+
+def _drain(
+    spark: SparkSession,
+    sf_dir: str,
+    cols: tuple[str, ...],
+    partials,
+    remerge,
+    base: str | None,
+    n_slices: int,
+    prefix: str,
+) -> DataFrame:
+    """``_drain_fold`` over the ``cols`` projection of the events table,
+    ``n_slices`` files drained one per trigger."""
+    return _drain_fold(
+        spark, sf_dir, "events:" + ",".join(cols), _events(*cols), partials,
+        remerge, base, n_slices, files_per_batch=1, prefix=prefix,
+    )
 
 
 def _batch_cells(df: DataFrame, depth: int, width: int) -> DataFrame:
@@ -74,69 +99,16 @@ def stream_events_cms(
     merge = union + cell-wise sum (associative & commutative, so batch
     composition is irrelevant).  State per batch is ≤ depth×width rows —
     CONSTANT in stream length and key cardinality."""
-    if base is None:
-        base = tempfile.mkdtemp(prefix="stream_cms_")
-        src_path = _SRC_CACHE.get((id(spark), sf_dir))
-        if src_path is None or not os.path.isdir(src_path):
-            src_path = tempfile.mkdtemp(prefix="stream_cms_src_") + "/src"
-            _SRC_CACHE[(id(spark), sf_dir)] = src_path
-    else:
-        src_path = f"{base}/src"
-    if not os.path.isdir(src_path):
-        normalize_events_ts(
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-        ).select("user_id").repartition(n_slices).write.parquet(src_path)
-    schema = spark.read.parquet(src_path).schema
-
-    done = sorted(
-        int(m.group(1))
-        for p in glob.glob(f"{base}/state_b*")
-        if (m := re.search(r"state_b(\d+)$", p))
+    final = _drain(
+        spark, sf_dir, ("event_type", "user_id"),
+        lambda df: _batch_cells(df, depth, width),
+        lambda u: u.groupBy("d", "cell").agg(F.sum("c").alias("c")),
+        base, n_slices, "stream_cms_",
     )
-    cur: dict = {"batch": done[-1] if done else -1, "df": None}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= cur["batch"]:
-            return  # at-least-once replay: already folded
-        partial = _batch_cells(batch_df, depth, width)
-        if cur["batch"] >= 0:
-            prev = (
-                cur["df"]
-                if cur["df"] is not None
-                else spark.read.parquet(f"{base}/state_b{cur['batch']}")
-            )
-            partial = prev.unionByName(partial)
-        merged = (
-            partial.groupBy("d", "cell").agg(F.sum("c").alias("c")).persist()
-        )
-        merged.write.mode("overwrite").parquet(f"{base}/state_b{batch_id}")
-        if cur["df"] is not None:
-            cur["df"].unpersist()
-        cur["df"] = merged
-        cur["batch"] = batch_id
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_path)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    final = spark.read.parquet(f"{base}/state_b{cur['batch']}")
     return final.select("d", "cell", F.col("c").cast("long").alias("c"))
 
 
 def _batch_kmv(df: DataFrame, k: int) -> DataFrame:
-    from pyspark.sql import Window
-
     hashed = df.select(
         "event_type", portable_hash60(F.col("user_id")).alias("h")
     ).distinct()
@@ -164,8 +136,7 @@ def stream_events_kmv(
 
     State per batch is ≤ k rows per event type — constant in stream
     length and user cardinality, the cardinality twin of the CMS
-    frequency fold above, with the same snapshot-per-batch replay
-    idempotence.  Output: (event_type, n_kept, kth_hash,
+    frequency fold above.  Output: (event_type, n_kept, kth_hash,
     est_distinct_users)."""
     from ..operators.events import KMV_K, KMV_SPACE
 
@@ -194,76 +165,22 @@ def _drain_kmv_registers(
     """Drain the per-type KMV register fold (union-and-retake per
     micro-batch) and return the final (event_type, h) register frame —
     the shared state both streaming sketch reports read."""
-    if base is None:
-        base = tempfile.mkdtemp(prefix="stream_kmv_")
-        # cache key namespaced: the CMS fold's source drops event_type,
-        # this one needs it — the two must not share a materialized src
-        src_path = _SRC_CACHE.get((id(spark), sf_dir, "kmv"))
-        if src_path is None or not os.path.isdir(src_path):
-            src_path = tempfile.mkdtemp(prefix="stream_kmv_src_") + "/src"
-            _SRC_CACHE[(id(spark), sf_dir, "kmv")] = src_path
-    else:
-        src_path = f"{base}/src"
-    if not os.path.isdir(src_path):
-        normalize_events_ts(
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-        ).select("event_type", "user_id").repartition(n_slices).write.parquet(
-            src_path
-        )
-    schema = spark.read.parquet(src_path).schema
 
-    done = sorted(
-        int(m.group(1))
-        for p in glob.glob(f"{base}/state_b*")
-        if (m := re.search(r"state_b(\d+)$", p))
-    )
-    cur: dict = {"batch": done[-1] if done else -1, "df": None}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= cur["batch"]:
-            return  # at-least-once replay: already folded
-        partial = _batch_kmv(batch_df, k)
-        if cur["batch"] >= 0:
-            prev = (
-                cur["df"]
-                if cur["df"] is not None
-                else spark.read.parquet(f"{base}/state_b{cur['batch']}")
-            )
-            partial = prev.unionByName(partial)
+    def remerge(u: DataFrame) -> DataFrame:
         # union-and-retake: dedup shared users across batches, keep the
         # k smallest per type — the lossless KMV merge
-        from pyspark.sql import Window
-
         w = Window.partitionBy("event_type").orderBy("h")
-        merged = (
-            partial.distinct()
+        return (
+            u.distinct()
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= k)
             .select("event_type", "h")
-            .persist()
         )
-        merged.write.mode("overwrite").parquet(f"{base}/state_b{batch_id}")
-        if cur["df"] is not None:
-            cur["df"].unpersist()
-        cur["df"] = merged
-        cur["batch"] = batch_id
 
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_path)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.read.parquet(f"{base}/state_b{cur['batch']}")
+    return _drain(
+        spark, sf_dir, ("event_type", "user_id"),
+        lambda df: _batch_kmv(df, k), remerge, base, n_slices, "stream_kmv_",
+    )
 
 
 def stream_events_kmv_set_ops(
@@ -360,69 +277,11 @@ def _drain_hll_registers(
     over the same rows.  Shared by ``stream_events_hll`` (cardinality
     estimate tail) and ``stream_events_hll_set_ops`` (pair-overlap
     tail)."""
-    from ..operators.events import HLL_M  # noqa: F401  (documented contract)
-
-    if base is None:
-        base = tempfile.mkdtemp(prefix="stream_hll_")
-        src_path = _SRC_CACHE.get((id(spark), sf_dir, "kmv"))
-        if src_path is None or not os.path.isdir(src_path):
-            src_path = tempfile.mkdtemp(prefix="stream_hll_src_") + "/src"
-            _SRC_CACHE[(id(spark), sf_dir, "kmv")] = src_path
-    else:
-        src_path = f"{base}/src"
-    if not os.path.isdir(src_path):
-        normalize_events_ts(
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-        ).select("event_type", "user_id").repartition(n_slices).write.parquet(
-            src_path
-        )
-    schema = spark.read.parquet(src_path).schema
-
-    done = sorted(
-        int(m.group(1))
-        for p in glob.glob(f"{base}/state_b*")
-        if (m := re.search(r"state_b(\d+)$", p))
+    return _drain(
+        spark, sf_dir, ("event_type", "user_id"), _batch_hll_registers,
+        lambda u: u.groupBy("event_type", "bucket").agg(F.max("m").alias("m")),
+        base, n_slices, "stream_hll_",
     )
-    cur: dict = {"batch": done[-1] if done else -1, "df": None}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= cur["batch"]:
-            return  # at-least-once replay: already folded
-        partial = _batch_hll_registers(batch_df)
-        if cur["batch"] >= 0:
-            prev = (
-                cur["df"]
-                if cur["df"] is not None
-                else spark.read.parquet(f"{base}/state_b{cur['batch']}")
-            )
-            partial = prev.unionByName(partial)
-        merged = (
-            partial.groupBy("event_type", "bucket")
-            .agg(F.max("m").alias("m"))
-            .persist()
-        )
-        merged.write.mode("overwrite").parquet(f"{base}/state_b{batch_id}")
-        if cur["df"] is not None:
-            cur["df"].unpersist()
-        cur["df"] = merged
-        cur["batch"] = batch_id
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_path)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.read.parquet(f"{base}/state_b{cur['batch']}")
 
 
 def stream_events_hll_set_ops(
@@ -463,10 +322,8 @@ def stream_events_hll(
     idempotent, so the fold is insensitive to how the stream slices.
 
     State per batch is ≤ 256 register rows per event type — constant in
-    stream length and user cardinality like the CMS/KMV folds, with the
-    same snapshot-per-batch replay idempotence (for HLL the max-merge
-    makes even a double-fold harmless; the snapshot discipline is kept
-    for uniformity and restart recovery).  Output: (event_type,
+    stream length and user cardinality like the CMS/KMV folds (the
+    max-merge makes even a double-fold harmless).  Output: (event_type,
     n_zero_regs, reg_sum_e61, est_distinct_users)."""
     from ..operators.events import HLL_EST_NUMER, HLL_M
 
@@ -539,65 +396,12 @@ def stream_events_bloom(
     State is ≤ m/32 word rows — constant in stream length and key
     cardinality.  Output: the final (word, bits) table, hash-equal to
     a batch build over the distinct users."""
-    if base is None:
-        base = tempfile.mkdtemp(prefix="stream_bloom_")
-        src_path = _SRC_CACHE.get((id(spark), sf_dir, "kmv"))
-        if src_path is None or not os.path.isdir(src_path):
-            src_path = tempfile.mkdtemp(prefix="stream_bloom_src_") + "/src"
-            _SRC_CACHE[(id(spark), sf_dir, "kmv")] = src_path
-    else:
-        src_path = f"{base}/src"
-    if not os.path.isdir(src_path):
-        normalize_events_ts(
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-        ).select("event_type", "user_id").repartition(n_slices).write.parquet(
-            src_path
-        )
-    schema = spark.read.parquet(src_path).schema
-
-    done = sorted(
-        int(m.group(1))
-        for p in glob.glob(f"{base}/state_b*")
-        if (m := re.search(r"state_b(\d+)$", p))
+    return _drain(
+        spark, sf_dir, ("event_type", "user_id"),
+        lambda df: _batch_bloom_words(df.select("user_id").distinct()),
+        lambda u: u.groupBy("word").agg(F.bit_or("bits").alias("bits")),
+        base, n_slices, "stream_bloom_",
     )
-    cur: dict = {"batch": done[-1] if done else -1, "df": None}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= cur["batch"]:
-            return  # at-least-once replay: OR is idempotent anyway
-        partial = _batch_bloom_words(batch_df.select("user_id").distinct())
-        if cur["batch"] >= 0:
-            prev = (
-                cur["df"]
-                if cur["df"] is not None
-                else spark.read.parquet(f"{base}/state_b{cur['batch']}")
-            )
-            partial = prev.unionByName(partial)
-        merged = (
-            partial.groupBy("word").agg(F.bit_or("bits").alias("bits")).persist()
-        )
-        merged.write.mode("overwrite").parquet(f"{base}/state_b{batch_id}")
-        if cur["df"] is not None:
-            cur["df"].unpersist()
-        cur["df"] = merged
-        cur["batch"] = batch_id
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_path)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.read.parquet(f"{base}/state_b{cur['batch']}")
 
 
 def stream_events_quantile_hist(
@@ -621,36 +425,20 @@ def stream_events_quantile_hist(
     (KLL, t-digest) are sampling- or merge-order-sensitive and thus not
     oracle-checkable; the fixed-bounds fold is the exact-contract
     member of the family.  State per batch stays ≤ |types|×n_bins rows
-    — constant in stream length, like the CMS/KMV/HLL/Bloom folds.
-    Replay-idempotent via the shared per-batch snapshot discipline."""
+    — constant in stream length, like the CMS/KMV/HLL/Bloom folds."""
     from ..operators.profile import HIST_BINS, quantiles_from_hist
 
-    if base is None:
-        base = tempfile.mkdtemp(prefix="stream_qhist_")
-        src_path = _SRC_CACHE.get((id(spark), sf_dir, "qhist"))
-        if src_path is None or not os.path.isdir(src_path):
-            src_path = tempfile.mkdtemp(prefix="stream_qhist_src_") + "/src"
-            _SRC_CACHE[(id(spark), sf_dir, "qhist")] = src_path
-    else:
-        src_path = f"{base}/src"
-    if not os.path.isdir(src_path):
-        normalize_events_ts(
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-        ).select("event_type", "value").repartition(n_slices).write.parquet(
-            src_path
-        )
-    schema = spark.read.parquet(src_path).schema
-
+    cols = ("event_type", "value")
     # bounds from the static source = "the previous profile" (see
-    # docstring); a |types|-row broadcast relation for every batch
-    bounds = (
-        spark.read.parquet(src_path)
+    # docstring); a |types|-row local relation broadcast into every batch
+    lohi = (
+        _events(*cols)(spark, sf_dir)
         .groupBy("event_type")
         .agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
-        .localCheckpoint(eager=True)
     )
+    bounds = spark.createDataFrame(lohi.collect(), lohi.schema)
 
-    def _batch_bins(df: DataFrame) -> DataFrame:
+    def partials(df: DataFrame) -> DataFrame:
         j = df.join(F.broadcast(bounds), "event_type").withColumn(
             "w", (F.col("hi") - F.col("lo")) / F.lit(float(HIST_BINS))
         )
@@ -664,62 +452,14 @@ def stream_events_quantile_hist(
             "event_type", bucket.alias("bucket"), F.col("lo"), F.col("w")
         ).agg(F.count("*").alias("n"))
 
-    done = sorted(
-        int(m.group(1))
-        for p in glob.glob(f"{base}/state_b*")
-        if (m := re.search(r"state_b(\d+)$", p))
+    final = _drain(
+        spark, sf_dir, cols, partials,
+        lambda u: u.groupBy("event_type", "bucket", "lo", "w").agg(
+            F.sum("n").alias("n")
+        ),
+        base, n_slices, "stream_qhist_",
     )
-    cur: dict = {"batch": done[-1] if done else -1, "df": None}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= cur["batch"]:
-            return  # at-least-once replay: already folded
-        partial = _batch_bins(batch_df)
-        if cur["batch"] >= 0:
-            prev = (
-                cur["df"]
-                if cur["df"] is not None
-                else spark.read.parquet(f"{base}/state_b{cur['batch']}")
-            )
-            partial = prev.unionByName(partial)
-        merged = (
-            partial.groupBy("event_type", "bucket", "lo", "w")
-            .agg(F.sum("n").alias("n"))
-            .persist()
-        )
-        merged.write.mode("overwrite").parquet(f"{base}/state_b{batch_id}")
-        if cur["df"] is not None:
-            cur["df"].unpersist()
-        cur["df"] = merged
-        cur["batch"] = batch_id
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_path)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    if cur["batch"] < 0:
-        # Fresh base whose source yielded ZERO micro-batches: no state
-        # snapshot exists, so reading state_b-1 would raise an opaque
-        # AnalysisException.  Return the empty sketch with the batch
-        # operator's schema instead (its empty-input behavior).
-        return spark.createDataFrame(
-            [], "event_type string, p double, n_total bigint, est double"
-        )
-    final = spark.read.parquet(f"{base}/state_b{cur['batch']}").withColumn(
-        "n", F.col("n").cast("long")
-    )
-    return quantiles_from_hist(final)
+    return quantiles_from_hist(final.withColumn("n", F.col("n").cast("long")))
 
 
 def stream_events_sequential_ab(
@@ -739,28 +479,10 @@ def stream_events_sequential_ab(
     arm + min-folded first-purchase day — min is associative, so the
     fold replays idempotently) and one row per observed day (grain
     'd').  Entity-grain like the incremental-mart states, never
-    event-grain; per-batch snapshots give the same at-least-once
-    replay detection as the other folds here.  The drain hands the
-    state to the SHARED report tail (``sequential_ab_report``), so
-    batch and stream produce byte-identical looks from identical
-    state."""
+    event-grain.  The drain hands the state to the SHARED report tail
+    (``sequential_ab_report``), so batch and stream produce
+    byte-identical looks from identical state."""
     from ..operators.analytics import AB_SPLIT_MOD, sequential_ab_report
-
-    if base is None:
-        base = tempfile.mkdtemp(prefix="stream_seq_ab_")
-        src_path = _SRC_CACHE.get((id(spark), sf_dir, "seq_ab"))
-        if src_path is None or not os.path.isdir(src_path):
-            src_path = tempfile.mkdtemp(prefix="stream_seq_ab_src_") + "/src"
-            _SRC_CACHE[(id(spark), sf_dir, "seq_ab")] = src_path
-    else:
-        src_path = f"{base}/src"
-    if not os.path.isdir(src_path):
-        normalize_events_ts(
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-        ).select("user_id", "event_type", "ts").repartition(
-            n_slices
-        ).write.parquet(src_path)
-    schema = spark.read.parquet(src_path).schema
 
     def _partials(df: DataFrame) -> DataFrame:
         u = df.groupBy("user_id").agg(
@@ -789,54 +511,10 @@ def stream_events_sequential_ab(
             "grain", "user_id", "day"
         )
 
-    done = sorted(
-        int(m.group(1))
-        for p in glob.glob(f"{base}/state_b*")
-        if (m := re.search(r"state_b(\d+)$", p))
+    state = _drain(
+        spark, sf_dir, ("user_id", "event_type", "ts"), _partials, _remerge,
+        base, n_slices, "stream_seq_ab_",
     )
-    cur: dict = {"batch": done[-1] if done else -1, "df": None}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= cur["batch"]:
-            return  # at-least-once replay: already folded
-        partial = _partials(batch_df)
-        if cur["batch"] >= 0:
-            prev = (
-                cur["df"]
-                if cur["df"] is not None
-                else spark.read.parquet(f"{base}/state_b{cur['batch']}")
-            )
-            partial = prev.unionByName(partial)
-        merged = _remerge(partial).persist()
-        merged.write.mode("overwrite").parquet(f"{base}/state_b{batch_id}")
-        if cur["df"] is not None:
-            cur["df"].unpersist()
-        cur["df"] = merged
-        cur["batch"] = batch_id
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_path)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    if cur["batch"] < 0:
-        return spark.createDataFrame(
-            [],
-            "day date, day_idx bigint, n_days bigint, n_a bigint, "
-            "n_b bigint, conv_a bigint, conv_b bigint, z_stat double, "
-            "obf_bound double, crosses boolean",
-        )
-    state = spark.read.parquet(f"{base}/state_b{cur['batch']}")
     users = state.filter(F.col("grain") == "u").select(
         F.col("day").alias("fp_day"),
         (portable_hash60(F.col("user_id")) % AB_SPLIT_MOD == 0).alias(
@@ -869,99 +547,50 @@ def stream_docs_heavy_terms(
     stored count off a ≤(k+1)-row bounded collect and decrements — the
     total decrement over the whole stream stays ≤ n/(k+1), so every
     globally-heavy term survives to the drain (the batch operator's
-    superset guarantee, sequentially).  Replay-idempotence rides the
-    module's snapshot-per-batch-id discipline."""
+    superset guarantee, sequentially)."""
     from ..operators.text_analysis import MG_K, WORD_RE
 
     if k is None:
         k = MG_K
-    if base is None:
-        base = tempfile.mkdtemp(prefix="stream_mg_")
-        src_path = _SRC_CACHE.get((id(spark), sf_dir, "docs"))
-        if src_path is None or not os.path.isdir(src_path):
-            src_path = tempfile.mkdtemp(prefix="stream_mg_src_") + "/src"
-            _SRC_CACHE[(id(spark), sf_dir, "docs")] = src_path
-    else:
-        src_path = f"{base}/src"
-    if not os.path.isdir(src_path):
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "text"
-        ).repartition(n_slices).write.parquet(src_path)
-    schema = spark.read.parquet(src_path).schema
+    words = F.regexp_extract_all(F.lower("text"), F.lit(WORD_RE), 0)
+    spent: list[DataFrame] = []  # summed counts behind a compressed state
 
-    done = sorted(
-        int(m.group(1))
-        for p in glob.glob(f"{base}/state_b*")
-        if (m := re.search(r"state_b(\d+)$", p))
-    )
-    cur: dict = {"batch": done[-1] if done else -1}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= cur["batch"]:
-            return  # at-least-once replay: already folded
-        partial = (
-            batch_df.select(
-                F.explode(
-                    F.regexp_extract_all(F.lower("text"), F.lit(WORD_RE), 0)
-                ).alias("tok")
-            )
-            .groupBy("tok")
-            .agg(F.count("*").alias("c"))
-        )
-        if cur["batch"] >= 0:
-            # prior state always re-read from its parquet snapshot: the
-            # snapshot IS the recovery contract (restart-idempotent),
-            # and a k-row read is cheaper than keeping a per-batch
-            # persisted frame alive (round-10 advice: the in-memory
-            # hand-off this replaced was dead code)
-            prev = spark.read.parquet(f"{base}/state_b{cur['batch']}")
-            partial = prev.unionByName(partial)
-        merged = partial.groupBy("tok").agg(F.sum("c").alias("c")).persist()
+    def remerge(u: DataFrame) -> DataFrame:
+        # the previous state is cached and written by now, so the sums it
+        # was compressed from can go
+        while spent:
+            spent.pop().unpersist()
+        merged = u.groupBy("tok").agg(F.sum("c").alias("c")).persist()
         # MG compress: the (k+1)-th largest stored count off a bounded
         # (k+1)-row collect; subtract it everywhere, drop the dead
         top = merged.orderBy(F.desc("c"), F.asc("tok")).limit(k + 1).collect()
-        if len(top) > k:
-            m = int(top[-1].c)
-            state = merged.select(
-                "tok", (F.col("c") - m).alias("c")
-            ).filter(F.col("c") > 0)
-        else:
-            state = merged
-        state.write.mode("overwrite").parquet(f"{base}/state_b{batch_id}")
-        merged.unpersist()
-        cur["batch"] = batch_id
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_path)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        if len(top) <= k:
+            return merged  # uncompressed: the drain's hand-off owns its cache
+        spent.append(merged)
+        m = int(top[-1].c)
+        return merged.select("tok", (F.col("c") - m).alias("c")).filter(
+            F.col("c") > 0
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
 
-    cands = spark.read.parquet(f"{base}/state_b{cur['batch']}").select("tok")
+    try:
+        cands = _drain_fold(
+            spark, sf_dir, "documents:text",
+            lambda s, d: s.read.parquet(f"{d}/documents.parquet").select("text"),
+            lambda df: df.select(F.explode(words).alias("tok"))
+            .groupBy("tok")
+            .agg(F.count("*").alias("c")),
+            remerge, base, n_slices, files_per_batch=1, prefix="stream_mg_",
+        ).select("tok")
+    finally:
+        while spent:
+            spent.pop().unpersist()
+
     # exact recount over the full corpus — the batch operator's pass 2
     from ..sources.tables import read_table
 
     docs = read_table(spark, sf_dir, "documents", spread=True)
-    toks = docs.select(
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit(WORD_RE), 0)
-        ).alias("tok")
-    )
-    n_total = docs.agg(
-        F.sum(
-            F.size(F.regexp_extract_all(F.lower("text"), F.lit(WORD_RE), 0))
-        ).cast("long").alias("n_total")
-    )
+    toks = docs.select(F.explode(words).alias("tok"))
+    n_total = docs.agg(F.sum(F.size(words)).cast("long").alias("n_total"))
     return (
         toks.join(F.broadcast(cands), "tok")
         .groupBy("tok")

@@ -49,14 +49,16 @@ _SLOW_MODULES = {
     "test_mllib_interop",         # JVM-RNG LSH recall test
     "test_profile_recall_paragraph",  # jaccard completeness brute force
 }
+# (module, test name): a bare name would also demote a same-named test
+# in another module
 _SLOW_TESTS = {
     # the full sf0.001 extras sweep (212 oracle compares, ~400 s); the
     # 40-query sf0.01 slice STAYS in the default tier
-    "test_extra_entry_matches_oracle",
+    ("test_extra_parity", "test_extra_entry_matches_oracle"),
     # single >200 s plan walks / brute-force one-offs
-    "test_no_accidental_cartesian_products",
-    "test_cms_never_undercounts",
-    "test_write_models_fact_partition_pruning",
+    ("test_asof_and_plans", "test_no_accidental_cartesian_products"),
+    ("test_asof_and_plans", "test_cms_never_undercounts"),
+    ("test_models", "test_write_models_fact_partition_pruning"),
 }
 
 
@@ -64,5 +66,5 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         module = item.module.__name__.rsplit(".", 1)[-1]
         test_name = item.name.split("[", 1)[0]
-        if module in _SLOW_MODULES or test_name in _SLOW_TESTS:
+        if module in _SLOW_MODULES or (module, test_name) in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)

@@ -650,7 +650,8 @@ def test_dedup_clusters_distributed_above_gate(spark):
     (nodes 10g..10g+4, edges (v, v+1)) = 240 k edges > SMALL_GRAPH_EDGES.
     Chains have diameter 4 — the worst shallow-dup-cluster shape for a
     1-hop-per-round propagation — so this also pins multi-round
-    convergence, not just the 1-round star case."""
+    convergence, not just the 1-round star case, and that the rounds'
+    checkpointed label vectors are released as the loop goes."""
     n_groups = 60_000
     groups = F.floor(F.col("id") / 4)
     pairs = (
@@ -661,7 +662,12 @@ def test_dedup_clusters_distributed_above_gate(spark):
         )
     )
     assert pairs.count() == 240_000 > dedup.SMALL_GRAPH_EDGES
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
     out = dedup._min_label_components(pairs)
+    # each of the ≥5 rounds checkpoints its labels; only the returned
+    # frame's checkpoint may stay behind
+    assert persisted().size() - before <= 1
     # every node labeled with its chain's min id, every chain size 5
     bad = out.filter(
         (F.col("cluster_id") != (F.floor(F.col("doc_id") / 10) * 10))

@@ -6,13 +6,19 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from spotify_tracks_spark.functions.time_utils import epoch_seconds
 from spotify_tracks_spark.operators import events as batch_events
 from spotify_tracks_spark.operators import similarity
 from spotify_tracks_spark.sources.tables import read_table
-from spotify_tracks_spark.streaming import stream_events_windowed, stream_sessionize
+from spotify_tracks_spark.streaming import (
+    incremental,
+    sketch,
+    stream_events_windowed,
+    stream_sessionize,
+)
 
 from .conftest import SF_SMOKE
 
@@ -92,29 +98,6 @@ def test_stream_sessionize_state_carries_across_batches(spark):
     want_set = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
         for r in closed_batch.collect()
-    }
-    assert got_set == want_set
-
-
-def test_stream_sessionize_tws_matches_batch(spark):
-    """transformWithStateInPandas sessionization (flush-tail drain) equals
-    the batch window-function sessionization.  Requires protobuf (the TWS
-    python↔JVM state protocol) — skipped where it isn't installed."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState state protocol needs protobuf"
-    )
-    from spotify_tracks_spark.streaming import stream_sessionize_tws
-
-    got = stream_sessionize_tws(
-        spark, SF_SMOKE, checkpoint_dir=tempfile.mkdtemp(prefix="tws_ckpt_")
-    )
-    batch = batch_events.events_sessionize(spark, SF_SMOKE)
-    got_set = {(r.user_id, r.session_start, r.session_end, r.n_events) for r in got.collect()}
-    want_set = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in batch.select("user_id", "session_start", "session_end", "n_events").collect()
     }
     assert got_set == want_set
 
@@ -486,3 +469,29 @@ def test_stream_sequential_ab_matches_batch_and_replays(spark, tmp_path):
     resumed = stream_events_sequential_ab(spark, SF_SMOKE, base=base)
     again = sorted(tuple(r[c] for c in cols) for r in resumed.collect())
     assert again == got_rows
+
+
+_FOLDS = [
+    sketch.stream_events_cms,
+    sketch.stream_events_kmv,
+    sketch.stream_events_hll,
+    sketch.stream_events_bloom,
+    sketch.stream_events_quantile_hist,
+    sketch.stream_events_sequential_ab,
+    sketch.stream_docs_heavy_terms,
+    incremental.stream_dim_track_incremental,
+    incremental.stream_rpt_track_counts_incremental,
+    incremental.stream_rpt_artist_counts_incremental,
+    incremental.stream_rpt_discovery_rate_incremental,
+]
+
+
+@pytest.mark.parametrize("fold", _FOLDS, ids=lambda f: f.__name__)
+def test_fold_leaves_no_persisted_rdd(spark, fold):
+    """Every snapshot fold releases what it persists: its per-batch
+    hand-off, and the folds' own (the MG compress sums).  A fold that
+    leaks grows the executor cache on every call."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    assert fold(spark, SF_SMOKE).collect()
+    assert persisted().size() == before
