@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import portable_hash60
 from ..sources.tables import read_table
-from ..functions.memo import evict_stale_sessions
+from ..functions import memo
 
 N_HASHES = 16
 N_BANDS = 4
@@ -132,41 +132,15 @@ def _with_shingle_hash_sets(docs: DataFrame) -> DataFrame:
     )
 
 
-# Session-memoized shared dedup artifacts (the graph-module discipline,
-# operators/graph.py:copurchase_edges).  Six dedup queries start from the
-# SAME (doc_id, hs) shingle-hash table over the full documents corpus,
-# and three (clusters, clusters_star, recall_eval) additionally re-run
-# the whole minhash-LSH band join for the SAME verified pair set.  At
-# 100 TB both are WRITTEN tables — the signature store every dedup job
-# scans and the materialized candidate-pair table the clustering /
-# evaluation jobs consume; ``localCheckpoint`` is the single-session
-# equivalent.  After clear_dedup_memo() the first consumer re-pays the
-# build and every later consumer reads it warm.
-_SHINGLE_MEMO: dict[tuple[int, str], DataFrame] = {}
-_MINHASH_MEMO: dict[tuple[int, str, float], DataFrame] = {}
+# Six dedup queries start from the SAME (doc_id, hs) shingle-hash table
+# over the full documents corpus, and the clusters / recall-eval /
+# edit-distance consumers read the SAME verified pair set of each fuzzy
+# family.  Those full-corpus artifacts are session-cached
+# (``functions/memo.py``) as localCheckpointed frames; at 100 TB each is
+# a written table that every dedup job scans.
 
-# Session-memoized verified-pair tables for the OTHER fuzzy families
-# (round-11 optimization), the _MINHASH_MEMO discipline extended: the
-# simhash / blocked-ngram / edit-distance pair sets are each consumed
-# by the family's own registered query AND by ``dedup_recall_eval``'s
-# pooled evaluation, and before this memo each consumer re-ran the
-# candidate-generation + verify plan from scratch.  All three results
-# are pair-grain (bounded), checkpointed once per (session, dataset,
-# params); at 100 TB each is the written pair table an evaluation
-# reads back.  clear_dedup_memo() releases them with the rest.
-_SIMHASH_MEMO: dict[tuple[int, str, int], DataFrame] = {}
-_NGRAM_MEMO: dict[tuple[int, str, float, int | None], DataFrame] = {}
-_EDIT_MEMO: dict[tuple[int, str, int, int, int, int], DataFrame] = {}
-
-
-def clear_dedup_memo() -> None:
-    """Release the session-memoized shingle / pair-table artifacts
-    (bench-harness hook, mirroring graph.clear_copurchase_memo)."""
-    _SHINGLE_MEMO.clear()
-    _MINHASH_MEMO.clear()
-    _SIMHASH_MEMO.clear()
-    _NGRAM_MEMO.clear()
-    _EDIT_MEMO.clear()
+# perfbench/common.py calls this name; it clears the whole session cache
+clear_dedup_memo = memo.clear
 
 
 def shingle_hash_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,15 +148,14 @@ def shingle_hash_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, dataset) and shared by every full-corpus dedup operator.
     Callers must treat it as immutable shared state (derive, never
     unpersist)."""
-    key = (id(spark), sf_dir)
-    if key in _SHINGLE_MEMO:
-        return _SHINGLE_MEMO[key]
-    evict_stale_sessions(_SHINGLE_MEMO, id(spark))
-    sh = _with_shingle_hash_sets(
-        read_table(spark, sf_dir, "documents", spread=True)
-    ).localCheckpoint(eager=True)
-    _SHINGLE_MEMO[key] = sh
-    return sh
+    return memo.cached(
+        spark,
+        sf_dir,
+        ("shingles",),
+        lambda: _with_shingle_hash_sets(
+            read_table(spark, sf_dir, "documents", spread=True)
+        ).localCheckpoint(eager=True),
+    )
 
 
 def dedup_ngram_jaccard(
@@ -215,32 +188,25 @@ def dedup_ngram_jaccard(
     slices) pass an already-persisted (doc_id, hs) frame so the
     shingle/md5 pass runs once per evaluation, not once per family.
 
-    The full-corpus default path is SESSION-MEMOIZED (checkpointed
-    verified-pair table per (session, dataset, threshold, cap)): the
-    registered capped query and ``dedup_recall_eval``'s ngram family
-    consume the identical pair set, and previously each re-ran the
-    blocked self-join — at 100 TB the pair table is written once and
-    scanned by every downstream job (the ``_MINHASH_MEMO``
-    discipline)."""
+    The full-corpus default path is session-cached per (threshold, cap)
+    (``functions/memo.py``): the registered capped query and
+    ``dedup_recall_eval``'s ngram family consume the identical pair
+    set."""
     if hash_sets is None:
-        key = (id(spark), sf_dir, threshold, max_block)
-        memo = _NGRAM_MEMO.get(key)
-        if memo is not None:
-            return memo
-        evict_stale_sessions(_NGRAM_MEMO, id(spark))
-        pinned: list[DataFrame] = []
-        try:
-            # pair-grain output is tiny; pin it, then release the blocked
-            # projection cache backing the self-join (pre-memo it leaked
-            # one persisted frame per call)
-            out = _ngram_jaccard_pairs(
-                threshold, max_block, shingle_hash_sets(spark, sf_dir), pinned
-            ).localCheckpoint(eager=True)
-        finally:
-            for df in pinned:
-                df.unpersist()
-        _NGRAM_MEMO[key] = out
-        return out
+
+        def build() -> DataFrame:
+            pinned: list[DataFrame] = []
+            try:
+                # pair-grain output is tiny; pin it, then release the
+                # blocked projection cache backing the self-join
+                return _ngram_jaccard_pairs(
+                    threshold, max_block, shingle_hash_sets(spark, sf_dir), pinned
+                ).localCheckpoint(eager=True)
+            finally:
+                for df in pinned:
+                    df.unpersist()
+
+        return memo.cached(spark, sf_dir, ("ngram", threshold, max_block), build)
     return _ngram_jaccard_pairs(threshold, max_block, hash_sets, [])
 
 
@@ -384,31 +350,23 @@ def dedup_minhash_lsh(
     j≈0.5.  Output: (doc_a, doc_b, est_jaccard, jaccard) for verified
     pairs ≥ threshold.  ``hash_sets`` as in ``dedup_ngram_jaccard``.
 
-    The full-corpus default path is SESSION-MEMOIZED (checkpointed
-    verified-pair table per (session, dataset, threshold)): clusters,
-    clusters_star, edit-distance and the recall eval all consume this
-    exact pair set, and through round 7 each re-ran the whole
-    signature+band join — at 100 TB the pair table is written once and
-    scanned by every downstream job."""
+    The full-corpus default path is session-cached per threshold
+    (``functions/memo.py``): clusters, clusters_star, edit-distance and
+    the recall eval all consume this exact pair set instead of each
+    re-running the whole signature+band join."""
     if hash_sets is None:
-        key = (id(spark), sf_dir, threshold)
-        memo = _MINHASH_MEMO.get(key)
-        if memo is not None:
-            return memo
-        evict_stale_sessions(_MINHASH_MEMO, id(spark))
-        sh = shingle_hash_sets(spark, sf_dir)
-        prep = _with_signatures(sh).persist()
-        prep.count()
-        try:
-            # pair-grain output is tiny; pin it and release the signature
-            # cache (the shared sh stays memoized for the session)
-            out = _minhash_verify(prep, threshold).localCheckpoint(
-                eager=True
-            )
-        finally:
-            prep.unpersist()
-        _MINHASH_MEMO[key] = out
-        return out
+
+        def build() -> DataFrame:
+            prep = _with_signatures(shingle_hash_sets(spark, sf_dir)).persist()
+            prep.count()
+            try:
+                # pair-grain output is tiny; pin it and release the
+                # signature cache
+                return _minhash_verify(prep, threshold).localCheckpoint(eager=True)
+            finally:
+                prep.unpersist()
+
+        return memo.cached(spark, sf_dir, ("minhash", threshold), build)
     # caller-supplied hash sets (fixture corpora, incremental slices):
     # the original lazy path
     prep = _with_signatures(hash_sets).persist()
@@ -537,16 +495,16 @@ def dedup_simhash(spark: SparkSession, sf_dir: str, max_hamming: int = SIMHASH_M
     2^width per chunk index; at corpus scale pick the radius the product
     (docs / 2^width)² per bucket affords, or tighten ``max_hamming``.
 
-    The pair-grain result is SESSION-MEMOIZED per (session, dataset,
-    radius) — the registered query and ``dedup_recall_eval``'s simhash
-    family consume the identical pair set (the ``_MINHASH_MEMO``
-    discipline; at 100 TB this is the written pair table every
-    evaluation reads back)."""
-    key = (id(spark), sf_dir, max_hamming)
-    memo = _SIMHASH_MEMO.get(key)
-    if memo is not None:
-        return memo
-    evict_stale_sessions(_SIMHASH_MEMO, id(spark))
+    The pair-grain result is session-cached per radius
+    (``functions/memo.py``): the registered query and
+    ``dedup_recall_eval``'s simhash family consume the identical pair
+    set."""
+    return memo.cached(
+        spark, sf_dir, ("simhash", max_hamming), lambda: _simhash_pairs(spark, sf_dir, max_hamming)
+    )
+
+
+def _simhash_pairs(spark: SparkSession, sf_dir: str, max_hamming: int) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents", spread=True)
     fps = simhash_fingerprints(docs).persist()
     fps.count()  # materialize before the self-join (see dedup_ngram_jaccard)
@@ -579,16 +537,14 @@ def dedup_simhash(spark: SparkSession, sf_dir: str, max_hamming: int = SIMHASH_M
     hamming = F.bit_count(F.expr("simhash_a ^ simhash_b"))
     try:
         # pin the pair-grain result, then release the fingerprint cache
-        # backing the chunk self-join (pre-memo it leaked per call)
-        out = (
+        # backing the chunk self-join
+        return (
             pairs.select("doc_a", "doc_b", hamming.cast("long").alias("hamming"))
             .filter(F.col("hamming") <= max_hamming)
             .localCheckpoint(eager=True)
         )
     finally:
         fps.unpersist()
-    _SIMHASH_MEMO[key] = out
-    return out
 
 
 SMALL_GRAPH_EDGES = 200_000
@@ -1202,16 +1158,31 @@ def dedup_edit_distance(
 
     Output: (doc_a, doc_b, edit_distance), candidates that pass.  The
     full-corpus default path (no caller-supplied ``lsh_pairs``) is
-    SESSION-MEMOIZED per (session, dataset, params) — the registered
+    session-cached per params (``functions/memo.py``): the registered
     query and ``dedup_recall_eval``'s edit family consume the identical
-    pair set (the ``_MINHASH_MEMO`` discipline)."""
-    memo_key = None
+    pair set."""
+    params = (prefix_len, max_edits, block_len, max_block)
     if lsh_pairs is None:
-        memo_key = (id(spark), sf_dir, prefix_len, max_edits, block_len, max_block)
-        memo = _EDIT_MEMO.get(memo_key)
-        if memo is not None:
-            return memo
-        evict_stale_sessions(_EDIT_MEMO, id(spark))
+        return memo.cached(
+            spark,
+            sf_dir,
+            ("edit", *params),
+            lambda: _edit_distance_pairs(
+                spark, sf_dir, *params, dedup_minhash_lsh(spark, sf_dir)
+            ),
+        )
+    return _edit_distance_pairs(spark, sf_dir, *params, lsh_pairs)
+
+
+def _edit_distance_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix_len: int,
+    max_edits: int,
+    block_len: int,
+    max_block: int,
+    lsh_pairs: DataFrame,
+) -> DataFrame:
     keyed = read_table(spark, sf_dir, "documents", spread=True).select(
         "doc_id",
         F.substring(_norm(F.col("text")), 1, prefix_len).alias("prefix"),
@@ -1237,8 +1208,6 @@ def dedup_edit_distance(
     # pass it in — re-running the full minhash pipeline for candidates
     # would double the dominant cost of a composed evaluation
     try:
-        if lsh_pairs is None:
-            lsh_pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
         cands = (
             lsh_pairs.select("doc_a", "doc_b")
             .unionByName(block_pairs("head"))
@@ -1257,10 +1226,7 @@ def dedup_edit_distance(
         # pin the (small, pair-grain) result so the cache backing its four
         # self-join references can be released — repeated calls in one
         # session otherwise accumulate executor storage
-        out = out.localCheckpoint(eager=True)
-        if memo_key is not None:
-            _EDIT_MEMO[memo_key] = out
-        return out
+        return out.localCheckpoint(eager=True)
     finally:
         keyed.unpersist()
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..sources.tables import read_table
-from ..functions.memo import evict_stale_sessions
+from ..functions import memo
 
 # drop items from abnormally large orders before pairing: a W-item order
 # contributes W·(W−1)/2 edges (same quadratic-block hazard as the dedup
@@ -99,38 +99,17 @@ def _edge_bloom_predicate(closing: DataFrame, n_edges: int):
         return None
 
 
-# Session-memoized shared edge artifact.  All five graph operators
-# (pagerank, triangles, k-core, communities, substitutes) consume the
-# SAME deduped co-purchase edge set — lineitem's per-order distinct
-# item pairs minus oversized orders — and through round 7 each rebuilt
-# it independently (~12.8 s × 5 at sf0.1: the order-pair self-join +
-# two distincts dominate every graph query).  The build is now a single
-# memoized ``localCheckpoint``ed artifact per (session, dataset, cap),
-# the same fixture-memoization discipline pipeline.py applies to the
-# staging model that six marts read.  At 100 TB the equivalent is a
-# written, bucketed edge table that every graph job scans — you would
-# never pay the order-pair shuffle once per algorithm.
+# Session-cached shared artifacts (``functions/memo.py``).  All five
+# graph operators (pagerank, triangles, k-core, communities, substitutes)
+# consume the SAME deduped co-purchase edge set — lineitem's per-order
+# distinct item pairs minus oversized orders — and the order-pair build
+# dominates every graph query, so it is built once per (session, dataset
+# version, cap) as a ``localCheckpoint``ed frame, like the staging model
+# six marts read.  The degree table, the triangle counts and the LPA
+# labeling each feed two or more operators and are cached the same way.
+# At 100 TB each is a written, bucketed table that every graph job scans.
 # ``localCheckpoint(eager=True)`` both materializes the blocks and
-# truncates lineage, so every consumer starts from a flat scan instead
-# of re-planning the self-join.
-_EDGE_MEMO: dict[tuple[int, str, int], DataFrame] = {}
-
-# Derived per-node degree table (node, deg) over the symmetrized edge
-# set — pagerank, triangles and substitutes each need it; memoized on
-# top of the shared edges for the same reason.
-_DEG_MEMO: dict[tuple[int, str, int], DataFrame] = {}
-
-# Hub-cap observability, once per (session, op, dataset, cap): the wedge
-# operators (substitutes, adamic_adar) drop high-degree CENTERS from pair
-# generation and report how many.  Counting the hubs is a Spark action, so
-# doing it per-call put a driver-blocking job on the hot path purely for a
-# warning (round-9 verdict item 5).  The count now runs at most once per
-# key and the result is memoized; repeat invocations emit zero extra jobs
-# and zero warning noise.  Deliberately NOT cleared by
-# ``clear_copurchase_memo``: the warning is observability, not a
-# bench-attributed build artifact, so cold-cache bench passes stay free of
-# the extra job too.  Stale-session entries are evicted like the memos.
-_HUB_WARNED: dict[tuple[int, str, str, int], int] = {}
+# truncates lineage, so every consumer starts from a flat scan.
 
 
 def _warn_hub_drop(
@@ -138,41 +117,28 @@ def _warn_hub_drop(
 ) -> None:
     """Warn (once per session/op/dataset/cap) how many hub centers the
     degree cap excludes from wedge-pair generation.  ``deg`` must carry
-    the degree column as ``deg``."""
+    the degree column as ``deg``.  Counting the hubs is a Spark action,
+    so the count is session-cached: a repeat call schedules no job and
+    warns no more."""
     import warnings
 
-    key = (id(spark), op, sf_dir, max_center_deg)
-    if key in _HUB_WARNED:
-        return
-    evict_stale_sessions(_HUB_WARNED, id(spark))
-    n_dropped = deg.filter(F.col("deg") > max_center_deg).count()
-    _HUB_WARNED[key] = n_dropped
-    if n_dropped:
-        warnings.warn(
-            f"{op}: {n_dropped} hub centers above deg {max_center_deg} "
-            "excluded from pair generation",
-            stacklevel=3,
-        )
+    def count_and_warn() -> int:
+        n_dropped = deg.filter(F.col("deg") > max_center_deg).count()
+        if n_dropped:
+            # blame the operator's caller (this → cached → _warn_hub_drop
+            # → operator → caller)
+            warnings.warn(
+                f"{op}: {n_dropped} hub centers above deg {max_center_deg} "
+                "excluded from pair generation",
+                stacklevel=5,
+            )
+        return n_dropped
+
+    memo.cached(spark, sf_dir, ("hub_drop", op, max_center_deg), count_and_warn)
 
 
-def clear_copurchase_memo() -> None:
-    """Release the session-memoized graph artifacts: the shared edge set
-    (``_EDGE_MEMO``), the per-node degree table (``_DEG_MEMO``), the
-    per-node triangle counts (``_TRI_MEMO``, shared by
-    ``parts_copurchase_triangles`` and ``parts_copurchase_clustering_coef``)
-    and the LPA community labeling (``_LPA_MEMO``, shared by
-    ``parts_copurchase_communities`` and ``parts_copurchase_modularity``).
-
-    Bench-harness hook: each cold-cache pass calls this next to
-    ``pipeline._MEMO.clear()`` so the first graph query per pass re-pays
-    the shared build exactly once — the same attribution discipline the
-    model chain uses for q1's staging build.  Dropping the references
-    lets Spark's ContextCleaner reclaim the checkpointed blocks.
-    (``_HUB_WARNED`` is intentionally left alone — see its comment.)"""
-    _EDGE_MEMO.clear()
-    _DEG_MEMO.clear()
-    _TRI_MEMO.clear()
-    _LPA_MEMO.clear()
+# perfbench/common.py calls this name; it clears the whole session cache
+clear_copurchase_memo = memo.clear
 
 
 def copurchase_edges(
@@ -206,10 +172,15 @@ def copurchase_edges(
     removal is intent-clarifying simplification, not a shuffle win;
     output is row-identical (same pinned test) because the size gate reads
     |collect_set| = |distinct items| either way."""
-    key = (id(spark), sf_dir, max_order_items)
-    if key in _EDGE_MEMO:
-        return _EDGE_MEMO[key]
-    evict_stale_sessions(_EDGE_MEMO, id(spark))
+    return memo.cached(
+        spark,
+        sf_dir,
+        ("edges", max_order_items),
+        lambda: _copurchase_edges_build(spark, sf_dir, max_order_items),
+    )
+
+
+def _copurchase_edges_build(spark: SparkSession, sf_dir: str, max_order_items: int) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem", spread=True).select(
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
     )
@@ -231,9 +202,7 @@ def copurchase_edges(
             )
         ).alias("e")
     )
-    edges = pairs.select("e.x", "e.y").distinct().localCheckpoint(eager=True)
-    _EDGE_MEMO[key] = edges
-    return edges
+    return pairs.select("e.x", "e.y").distinct().localCheckpoint(eager=True)
 
 
 def _copurchase_edges_join_form(
@@ -280,18 +249,15 @@ def copurchase_degrees(
     """Per-node degree table (node, deg) over the symmetrized edges,
     memoized like the edge set (|V| rows; doubles as the node table).
     Same immutability contract as ``copurchase_edges``."""
-    key = (id(spark), sf_dir, max_order_items)
-    if key in _DEG_MEMO:
-        return _DEG_MEMO[key]
-    evict_stale_sessions(_DEG_MEMO, id(spark))
-    deg = (
-        copurchase_sym(spark, sf_dir, max_order_items)
+    return memo.cached(
+        spark,
+        sf_dir,
+        ("degrees", max_order_items),
+        lambda: copurchase_sym(spark, sf_dir, max_order_items)
         .groupBy(F.col("src").alias("node"))
         .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True),
     )
-    _DEG_MEMO[key] = deg
-    return deg
 
 
 # power-iteration depth for the PageRank report: enough to separate the
@@ -372,14 +338,6 @@ def parts_copurchase_pagerank(
     return out
 
 
-# Per-node triangle counts, memoized like the edge/degree artifacts:
-# parts_copurchase_triangles and parts_copurchase_clustering_coef read
-# the SAME wedge-join output — the most expensive plan in the graph
-# family should run once per (session, dataset, params), not once per
-# consumer.  Whichever family member runs first pays the build.
-_TRI_MEMO: dict[tuple[int, str, int, int], DataFrame] = {}
-
-
 def parts_copurchase_triangles(
     spark: SparkSession,
     sf_dir: str,
@@ -410,13 +368,21 @@ def parts_copurchase_triangles(
     equal on the planted-graph fixture.
 
     Output: (part_id, n_triangles), parts in ≥1 triangle.  The counts
-    are a session-memoized localCheckpointed artifact shared with the
+    are a session-cached localCheckpointed artifact shared with the
     clustering-coefficient report (same immutability contract as the
-    edge/degree artifacts)."""
-    key = (id(spark), sf_dir, max_order_items, broadcast_max_edges)
-    if key in _TRI_MEMO:
-        return _TRI_MEMO[key]
-    evict_stale_sessions(_TRI_MEMO, id(spark))
+    edge/degree artifacts): the wedge join, the most expensive plan in
+    the family, runs once, paid by whichever consumer runs first."""
+    return memo.cached(
+        spark,
+        sf_dir,
+        ("triangles", max_order_items, broadcast_max_edges),
+        lambda: _triangle_counts(spark, sf_dir, max_order_items, broadcast_max_edges),
+    )
+
+
+def _triangle_counts(
+    spark: SparkSession, sf_dir: str, max_order_items: int, broadcast_max_edges: int
+) -> DataFrame:
     lazy, oriented = _build_triangle_counts(
         spark, sf_dir, max_order_items, broadcast_max_edges
     )
@@ -424,7 +390,6 @@ def parts_copurchase_triangles(
     # the |V|-row counts are pinned; the oriented-edge layout was only
     # needed to build them — release it (cache-release discipline)
     oriented.unpersist()
-    _TRI_MEMO[key] = out
     return out
 
 
@@ -616,18 +581,6 @@ def parts_copurchase_kcore(
 # oracle's unrolled CTE chain readable.
 LPA_ROUNDS = 4
 
-# Session-memoized LPA labeling, the edge/degree/triangle discipline
-# applied to the second-most-expensive build in the family (round-11
-# optimization): ``parts_copurchase_modularity`` consumes the SAME
-# fixed-round labeling ``parts_copurchase_communities`` emits, and
-# before this memo each ran the full 4-round propagation independently
-# (~9 s × 2 at sf0.1 — the LPA loop dominates both queries).  At 100 TB
-# the equivalent is a written community-assignment table every
-# modularity/report job scans instead of re-propagating labels.
-# clear_copurchase_memo() releases it with the edge/degree artifacts.
-_LPA_MEMO: dict[tuple[int, str, int, int], DataFrame] = {}
-
-
 def parts_copurchase_communities(
     spark: SparkSession,
     sf_dir: str,
@@ -663,13 +616,21 @@ def parts_copurchase_communities(
     early exit.
 
     Output: (part_id, community, community_size), one row per node.
-    The |V|-row report is a session-memoized localCheckpointed artifact
+    The |V|-row report is a session-cached localCheckpointed artifact
     shared with the modularity scorer (same immutability contract as
-    the edge/degree/triangle artifacts)."""
-    memo_key = (id(spark), sf_dir, n_rounds, max_order_items)
-    if memo_key in _LPA_MEMO:
-        return _LPA_MEMO[memo_key]
-    evict_stale_sessions(_LPA_MEMO, id(spark))
+    the edge/degree/triangle artifacts): the 4-round propagation
+    dominates both queries, so it runs once."""
+    return memo.cached(
+        spark,
+        sf_dir,
+        ("lpa", n_rounds, max_order_items),
+        lambda: _lpa_communities(spark, sf_dir, n_rounds, max_order_items),
+    )
+
+
+def _lpa_communities(
+    spark: SparkSession, sf_dir: str, n_rounds: int, max_order_items: int
+) -> DataFrame:
     sym = copurchase_sym(spark, sf_dir, max_order_items)
     # hash-partition the pinned adjacency ON THE ROUND JOIN KEY (dst):
     # the cached layout then satisfies every round's join requirement,
@@ -711,7 +672,7 @@ def parts_copurchase_communities(
         # row-identical.
         labels = labels.localCheckpoint(eager=True)
         sizes = labels.groupBy("label").agg(F.count("*").alias("community_size"))
-        out = (
+        return (
             labels.join(F.broadcast(sizes), "label")
             .select(
                 F.col("node").alias("part_id"),
@@ -721,11 +682,9 @@ def parts_copurchase_communities(
             .localCheckpoint(eager=True)
         )
     finally:
-        # shared edge artifact stays memoized; only the query-local
+        # shared edge artifact stays cached; only the query-local
         # dst-partitioned adjacency layout is released
         adj.unpersist()
-    _LPA_MEMO[memo_key] = out
-    return out
 
 
 # Eigenvector-centrality power iteration: fixed depth, like PageRank —
@@ -999,10 +958,9 @@ def parts_copurchase_clustering_coef(
     bundled" from "hub of unrelated baskets" at a glance.
 
     Plan: a |V|-row left join of the SESSION-SHARED degree table against
-    the session-shared triangle counts (``_TRI_MEMO`` — the wedge join
-    runs once per session and is shared with
-    ``parts_copurchase_triangles``; bench's carrier tracker records who
-    pays it).  Nothing here touches an edge- or corpus-sized frame.
+    the session-cached triangle counts (the wedge join runs once per
+    session and is shared with ``parts_copurchase_triangles``).  Nothing
+    here touches an edge- or corpus-sized frame.
 
     Determinism: 2·tri and deg·(deg−1) are exact integers; the
     coefficient is one IEEE division — bit-identical cross-engine.

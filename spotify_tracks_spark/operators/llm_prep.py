@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from ..functions import memo
 from ..functions.hashing import portable_hash60
 from ..sources.tables import read_table
 
@@ -481,28 +482,21 @@ def corpus_language_balance(
 BPE_MERGES = 6
 
 
-# Session-memoized BPE artifacts (the graph/dedup shared-artifact
-# discipline): corpus_bpe_merges and corpus_bpe_encode each consumed an
-# independent run of the SAME merge loop — training the tokenizer twice
-# per session.  At 100 TB the learned tokenizer (merge table + word ->
-# token-count map) is a written artifact every encode job reads; here it
-# builds once per (session, dataset, n_merges) as two localCheckpointed
-# frames, so the first BPE query in a session carries the chain build.
-_BPE_MEMO: dict[tuple[int, str, int], tuple[DataFrame, DataFrame]] = {}
-
-
 def _bpe_artifacts(
     spark: SparkSession, sf_dir: str, n_merges: int
 ) -> tuple[DataFrame, DataFrame]:
-    """(merge table, word->token-count map), built once per (session,
-    dataset, n_merges).  Both frames are bounded by the vocabulary, not
-    the corpus; callers must treat them as immutable shared state."""
-    from ..functions.memo import evict_stale_sessions
+    """(merge table, word->token-count map), session-cached per n_merges
+    (``functions/memo.py``): corpus_bpe_merges and corpus_bpe_encode
+    read the SAME merge loop, so the tokenizer trains once.  At 100 TB
+    the learned tokenizer is a written artifact every encode job reads.
+    Both frames are bounded by the vocabulary, not the corpus; callers
+    must treat them as immutable shared state."""
+    return memo.cached(
+        spark, sf_dir, ("bpe", n_merges), lambda: _bpe_train(spark, sf_dir, n_merges)
+    )
 
-    key = (id(spark), sf_dir, n_merges)
-    if key in _BPE_MEMO:
-        return _BPE_MEMO[key]
-    evict_stale_sessions(_BPE_MEMO, id(spark))
+
+def _bpe_train(spark: SparkSession, sf_dir: str, n_merges: int) -> tuple[DataFrame, DataFrame]:
     rep, merges, final = _bpe_chain(spark, sf_dir, n_merges)
     try:
         out = merges[0]
@@ -517,7 +511,6 @@ def _bpe_artifacts(
         ).localCheckpoint(eager=True)
     finally:
         rep.unpersist()
-    _BPE_MEMO[key] = (merge_tbl, word_tok)
     return merge_tbl, word_tok
 
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..sources.tables import read_table
-from ..functions.memo import evict_stale_sessions
+from ..functions import memo
 
 SIG_DIMS = 8
 
@@ -83,46 +83,22 @@ def _queries_and_corpus(
     return emb, probes
 
 
-# Session-memoized exact top-k baseline (the graph/dedup shared-artifact
-# discipline): five operators — the two recall evals, the truncation
-# ablation, negative sampling and the kNN classifier eval — each re-ran
-# the full probe x corpus cosine scan for the SAME exact result.  The
-# output is |probes| x k rows (tiny), checkpointed once per parameter
-# set; at 100 TB the exact baseline is a written evaluation table
-# computed once per corpus snapshot.  clear_similarity_memo() frees it.
-_BRUTE_MEMO: dict[tuple[int, str, int, int, int], DataFrame] = {}
-
-# Session-memoized APPROXIMATE top-k lists (round-11 optimization), the
-# _BRUTE_MEMO discipline extended to the four index families: each
-# family's (query_id, neighbor_id, rank, cos/adc) list is ≤ probes×k
-# rows, yet before this memo the full corpus-scoring scan behind it ran
-# once per CONSUMER — the family's own registered query, the
-# ``ann_recall_eval_all`` five-family report, ``ann_recall_eval`` and
-# ``ann_topk_rrf_fusion`` each re-scored the corpus for identical lists.
-# At 100 TB the served index's result lists are exactly the artifact an
-# evaluation pipeline reads back rather than recomputes.  Keyed by every
-# semantic parameter; whichever consumer runs first pays the family's
-# build, and clear_similarity_memo() releases it.
-_TOPK_MEMO: dict[tuple, DataFrame] = {}
+# Session-cached top-k lists (``functions/memo.py``).  The exact baseline
+# feeds five operators (the two recall evals, the truncation ablation,
+# negative sampling and the kNN classifier eval), and each index family's
+# approximate list feeds its own query, the recall evals and the RRF
+# fusion.  Every list is ≤ probes×k rows, yet the corpus-scoring scan
+# behind it is the family's whole cost, so it is checkpointed once per
+# parameter set; at 100 TB these are the written evaluation tables an
+# evaluation pipeline reads back rather than recomputes.
+def _memo_topk(spark: SparkSession, sf_dir: str, key: tuple, build) -> DataFrame:
+    """The session-cached checkpointed top-k list for ``key``, built via
+    ``build()`` (a lazy-plan thunk) on first use."""
+    return memo.cached(spark, sf_dir, key, lambda: build().localCheckpoint(eager=True))
 
 
-def _memo_topk(spark: SparkSession, key: tuple, build) -> DataFrame:
-    """Return the memoized checkpointed top-k list for ``key``, building
-    it via ``build()`` (a lazy-plan thunk) on first use."""
-    memo = _TOPK_MEMO.get(key)
-    if memo is not None:
-        return memo
-    evict_stale_sessions(_TOPK_MEMO, id(spark))
-    out = build().localCheckpoint(eager=True)
-    _TOPK_MEMO[key] = out
-    return out
-
-
-def clear_similarity_memo() -> None:
-    """Release the memoized exact-top-k baseline and the approximate
-    per-family top-k lists (bench-harness hook)."""
-    _BRUTE_MEMO.clear()
-    _TOPK_MEMO.clear()
+# perfbench/common.py calls this name; it clears the whole session cache
+clear_similarity_memo = memo.clear
 
 
 def ann_topk_bruteforce(
@@ -134,18 +110,13 @@ def ann_topk_bruteforce(
 ) -> DataFrame:
     """Exact cosine top-k for probe vectors (vec_id % probe_mod == 0,
     capped at the ``max_probes`` lowest vec_ids — see ANN_MAX_PROBES).
-    Session-memoized per (dataset, k, probe_mod, max_probes) — see
-    _BRUTE_MEMO."""
-    key = (id(spark), sf_dir, k, probe_mod, max_probes)
-    memo = _BRUTE_MEMO.get(key)
-    if memo is not None:
-        return memo
-    evict_stale_sessions(_BRUTE_MEMO, id(spark))
-    out = _ann_topk_bruteforce_plan(
-        spark, sf_dir, k, probe_mod, max_probes
-    ).localCheckpoint(eager=True)
-    _BRUTE_MEMO[key] = out
-    return out
+    Session-cached per (k, probe_mod, max_probes)."""
+    return _memo_topk(
+        spark,
+        sf_dir,
+        ("brute", k, probe_mod, max_probes),
+        lambda: _ann_topk_bruteforce_plan(spark, sf_dir, k, probe_mod, max_probes),
+    )
 
 
 # Cap-binding demonstration parameters: probe_mod=2 makes ~half the
@@ -217,10 +188,11 @@ def ann_topk_lsh(
 
     Recall < 1 by design (bucket boundaries); the oracle applies the same
     bucketing, so results still hash-match exactly.  The probes×k list
-    is session-memoized (see _TOPK_MEMO)."""
+    is session-cached."""
     return _memo_topk(
         spark,
-        (id(spark), "lsh", sf_dir, k, probe_mod, dims),
+        sf_dir,
+        ("lsh", k, probe_mod, dims),
         lambda: _ann_topk_lsh_plan(spark, sf_dir, k, probe_mod, dims),
     )
 
@@ -319,10 +291,11 @@ def ann_topk_ivf(
     formulation would shuffle corpus×k rows twice).  Then an equi-join on
     cell id replaces the corpus-wide cross product, then exact rerank
     within the cell.  Ties on cosine break to the lower centroid id in
-    both engines.  The probes×k list is session-memoized (_TOPK_MEMO)."""
+    both engines.  The probes×k list is session-cached."""
     return _memo_topk(
         spark,
-        (id(spark), "ivf", sf_dir, k, probe_mod, n_centroids, nprobe),
+        sf_dir,
+        ("ivf", k, probe_mod, n_centroids, nprobe),
         lambda: _ann_topk_ivf_plan(spark, sf_dir, k, probe_mod, n_centroids, nprobe),
     )
 
@@ -783,10 +756,11 @@ def ann_topk_pq(
     hash-matches exactly.  Ties break (distance asc, neighbor_id asc).
 
     Output: (query_id, neighbor_id, rank, adc) — adc rounded 6 dp.
-    The probes×k list is session-memoized (_TOPK_MEMO)."""
+    The probes×k list is session-cached."""
     return _memo_topk(
         spark,
-        (id(spark), "pq", sf_dir, k, probe_mod, n_sub, n_cent),
+        sf_dir,
+        ("pq", k, probe_mod, n_sub, n_cent),
         lambda: _ann_topk_pq_plan(spark, sf_dir, k, probe_mod, n_sub, n_cent),
     )
 
@@ -878,10 +852,11 @@ def ann_topk_ivfpq(
 
     Output: (query_id, neighbor_id, rank, adc) — per probe, the k
     nearest in-cell candidates by ADC (asc, ties to lower neighbor).
-    The probes×k list is session-memoized (_TOPK_MEMO)."""
+    The probes×k list is session-cached."""
     return _memo_topk(
         spark,
-        (id(spark), "ivfpq", sf_dir, k, probe_mod, n_centroids, nprobe, n_sub, n_cent),
+        sf_dir,
+        ("ivfpq", k, probe_mod, n_centroids, nprobe, n_sub, n_cent),
         lambda: _ann_topk_ivfpq_plan(
             spark, sf_dir, k, probe_mod, n_centroids, nprobe, n_sub, n_cent
         ),

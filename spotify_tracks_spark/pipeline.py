@@ -3,7 +3,7 @@
 Dependency order is the reference's 3-level DAG (SURVEY.md §2.11):
 stg → {dim_track, dim_artist, dim_album, fct} → {rpt_*}.  ``dbt build``
 materializes each model once and its tests and the publish copy read that
-table; here ``cache=True`` gives the same contract with ``.cache()``:
+table; here ``.cache()`` gives the same contract:
 
 - staging is read by six downstream models, so it is materialized once
   (a written table on a cluster) instead of recomputed per consumer
@@ -23,11 +23,10 @@ play date (partition pruning for the trailing-window reports), dims plain.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .config import RUN_DATE
+from .functions import memo
 from .sources.mapping import src_recent_tracks
 from .plans import (
     stg_recent_tracks,
@@ -41,32 +40,23 @@ from .plans import (
 )
 
 
-# Memoized model DAGs keyed by (session, sf_dir, run_date).  The reference
-# materializes staging as a table read by six downstream models (dbt table
-# materialization, SURVEY.md §4); our equivalent is building the shared DAG
-# once per session+dataset so the staging and mart caches are reused across
-# the driver's independent per-query calls instead of recomputed eight times.
-_MEMO: dict[tuple[int, str, str, bool], dict[str, DataFrame]] = {}
+# perfbench/common.py resets the engine with ``pipeline._MEMO.clear()``
+_MEMO = memo
 
 _CACHED_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
 
 def run_models(
-    spark: SparkSession, sf_dir: str, run_date: str = RUN_DATE, cache: bool = True
+    spark: SparkSession, sf_dir: str, run_date: str = RUN_DATE
 ) -> dict[str, DataFrame]:
-    key = (id(spark), sf_dir, run_date, cache)
-    if key in _MEMO:
-        return _MEMO[key]
-    models = _build_models(spark, sf_dir, run_date, cache)
-    _MEMO[key] = models
-    return models
+    """The model DAG over ``sf_dir``, built once per session and dataset
+    version (``functions/memo.py``)."""
+    return memo.cached(
+        spark, sf_dir, ("models", run_date), lambda: _build_models(spark, sf_dir, run_date)
+    )
 
 
-def _build_models(
-    spark: SparkSession, sf_dir: str, run_date: str, cache: bool
-) -> dict[str, DataFrame]:
-    if not cache:
-        return _model_dag(spark, sf_dir, run_date, lambda df: df)
+def _build_models(spark: SparkSession, sf_dir: str, run_date: str) -> dict[str, DataFrame]:
     # Spark 4.1 caches a plan with AQE's partition coalescing switched off
     # unless this is true, and a small cached mart is then written as one
     # file per shuffle partition.  The setting is read when ``.cache()``
@@ -75,32 +65,23 @@ def _build_models(
     prior = spark.conf.get(_CACHED_PARTITIONING)
     spark.conf.set(_CACHED_PARTITIONING, "true")
     try:
-        return _model_dag(spark, sf_dir, run_date, DataFrame.cache)
+        stg = stg_recent_tracks(src_recent_tracks(spark, sf_dir)).cache()
+        dt = dim_track(stg).cache()
+        da = dim_artist(stg).cache()
+        dal = dim_album(stg).cache()
+        fct = fct_played_track(stg)
+        return {
+            "stg_recent_tracks": stg,
+            "dim_track": dt,
+            "dim_artist": da,
+            "dim_album": dal,
+            "fct_played_track": fct,
+            "rpt_track_counts": rpt_track_counts(fct, dt, dal, run_date).cache(),
+            "rpt_artist_counts": rpt_artist_counts(fct, dt, run_date).cache(),
+            "rpt_discovery_rate": rpt_discovery_rate(fct, dt, da).cache(),
+        }
     finally:
         spark.conf.set(_CACHED_PARTITIONING, prior)
-
-
-def _model_dag(
-    spark: SparkSession,
-    sf_dir: str,
-    run_date: str,
-    materialize: Callable[[DataFrame], DataFrame],
-) -> dict[str, DataFrame]:
-    stg = materialize(stg_recent_tracks(src_recent_tracks(spark, sf_dir)))
-    dt = materialize(dim_track(stg))
-    da = materialize(dim_artist(stg))
-    dal = materialize(dim_album(stg))
-    fct = fct_played_track(stg)
-    return {
-        "stg_recent_tracks": stg,
-        "dim_track": dt,
-        "dim_artist": da,
-        "dim_album": dal,
-        "fct_played_track": fct,
-        "rpt_track_counts": materialize(rpt_track_counts(fct, dt, dal, run_date)),
-        "rpt_artist_counts": materialize(rpt_artist_counts(fct, dt, run_date)),
-        "rpt_discovery_rate": materialize(rpt_discovery_rate(fct, dt, da)),
-    }
 
 
 def write_models(models: dict[str, DataFrame], out_dir: str) -> dict[str, int]:

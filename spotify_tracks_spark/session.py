@@ -69,5 +69,9 @@ def get_spark(app_name: str = "spotify-tracks-spark", cpus: int | None = None) -
         # ONE machine-parseable JSON line, so keep the console clean
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # orderBy().limit(k) plans a top-k whose bounded queue is sized by
+        # k, so a caller-supplied k=10**9 kills the JVM with a heap OOM;
+        # above this k Spark sorts and then limits instead
+        .config("spark.sql.execution.topKSortFallbackThreshold", "100000")
         .getOrCreate()
     )

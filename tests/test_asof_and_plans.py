@@ -7,6 +7,7 @@ import datetime as dt
 import pytest
 
 import __spark_entry__ as entrymod
+from spotify_tracks_spark.functions import memo
 from spotify_tracks_spark.operators.asof import asof_join
 
 from .conftest import SF_SMOKE
@@ -171,12 +172,11 @@ def test_model_chain_joins_are_broadcast(spark):
     """Every dim join in the report models must stay a broadcast hash join
     (dims ≪ fact); a regression to sort-merge would shuffle the fact."""
     import __spark_entry__ as em
-    from spotify_tracks_spark import pipeline as _pl
 
     # fresh plans: a memoized chain DataFrame keeps the QueryExecution of
     # its FIRST run — executed under another test's context it may have
     # finalized differently, making this assertion order-sensitive
-    _pl._MEMO.clear()
+    memo.clear()
     spark.catalog.clearCache()
     qs = {**em.queries(), **em.extra_queries()}  # q7 rotated to extras in r4
     for name in ("q6_rpt_track_counts", "q7_rpt_artist_counts", "q8_rpt_discovery_rate"):

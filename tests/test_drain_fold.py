@@ -21,7 +21,11 @@ def test_drain_fold_equals_batch_and_replays_without_leaks(spark, tmp_path):
         [(i % 12, i) for i in range(48)], "key long, v long"
     ).write.parquet(f"{sf_dir}/planted.parquet")
     base = str(tmp_path / "fold")
-    persisted = spark.sparkContext._jsc.getPersistentRDDs
+
+    def persisted() -> set[int]:
+        # ids, not a count: ContextCleaner may free an earlier test's
+        # checkpoint mid-test, which a count would mistake for the fold's
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
     def drain():
         return _drain_fold(
@@ -37,14 +41,14 @@ def test_drain_fold_equals_batch_and_replays_without_leaks(spark, tmp_path):
             prefix="drain_test_",
         )
 
-    before = persisted().size()
+    before = persisted()
     got = sorted(map(tuple, drain().collect()))
-    assert persisted().size() == before
+    assert not persisted() - before
     assert got == [(k, 4) for k in range(12)]
     snaps = sorted(glob.glob(f"{base}/state_b*"))
     assert len(snaps) > 1, "the fold should span several micro-batches"
 
     again = sorted(map(tuple, drain().collect()))
-    assert persisted().size() == before
+    assert not persisted() - before
     assert again == got
     assert sorted(glob.glob(f"{base}/state_b*")) == snaps

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from datetime import datetime
 
+from spotify_tracks_spark.functions import memo
+
 
 def test_triangle_count_planted(spark, tmp_path):
     """Known graph: orders plant one triangle {A,B,C} (with a duplicated
@@ -291,6 +293,36 @@ def test_kcore_planted(spark, tmp_path):
     assert got == {p: 3 for p in cliq1 + cliq2}
 
 
+def test_kcore_multi_round_cascade(spark, tmp_path):
+    """A 5-clique with a 3-node tail 1-6-7-8: 13 edges over 8 nodes gives
+    k = (7*26)//(10*8) = 2.  Only the tail's end (8) starts below k, so
+    the peel cascades one node a round: 8, then 7 (its degree decremented
+    to 1 by round 1), then 6, which also decrements the surviving clique
+    node 1 from 5 to 4.  This pins the degree-decrement path: without it
+    the tail would survive and node 1 would keep degree 5."""
+    import pytest
+
+    from spotify_tracks_spark.operators.graph import parts_copurchase_kcore
+
+    clique = [1, 2, 3, 4, 5]
+    edges = [(a, b) for i, a in enumerate(clique) for b in clique[i + 1:]] + [
+        (1, 6), (6, 7), (7, 8)
+    ]
+    rows = [(o, p) for o, e in enumerate(edges, start=1) for p in e]
+    spark.createDataFrame(
+        rows, "l_orderkey long, l_partkey long"
+    ).coalesce(1).write.parquet(f"{tmp_path}/lineitem.parquet")
+
+    got = {
+        r.part_id: r.core_degree
+        for r in parts_copurchase_kcore(spark, str(tmp_path)).collect()
+    }
+    assert got == {p: 4 for p in clique}
+    # three peeling rounds plus the empty round that detects the fixpoint
+    with pytest.raises(ValueError, match="did not converge within 3 rounds"):
+        parts_copurchase_kcore(spark, str(tmp_path), max_rounds=3)
+
+
 def test_communities_two_cliques_with_bridge(spark, tmp_path):
     """Two 4-cliques joined by a single bridge edge: frequency-based
     LPA must keep them as TWO communities (each clique converges to its
@@ -396,19 +428,18 @@ def test_explode_edge_build_equals_join_form(spark):
     the same edge set, compared both ways at sf0.001."""
     from spotify_tracks_spark.operators.graph import (
         _copurchase_edges_join_form,
-        clear_copurchase_memo,
         copurchase_edges,
     )
     from tests.conftest import SF_SMOKE
 
-    clear_copurchase_memo()
+    memo.clear()
     sf = SF_SMOKE
     fast = copurchase_edges(spark, sf)
     ref = _copurchase_edges_join_form(spark, sf)
     assert fast.exceptAll(ref).count() == 0
     assert ref.exceptAll(fast).count() == 0
     assert fast.count() > 0
-    clear_copurchase_memo()
+    memo.clear()
 
 
 def test_edge_build_wide_order_gate_both_forms(spark, tmp_path):
@@ -422,7 +453,6 @@ def test_edge_build_wide_order_gate_both_forms(spark, tmp_path):
     produce identical edges and degree tables."""
     from spotify_tracks_spark.operators.graph import (
         _copurchase_edges_join_form,
-        clear_copurchase_memo,
         copurchase_degrees,
         copurchase_edges,
     )
@@ -436,7 +466,7 @@ def test_edge_build_wide_order_gate_both_forms(spark, tmp_path):
         rows, "l_orderkey long, l_partkey long"
     ).coalesce(1).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    clear_copurchase_memo()
+    memo.clear()
     try:
         d = str(tmp_path)
         fast = copurchase_edges(spark, d, max_order_items=4)
@@ -453,7 +483,7 @@ def test_edge_build_wide_order_gate_both_forms(spark, tmp_path):
         }
         assert deg == {1: 1, 6: 4, 7: 3, 8: 3, 9: 3}
     finally:
-        clear_copurchase_memo()
+        memo.clear()
 
 
 def test_adamic_adar_planted(spark, tmp_path):
@@ -539,8 +569,9 @@ def test_clustering_coef_planted(spark, tmp_path):
 
 def test_triangle_counts_are_session_memoized(spark, tmp_path):
     """The wedge join runs once per (session, dataset): a second
-    triangles call and the clustering-coefficient consumer must return
-    the SAME checkpointed frame, and clear_copurchase_memo releases it."""
+    triangles call (with no Spark job) and the clustering-coefficient
+    consumer must return the SAME checkpointed frame, and memo.clear()
+    releases it."""
     from spotify_tracks_spark.operators import graph as g
 
     rows = [(1, 1), (1, 2), (1, 3)]
@@ -548,15 +579,24 @@ def test_triangle_counts_are_session_memoized(spark, tmp_path):
         rows, "l_orderkey long, l_partkey long"
     ).coalesce(1).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    g.clear_copurchase_memo()
+    def triangle_entries():
+        return [e.value for (_, key), e in memo._ENTRIES.items() if key[0] == "triangles"]
+
+    memo.clear()
     t1 = g.parts_copurchase_triangles(spark, str(tmp_path))
-    t2 = g.parts_copurchase_triangles(spark, str(tmp_path))
+    sc = spark.sparkContext
+    sc.setJobGroup("tri-repeat", "repeat triangles plan build")
+    try:
+        t2 = g.parts_copurchase_triangles(spark, str(tmp_path))
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("tri-repeat") == []
     assert t1 is t2
-    assert len(g._TRI_MEMO) == 1
+    assert triangle_entries() == [t1]
     g.parts_copurchase_clustering_coef(spark, str(tmp_path))
-    assert len(g._TRI_MEMO) == 1  # consumer reused, didn't rebuild
-    g.clear_copurchase_memo()
-    assert not g._TRI_MEMO
+    assert triangle_entries() == [t1]  # consumer reused, didn't rebuild
+    memo.clear()
+    assert not triangle_entries()
 
 
 def test_hub_warning_once_and_jobless_repeat(spark, tmp_path):
@@ -566,7 +606,7 @@ def test_hub_warning_once_and_jobless_repeat(spark, tmp_path):
     the hot path purely for observability.  Pin (a) the warning fires
     exactly once across repeat invocations, and (b) a repeat invocation
     schedules ZERO Spark jobs at plan-construction time (everything it
-    needs — edges, degrees, hub count — is session-memoized)."""
+    needs — edges, degrees, hub count — is session-cached)."""
     import warnings as w
 
     from spotify_tracks_spark.operators import graph as g
@@ -582,8 +622,7 @@ def test_hub_warning_once_and_jobless_repeat(spark, tmp_path):
     )
     df.coalesce(1).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    g.clear_copurchase_memo()
-    g._HUB_WARNED.clear()
+    memo.clear()
     with w.catch_warnings(record=True) as caught:
         w.simplefilter("always")
         g.parts_copurchase_adamic_adar(
@@ -612,4 +651,4 @@ def test_hub_warning_once_and_jobless_repeat(spark, tmp_path):
         g.parts_copurchase_substitutes(spark, str(tmp_path), max_center_deg=3)
         subs = [c for c in caught if "parts_copurchase_substitutes" in str(c.message)]
         assert len(subs) == 1
-    g._HUB_WARNED.clear()
+    memo.clear()

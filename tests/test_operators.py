@@ -10,6 +10,7 @@ import time
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+from spotify_tracks_spark.functions import memo
 from spotify_tracks_spark.operators import dedup, similarity, text_analysis
 from spotify_tracks_spark.operators.idempotent_sink import append_if_absent, idempotent_union
 from spotify_tracks_spark.sinks.publish import (
@@ -913,13 +914,13 @@ def test_ann_probe_panel_is_capped(spark, tmp_path):
         "vec_id long, embedding array<float>",
     ).coalesce(1).write.parquet(f"{tmp_path}/embeddings.parquet")
 
-    similarity.clear_similarity_memo()
+    memo.clear()
     rows = similarity.ann_topk_bruteforce(
         spark, str(tmp_path), k=3, probe_mod=1, max_probes=cap
     ).collect()
     probed = {r.query_id for r in rows}
     assert probed == set(range(cap))  # lowest vec_ids, exactly cap many
-    similarity.clear_similarity_memo()
+    memo.clear()
 
 
 def test_ann_capped_registration_binds_on_fixture_data(spark):

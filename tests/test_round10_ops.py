@@ -9,13 +9,14 @@ from __future__ import annotations
 import math
 from datetime import datetime, timedelta
 
+from spotify_tracks_spark.functions import memo
+
 
 def test_jaccard_links_planted(spark, tmp_path):
     """4-cycle A-B-C-D: the two diagonals (A,C) and (B,D) are non-edges
     sharing BOTH neighbors — common=2, |union| = 2+2-2 = 2, J = 1.0 —
     and no other pair clears min_common."""
     from spotify_tracks_spark.operators.graph import (
-        clear_copurchase_memo,
         parts_copurchase_jaccard_links,
     )
 
@@ -25,14 +26,14 @@ def test_jaccard_links_planted(spark, tmp_path):
     spark.createDataFrame(
         rows, "l_orderkey long, l_partkey long"
     ).coalesce(1).write.parquet(f"{tmp_path}/lineitem.parquet")
-    clear_copurchase_memo()
+    memo.clear()
     try:
         got = {
             (r.part_a, r.part_b): (r.common, r.jaccard)
             for r in parts_copurchase_jaccard_links(spark, str(tmp_path)).collect()
         }
     finally:
-        clear_copurchase_memo()
+        memo.clear()
     assert got == {(A, C): (2, 1.0), (B, D): (2, 1.0)}
 
 
@@ -40,7 +41,6 @@ def test_degree_powerlaw_planted(spark, tmp_path):
     """Same 4-cycle: 4 nodes of degree 2, 4 edges — mean 2.0 and the
     closed-form CSN alpha 1 + n/Σln(d/0.5) = 1 + 4/(4·ln 4)."""
     from spotify_tracks_spark.operators.graph import (
-        clear_copurchase_memo,
         parts_copurchase_degree_powerlaw,
     )
 
@@ -49,11 +49,11 @@ def test_degree_powerlaw_planted(spark, tmp_path):
     spark.createDataFrame(
         rows, "l_orderkey long, l_partkey long"
     ).coalesce(1).write.parquet(f"{tmp_path}/lineitem.parquet")
-    clear_copurchase_memo()
+    memo.clear()
     try:
         row = parts_copurchase_degree_powerlaw(spark, str(tmp_path)).collect()[0]
     finally:
-        clear_copurchase_memo()
+        memo.clear()
     assert (row.n_nodes, row.n_edges, row.min_deg, row.max_deg) == (4, 4, 2, 2)
     assert row.mean_deg == 2.0
     assert abs(row.alpha_mle - (1.0 + 4 / (4 * math.log(4.0)))) < 1e-6
@@ -67,7 +67,6 @@ def test_ppr_planted_mass_and_reach(spark, tmp_path):
     outranks every leaf, and the disconnected pair gets NO rows —
     sparse-reach is the operator's whole point."""
     from spotify_tracks_spark.operators.graph import (
-        clear_copurchase_memo,
         parts_copurchase_ppr,
     )
 
@@ -77,14 +76,14 @@ def test_ppr_planted_mass_and_reach(spark, tmp_path):
     spark.createDataFrame(
         rows, "l_orderkey long, l_partkey long"
     ).coalesce(1).write.parquet(f"{tmp_path}/lineitem.parquet")
-    clear_copurchase_memo()
+    memo.clear()
     try:
         got = {
             r.part_id: r.rank
             for r in parts_copurchase_ppr(spark, str(tmp_path), n_seeds=2).collect()
         }
     finally:
-        clear_copurchase_memo()
+        memo.clear()
     assert 7 not in got and 8 not in got
     assert abs(sum(got.values()) - 1.0) < 1e-4  # 6-dp rounding x |V| slack
     assert got[1] == max(got.values())
@@ -221,7 +220,6 @@ def test_modularity_two_triangles(spark, tmp_path):
     """Two disjoint triangles: LPA keeps them apart, m=6, each community
     has m_c=3 intra edges and D_c=6 — Q_c = 3/6 - (6/12)^2 = 0.25."""
     from spotify_tracks_spark.operators.graph import (
-        clear_copurchase_memo,
         parts_copurchase_modularity,
     )
 
@@ -233,14 +231,14 @@ def test_modularity_two_triangles(spark, tmp_path):
     spark.createDataFrame(
         rows, "l_orderkey long, l_partkey long"
     ).coalesce(1).write.parquet(f"{tmp_path}/lineitem.parquet")
-    clear_copurchase_memo()
+    memo.clear()
     try:
         got = sorted(
             (r.n_nodes, r.m_intra, r.d_total, r.q_contrib)
             for r in parts_copurchase_modularity(spark, str(tmp_path)).collect()
         )
     finally:
-        clear_copurchase_memo()
+        memo.clear()
     assert got == [(3, 3, 6, 0.25), (3, 3, 6, 0.25)]
 
 
