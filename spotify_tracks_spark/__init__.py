@@ -9,8 +9,9 @@ multimodal plumbing) — as idiomatic Spark DataFrame plans:
 - ``functions/``  pure Column-expression helpers (surrogate keys, safe_divide,
                   timezone, portable hashing) — the expression kernel every
                   downstream hash-parity guarantee rests on.
-- ``sources/``    table registry over parquet, the REST/JSON ingest adapters,
-                  and the deterministic testdata→source-schema mapping.
+- ``sources/``    table registry over parquet, the driver-side REST fetch and
+                  its JSON flatten, and the deterministic testdata→source-schema
+                  mapping.
 - ``plans/``      the 8 reference models (staging → dims/fact → reports) as
                   DataFrame→DataFrame functions.
 - ``operators/``  idempotent sink, dedup family, ANN similarity, text analysis,

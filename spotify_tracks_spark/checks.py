@@ -39,26 +39,6 @@ def check_unique_not_null(df: DataFrame, table: str, column: str) -> list[CheckR
     ]
 
 
-def check_accepted_values(
-    df: DataFrame, table: str, column: str, values: tuple[str, ...]
-) -> CheckResult:
-    """dbt's ``accepted_values`` schema test: every non-null value of
-    ``column`` must be in ``values``.  The reference declares none, but
-    a dbt user switching engines brings the generic test suite — one
-    conditional-count aggregate, no collect of data rows."""
-    bad = df.agg(
-        F.sum(
-            F.when(
-                F.col(column).isNotNull() & ~F.col(column).isin(*values), 1
-            ).otherwise(0)
-        ).alias("n_bad")
-    ).collect()[0].n_bad
-    return CheckResult(
-        table, column, "accepted_values", bad == 0,
-        f"{bad} rows outside {sorted(values)}",
-    )
-
-
 def check_relationships(
     child: DataFrame, child_table: str, column: str,
     parent: DataFrame, parent_column: str,

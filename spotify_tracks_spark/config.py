@@ -24,6 +24,5 @@ TESTDATA_TABLES = (
     "lineitem", "events", "documents", "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # local[] width: the CPUs this process may run on unless set explicitly
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))

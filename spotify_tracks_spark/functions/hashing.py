@@ -10,9 +10,7 @@ overflow ambiguity.  This is the foundation for oracle-checkable minhash /
 simhash / LSH operators: both engines can compute identical signatures,
 so even the probabilistic dedup family hash-matches exactly.
 
-md5 is ~2-3× slower than xxhash64 but is the only hash both engines share;
-the operators take a ``portable=True`` flag to trade oracle parity for
-xxhash64 speed in production (the scale path).
+md5 is ~2-3× slower than xxhash64 but is the only hash both engines share.
 """
 
 from __future__ import annotations
@@ -30,8 +28,3 @@ def portable_hash60(col: Column, seed: int | None = None) -> Column:
     if seed is not None:
         s = F.concat(F.lit(f"{seed}|"), s)
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-
-
-def fast_hash64(col: Column, seed: int = 42) -> Column:
-    """Production-path 64-bit hash (xxhash64, JVM-native, no md5 cost)."""
-    return F.xxhash64(col, F.lit(seed))

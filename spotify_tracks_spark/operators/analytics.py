@@ -609,8 +609,7 @@ def events_user_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     five sufficient statistics (n, Σx, Σx², Σy, Σxy) come from a single
     groupBy, and slope = (nΣxy − ΣxΣy) / (nΣx² − (Σx)²) is the same IEEE
     expression in the oracle.  Degenerate users (all events one day) get
-    NULL slope/intercept via the nullif guard.  See
-    ``events_user_trend_pandas`` for the applyInPandas twin.
+    NULL slope/intercept via the nullif guard.
 
     Output: (user_id, n_events, slope, intercept)."""
     ev = read_table(spark, sf_dir, "events").select(
@@ -640,53 +639,6 @@ def events_user_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").alias("n_events"),
         slope.alias("slope"),
         intercept.alias("intercept"),
-    )
-
-
-def events_user_trend_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``applyInPandas`` twin of ``events_user_trend`` — the grouped-map
-    Pandas UDF surface (Arrow batch per key group), for per-key logic
-    that genuinely can't be written with built-ins (here it CAN, which is
-    why the built-in form is the driver-checked one and this twin is
-    pinned equal to it by pytest, not an oracle).
-
-    Same one-shuffle shape: Spark groups by user_id and hands each
-    group to the UDF as a pandas DataFrame; the UDF computes the same
-    five sufficient statistics with numpy.  At 100 TB this is the
-    pattern's cost model: one shuffle + Arrow (de)serialization per
-    group batch — ~10× the built-in form, which is the point of keeping
-    the built-in as the default."""
-    import pandas as pd
-
-    ev = read_table(spark, sf_dir, "events").select(
-        "user_id", F.to_date("ts").alias("day"), "value"
-    )
-    origin = ev.agg(F.min("day").alias("day0"))
-    with_x = ev.join(F.broadcast(origin)).select(
-        "user_id",
-        F.datediff("day", "day0").cast("long").alias("x"),
-        F.col("value").alias("y"),
-    )
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf["x"].to_numpy("float64")
-        y = pdf["y"].to_numpy("float64")
-        n = len(pdf)
-        sx, sxx, sy, sxy = x.sum(), (x * x).sum(), y.sum(), (x * y).sum()
-        den = n * sxx - sx * sx
-        slope = (n * sxy - sx * sy) / den if den != 0 else None
-        intercept = (sy - slope * sx) / n if slope is not None else None
-        return pd.DataFrame(
-            {
-                "user_id": [pdf["user_id"].iloc[0]],
-                "n_events": [n],
-                "slope": [slope],
-                "intercept": [intercept],
-            }
-        )
-
-    return with_x.groupBy("user_id").applyInPandas(
-        fit, "user_id long, n_events long, slope double, intercept double"
     )
 
 
@@ -727,48 +679,6 @@ def events_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("pid").alias("n_pseudonyms"),
         )
         .withColumn("suppress", F.col("group_size") < K_ANON)
-    )
-
-
-def events_user_trend_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``applyInArrow`` twin of ``events_user_trend`` — the zero-copy
-    grouped-map surface (pyarrow.Table in, pyarrow.Table out; no pandas
-    materialization between Arrow buffers and numpy).  Same contract as
-    the pandas twin: pytest-pinned equal to the built-in closed form;
-    the built-in stays the production default (grouped-map pays one
-    shuffle + Arrow serialization per key group either way — the Arrow
-    form just removes the pandas copy on top)."""
-    import pyarrow as pa
-
-    ev = read_table(spark, sf_dir, "events").select(
-        "user_id", F.to_date("ts").alias("day"), "value"
-    )
-    origin = ev.agg(F.min("day").alias("day0"))
-    with_x = ev.join(F.broadcast(origin)).select(
-        "user_id",
-        F.datediff("day", "day0").cast("long").alias("x"),
-        F.col("value").alias("y"),
-    )
-
-    def fit(tbl: pa.Table) -> pa.Table:
-        x = tbl.column("x").to_numpy().astype("float64")
-        y = tbl.column("y").to_numpy().astype("float64")
-        n = len(x)
-        sx, sxx, sy, sxy = x.sum(), (x * x).sum(), y.sum(), (x * y).sum()
-        den = n * sxx - sx * sx
-        slope = (n * sxy - sx * sy) / den if den != 0 else None
-        intercept = (sy - slope * sx) / n if slope is not None else None
-        return pa.table(
-            {
-                "user_id": pa.array([tbl.column("user_id")[0].as_py()], pa.int64()),
-                "n_events": pa.array([n], pa.int64()),
-                "slope": pa.array([slope], pa.float64()),
-                "intercept": pa.array([intercept], pa.float64()),
-            }
-        )
-
-    return with_x.groupBy("user_id").applyInArrow(
-        fit, "user_id long, n_events long, slope double, intercept double"
     )
 
 

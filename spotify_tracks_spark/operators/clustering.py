@@ -224,35 +224,6 @@ def kmeans_init_counts(
     )
 
 
-def kmeans_assign_pandas(
-    spark: SparkSession, sf_dir: str, k: int = K_CLUSTERS
-) -> DataFrame:
-    """mapInPandas twin of the assign step — the path for k×d beyond what
-    per-row HOF scoring can chew (the broadcast-relation plan is O(1) in
-    plan size, but its argmin still evaluates k fold-expressions per row;
-    at k=65k·d=1024 the vectorized kernel wins by orders of magnitude).
-
-    The centroid matrix ships as a REAL SparkContext broadcast variable
-    (block-manager torrent, one copy per executor, referenced per Arrow
-    batch — never per row), and assignment is one BLAS call per batch:
-    ‖x−c‖² = ‖x‖² + ‖c‖² − 2·x·cᵀ, row-wise argmin (NumPy argmin takes
-    the FIRST minimum — the same tie-to-lower-cluster contract as the
-    expression path).  BLAS pairwise summation reorders the IEEE adds,
-    so distances can differ from the fold-ordered expression path in the
-    last bits — assignments are pytest-pinned equal with a near-tie
-    tolerance, and this twin is deliberately NOT an oracle entry.
-
-    Output: (vec_id, cluster, sq_dist) for the iteration-0 centroids."""
-    emb = read_table(spark, sf_dir, "embeddings", spread=True).select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
-    )
-    seeds = emb.orderBy("vec_id").limit(k).collect()
-    centroids = [(i, r.e) for i, r in enumerate(seeds)]
-    return _assign_pandas(emb, centroids).select(
-        "vec_id", F.col("cluster").cast("long").alias("cluster"), "sq_dist"
-    )
-
-
 def kmeans_inertia(spark: SparkSession, sf_dir: str, n_iters: int) -> float:
     """Total within-cluster squared distance after n_iters (for tests)."""
     df = embedding_kmeans(spark, sf_dir, n_iters=n_iters)

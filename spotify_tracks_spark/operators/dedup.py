@@ -108,12 +108,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _with_shingle_sets(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        "doc_id", _char_shingles(_norm(F.col("text"))).alias("shingles")
-    )
-
-
 def _with_shingle_hash_sets(docs: DataFrame) -> DataFrame:
     """Distinct 60-bit shingle hashes per doc — the set the near-dup
     operators block and verify on.  Hashing the shingles once here and
@@ -299,12 +293,6 @@ def _with_signatures(sh: DataFrame) -> DataFrame:
     return sh.select("doc_id", "hs", vs.alias("vs")).select(
         "doc_id", "hs", sig.alias("sig")
     )
-
-
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """Per-doc minhash signature as an array<long> column — a pure
-    projection (nested higher-order functions), no shingle explode."""
-    return signatures_from_hash_sets(_with_shingle_hash_sets(docs))
 
 
 def band_keys(sigs: DataFrame, extra_cols: tuple = ()) -> DataFrame:

@@ -435,8 +435,7 @@ def events_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same (event_type) partitioning, and the pick is a conditional
     aggregate — no second pass, no collect.  At 100 TB exact medians per
     key cost exactly this one sort; the approximate sketch is the cheap
-    alternative when the sort is too much.  See
-    ``events_median_grouped_agg`` for the Pandas-UDAF twin.
+    alternative when the sort is too much.
 
     Output: (event_type, n, median_value)."""
     ev = read_table(spark, sf_dir, "events").select("event_type", "event_id", "value")
@@ -446,35 +445,6 @@ def events_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ranked.filter(F.col("rn") == F.floor((F.col("n") + 1) / 2)).select(
         "event_type", F.col("n").cast("long").alias("n"), F.col("value").alias("median_value")
-    )
-
-
-def events_median_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPED_AGG Pandas-UDAF twin of ``events_median`` — the last
-    Pandas-UDF API class (scalar-per-group aggregate; mapInPandas,
-    grouped-map applyInPandas/applyInArrow, and applyInPandasWithState
-    are covered elsewhere).  Pytest-pinned equal to the built-in form,
-    which stays the default: the UDAF materializes each group's value
-    column through Arrow where the built-in sorts JVM-side."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # explicit functionType: the module's `from __future__ import
-    # annotations` stringifies type hints, which defeats pandas_udf's
-    # signature-based eval-type inference
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def lower_median(v):
-        s = v.sort_values(kind="mergesort").reset_index(drop=True)
-        return float(s.iloc[(len(s) + 1) // 2 - 1])
-
-    # Spark disallows mixing a group-agg pandas UDF with built-in
-    # aggregates in one agg() — the count rides a second tiny UDAF
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def group_size(v):
-        return len(v)
-
-    ev = read_table(spark, sf_dir, "events").select("event_type", "value")
-    return ev.groupBy("event_type").agg(
-        group_size("value").alias("n"), lower_median("value").alias("median_value")
     )
 
 

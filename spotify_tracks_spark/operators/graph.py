@@ -35,10 +35,6 @@ TRI_MAX_ORDER_ITEMS = 16
 # (bloom-pruned on the wedge side when the sketch aggregate is available).
 TRI_BROADCAST_MAX_EDGES = 5_000_000
 
-# bloom sizing for the shuffle path: false positives only cost extra rows
-# into the semi-join (never wrong results), so 1% fpp is plenty.
-TRI_BLOOM_FPP = 0.01
-
 
 def _edge_bloom_predicate(closing: DataFrame, n_edges: int):
     """Map-side bloom predicate over the closing-edge set, or ``None``.

@@ -107,70 +107,3 @@ def compact_table(
         out = df.repartition(n_files)
     out.write.mode("overwrite").parquet(out_dir)
     return n_files
-
-
-def write_partitioned_dynamic(
-    df: DataFrame, out_dir: str, partition_col: str
-) -> None:
-    """Dynamic partition overwrite — rewrite ONLY the partitions present
-    in ``df``, leaving all other partitions of the target untouched: the
-    idempotent daily-backfill write (static overwrite mode would drop
-    the whole table; append would duplicate the reprocessed day).
-
-    Uses ``partitionOverwriteMode=dynamic`` scoped to this write via the
-    DataFrameWriter option (no session-level config leak)."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(out_dir)
-    )
-
-
-def publish_snapshot(df: DataFrame, base_dir: str) -> int:
-    """Atomic snapshot publish WITHOUT a table format: write the new
-    version into its own ``snapshot-N`` directory, then swap one
-    manifest pointer — the lakehouse pattern (Delta/Iceberg's log
-    pointer) reduced to what plain parquet + a filesystem rename give
-    you.  Readers resolve the manifest first, so they see the OLD
-    snapshot or the NEW one, never a half-written directory; a crashed
-    writer leaves an orphan snapshot dir and an untouched manifest
-    (cleanup is a list-and-compare sweep, not a recovery protocol).
-
-    The manifest write is a tempfile + ``os.replace`` — atomic on
-    POSIX.  On object stores, the same role is played by a
-    conditional/versioned PUT of the manifest key.  Returns the new
-    snapshot id.
-
-    This complements ``compact_table`` (same directory-swap idea, file
-    count) and the idempotent sink (row grain): together they are the
-    write-path story of SURVEY §2.2's "table materialization" at a
-    scale where in-place overwrite windows are outages."""
-    import os
-    import tempfile
-
-    os.makedirs(base_dir, exist_ok=True)
-    manifest = os.path.join(base_dir, "MANIFEST")
-    current = -1
-    if os.path.exists(manifest):
-        with open(manifest) as fh:
-            current = int(fh.read().strip())
-    new_id = current + 1
-    df.write.mode("errorifexists").parquet(
-        os.path.join(base_dir, f"snapshot-{new_id}")
-    )
-    fd, tmp = tempfile.mkstemp(dir=base_dir, prefix=".manifest-")
-    with os.fdopen(fd, "w") as fh:
-        fh.write(str(new_id))
-    os.replace(tmp, manifest)  # the atomic pointer swap
-    return new_id
-
-
-def read_snapshot(spark: SparkSession, base_dir: str) -> DataFrame:
-    """Resolve the manifest, read that snapshot — the reader half of
-    ``publish_snapshot``'s old-or-new contract."""
-    import os
-
-    with open(os.path.join(base_dir, "MANIFEST")) as fh:
-        sid = int(fh.read().strip())
-    return spark.read.parquet(os.path.join(base_dir, f"snapshot-{sid}"))

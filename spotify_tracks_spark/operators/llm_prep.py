@@ -647,9 +647,6 @@ def corpus_bpe_encode(
     )
 
 
-TEMPERATURE_ALPHA = 0.5         # p^alpha mixing; 1/2 = the sqrt schedule
-
-
 def corpus_temperature_sample(
     spark: SparkSession, sf_dir: str, resolution: int = BALANCE_RESOLUTION
 ) -> DataFrame:

@@ -1,16 +1,9 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed metadata,
 processed with Arrow-batched ``mapInPandas``.
 
-``decode_image`` is a REAL dependency-free decoder (round-11): PNG (bit
-depth 8, all four 8-bit color types, every scanline filter incl. Paeth —
-stdlib zlib), 24-bit BMP, and binary PPM, with ``resize_image`` doing
-actual nearest-neighbor pixel resampling and ``extract_image_features``
-running the decode inside the mapInPandas plan.  Formats needing native
-codecs (JPEG/video) still raise NotImplementedError at the dispatch —
-on a cluster with PIL/ffmpeg only that dispatch grows.  The ORACLE path
-(``multimodal_bytes``) keeps ``_fake_decode`` — a deterministic
-stand-in DuckDB can recompute.  Everything around these hooks is the
-real 100 TB-shape plumbing:
+Feature extraction runs ``_fake_decode``, a deterministic stand-in for a
+real decoder that DuckDB can recompute.  Everything around that hook is
+the real 100 TB-shape plumbing:
 
 - payloads travel as ``binary`` columns with a metadata struct (never
   exploded into rows);
@@ -37,15 +30,6 @@ from pyspark.sql import types as T
 
 from ..sources.tables import read_table
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("content", T.BinaryType(), False),
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -68,232 +52,6 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("frame_md5", T.StringType(), False),
     ]
 )
-
-
-#: Channel counts per PNG color type (bit depth 8, non-interlaced).
-_PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
-
-
-def _png_unfilter(raw: bytes, width: int, height: int, channels: int) -> bytearray:
-    """Undo PNG scanline filters (types 0-4 incl. Paeth) on the
-    zlib-decompressed byte stream.  Pure stdlib; RFC 2083 §6."""
-    stride = width * channels
-    out = bytearray(stride * height)
-    bpp = channels  # bytes per pixel at bit depth 8
-    pos = 0
-    for y in range(height):
-        ftype = raw[pos]
-        row = raw[pos + 1 : pos + 1 + stride]
-        pos += 1 + stride
-        base = y * stride
-        prev = base - stride
-        if ftype == 0:  # None
-            out[base : base + stride] = row
-        elif ftype == 1:  # Sub
-            for i, b in enumerate(row):
-                left = out[base + i - bpp] if i >= bpp else 0
-                out[base + i] = (b + left) & 0xFF
-        elif ftype == 2:  # Up
-            for i, b in enumerate(row):
-                up = out[prev + i] if y > 0 else 0
-                out[base + i] = (b + up) & 0xFF
-        elif ftype == 3:  # Average
-            for i, b in enumerate(row):
-                left = out[base + i - bpp] if i >= bpp else 0
-                up = out[prev + i] if y > 0 else 0
-                out[base + i] = (b + ((left + up) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i, b in enumerate(row):
-                a = out[base + i - bpp] if i >= bpp else 0
-                c_ = out[prev + i] if y > 0 else 0
-                d = out[prev + i - bpp] if (y > 0 and i >= bpp) else 0
-                p = a + c_ - d
-                pa, pb, pc = abs(p - a), abs(p - c_), abs(p - d)
-                pred = a if (pa <= pb and pa <= pc) else (c_ if pb <= pc else d)
-                out[base + i] = (b + pred) & 0xFF
-        else:
-            raise ValueError(f"unknown PNG filter type {ftype}")
-    return out
-
-
-def _decode_png(content: bytes) -> tuple[int, int, int, bytes]:
-    """Minimal pure-stdlib PNG decoder: bit depth 8, color types
-    0/2/4/6 (gray, RGB, gray+alpha, RGBA), non-interlaced."""
-    import struct
-    import zlib
-
-    if content[:8] != b"\x89PNG\r\n\x1a\n":
-        raise ValueError("not a PNG signature")
-    pos, idat, hdr = 8, [], None
-    while pos < len(content):
-        (length,) = struct.unpack(">I", content[pos : pos + 4])
-        ctype = content[pos + 4 : pos + 8]
-        data = content[pos + 8 : pos + 8 + length]
-        pos += 12 + length  # length + type + data + crc
-        if ctype == b"IHDR":
-            hdr = struct.unpack(">IIBBBBB", data)
-        elif ctype == b"IDAT":
-            idat.append(data)
-        elif ctype == b"IEND":
-            break
-    if hdr is None:
-        raise ValueError("PNG missing IHDR")
-    width, height, depth, color_type, comp, filt, interlace = hdr
-    if depth != 8 or interlace != 0 or comp != 0 or filt != 0:
-        raise ValueError(
-            f"unsupported PNG variant (depth={depth}, interlace={interlace})"
-        )
-    channels = _PNG_CHANNELS.get(color_type)
-    if channels is None:
-        raise ValueError(f"unsupported PNG color type {color_type}")
-    raw = zlib.decompress(b"".join(idat))
-    pixels = _png_unfilter(raw, width, height, channels)
-    return width, height, channels, bytes(pixels)
-
-
-def encode_png(pixels: bytes, width: int, height: int, channels: int) -> bytes:
-    """Minimal PNG encoder (filter 0 rows, one zlib IDAT) — the test-side
-    twin of ``_decode_png`` so round-trips pin both directions."""
-    import struct
-    import zlib
-
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-    stride = width * channels
-    raw = b"".join(
-        b"\x00" + pixels[y * stride : (y + 1) * stride] for y in range(height)
-    )
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        crc = zlib.crc32(ctype + data) & 0xFFFFFFFF
-        return struct.pack(">I", len(data)) + ctype + data + struct.pack(">I", crc)
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _decode_bmp(content: bytes) -> tuple[int, int, int, bytes]:
-    """Minimal BMP decoder: BITMAPINFOHEADER, 24-bit uncompressed
-    (BI_RGB), bottom-up or top-down rows; emits RGB."""
-    import struct
-
-    if content[:2] != b"BM":
-        raise ValueError("not a BMP signature")
-    (data_off,) = struct.unpack("<I", content[10:14])
-    width, height = struct.unpack("<ii", content[18:26])
-    (bpp,) = struct.unpack("<H", content[28:30])
-    (compression,) = struct.unpack("<I", content[30:34])
-    if bpp != 24 or compression != 0:
-        raise ValueError(f"unsupported BMP variant (bpp={bpp})")
-    bottom_up = height > 0
-    height = abs(height)
-    row_size = (width * 3 + 3) & ~3  # rows pad to 4-byte boundaries
-    out = bytearray(width * height * 3)
-    for y in range(height):
-        src_y = (height - 1 - y) if bottom_up else y
-        row = content[data_off + src_y * row_size :][: width * 3]
-        for x in range(width):
-            b, g, r = row[3 * x : 3 * x + 3]
-            out[(y * width + x) * 3 : (y * width + x) * 3 + 3] = bytes((r, g, b))
-    return width, height, 3, bytes(out)
-
-
-def _decode_ppm(content: bytes) -> tuple[int, int, int, bytes]:
-    """Binary PPM (P6, maxval 255) decoder — the raw-RGB interchange
-    format ``resize_image`` emits."""
-    if content[:2] != b"P6":
-        raise ValueError("not a P6 PPM")
-    # header = magic, width, height, maxval as whitespace-separated
-    # tokens; '#' comments run to end-of-line
-    fields: list[int] = []
-    pos = 2
-    while len(fields) < 3:
-        c = content[pos : pos + 1]
-        if c == b"#":
-            pos = content.index(b"\n", pos) + 1
-        elif c.isspace():
-            pos += 1
-        else:
-            end = pos
-            while not content[end : end + 1].isspace():
-                end += 1
-            fields.append(int(content[pos:end]))
-            pos = end
-    pos += 1  # single whitespace after maxval
-    width, height, maxval = fields
-    if maxval != 255:
-        raise ValueError(f"unsupported PPM maxval {maxval}")
-    pixels = content[pos : pos + width * height * 3]
-    return width, height, 3, pixels
-
-
-def decode_image(content: bytes) -> tuple[int, int, int, bytes]:
-    """Decode an image payload to ``(width, height, channels, pixels)``
-    with row-major 8-bit pixels.  Dependency-free (stdlib zlib/struct)
-    decoders for PNG (bit depth 8, color types 0/2/4/6, non-interlaced),
-    24-bit BMP, and binary PPM — the formats a pure-Python executor can
-    handle without libjpeg.  JPEG and friends still need a real codec:
-    on a cluster with PIL installed, extend the dispatch here; the
-    surrounding mapInPandas plumbing does not change."""
-    if content[:8] == b"\x89PNG\r\n\x1a\n":
-        return _decode_png(content)
-    if content[:2] == b"BM":
-        return _decode_bmp(content)
-    if content[:2] == b"P6":
-        return _decode_ppm(content)
-    raise NotImplementedError(
-        "unrecognized image format (supported dependency-free: PNG/BMP/PPM; "
-        "JPEG requires PIL/libjpeg on the cluster)"
-    )
-
-
-def _to_rgb(pixels: bytes, channels: int) -> bytes:
-    """Normalize decoded pixels to 3-channel RGB (gray replicates,
-    alpha drops)."""
-    if channels == 3:
-        return pixels
-    out = bytearray(len(pixels) // channels * 3)
-    for i in range(len(pixels) // channels):
-        px = pixels[i * channels : (i + 1) * channels]
-        if channels == 1:
-            out[i * 3 : i * 3 + 3] = bytes((px[0], px[0], px[0]))
-        elif channels == 2:  # gray + alpha
-            out[i * 3 : i * 3 + 3] = bytes((px[0], px[0], px[0]))
-        else:  # RGBA
-            out[i * 3 : i * 3 + 3] = px[:3]
-    return bytes(out)
-
-
-def resize_image(content: bytes, width: int, height: int) -> bytes:
-    """REAL resize: decode (PNG/BMP/PPM), nearest-neighbor resample on
-    actual pixel coordinates, re-encode as binary PPM (P6) — which
-    ``decode_image`` round-trips, so resize chains compose.  Output is
-    always 3-channel RGB."""
-    src_w, src_h, channels, pixels = decode_image(content)
-    rgb = _to_rgb(pixels, channels)
-    out = bytearray(width * height * 3)
-    for y in range(height):
-        src_y = min(y * src_h // height, src_h - 1)
-        for x in range(width):
-            src_x = min(x * src_w // width, src_w - 1)
-            s = (src_y * src_w + src_x) * 3
-            out[(y * width + x) * 3 : (y * width + x) * 3 + 3] = rgb[s : s + 3]
-    return b"P6\n%d %d\n255\n" % (width, height) + bytes(out)
-
-
-def _fake_resize(content: bytes, width: int, height: int) -> bytes:
-    """Deterministic resize stand-in: nearest-neighbor subsample of the
-    payload bytes onto a width×height grid (stable across engines/runs)."""
-    n = len(content)
-    if n == 0:
-        return b"\0" * (width * height)
-    step = max(n // (width * height), 1)
-    out = bytes(content[min(i * step, n - 1)] for i in range(width * height))
-    return out
 
 
 def sample_frames(media: DataFrame, frame_bytes: int = FRAME_BYTES, stride: int = FRAME_STRIDE) -> DataFrame:
@@ -368,49 +126,6 @@ def extract_features(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(batches, FEATURE_SCHEMA)
-
-
-IMAGE_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("width", T.LongType(), False),
-        T.StructField("height", T.LongType(), False),
-        T.StructField("channels", T.LongType(), False),
-        T.StructField("mean_luma", T.DoubleType(), False),
-        T.StructField("px_md5", T.StringType(), False),
-    ]
-)
-
-
-def extract_image_features(media: DataFrame) -> DataFrame:
-    """REAL decode through the identical Arrow-batched ``mapInPandas``
-    plan as ``extract_features``: each payload runs ``decode_image``
-    (PNG/BMP/PPM, dependency-free) executor-side and emits shape +
-    integer-exact mean luminance + a pixel digest.  This is the decode
-    hook the round-10 verdict asked to stop being NotImplementedError —
-    on a cluster with PIL, only ``decode_image``'s dispatch grows; this
-    plan is unchanged."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "channels": [], "mean_luma": [], "px_md5": [],
-            }
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                w, h, ch, px = decode_image(bytes(content))
-                rgb = _to_rgb(px, ch)
-                # integer-exact mean over one IEEE division — the
-                # repo-wide float-determinism discipline
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["mean_luma"].append(sum(rgb) / len(rgb))
-                out["px_md5"].append(hashlib.md5(rgb).hexdigest())
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, IMAGE_FEATURE_SCHEMA)
 
 
 def multimodal_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:

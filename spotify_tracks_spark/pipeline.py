@@ -110,39 +110,3 @@ def write_models(models: dict[str, DataFrame], out_dir: str) -> dict[str, int]:
         writer.parquet(f"{out_dir}/{name}")
         counts[name] = obs.get["rows"]
     return counts
-
-
-def write_models_bucketed(
-    models: dict[str, DataFrame],
-    out_dir: str,
-    database: str = "spotify_bucketed",
-    n_buckets: int = 16,
-) -> None:
-    """Co-located join layout: fact and track dim CLUSTERED BY ``track_id``
-    into the same bucket count (SURVEY.md §7.2 item 8: "bucket by
-    track_id").
-
-    Every recurring fct⋈dim_track join (Q6/Q7/Q8 and any ad-hoc per-track
-    analysis) then matches bucket-to-bucket with NO exchange on either
-    side — at 100 TB that deletes the single largest shuffle in the
-    workload from every downstream run, paid for by one bucketed write.
-    Broadcast covers today's small dims; bucketing is what survives when
-    the probe side is another fact-sized table (plays⋈plays cohort joins)
-    or the dim outgrows the broadcast threshold.  Verified by a plan test:
-    SortMergeJoin over the two bucketed scans with zero Exchange nodes
-    (tests/test_models.py).
-
-    Buckets are external tables (explicit ``path``) so the parquet layout
-    is inspectable; bucket metadata lives in the session catalog exactly
-    as it would in a production Hive/Glue/Unity metastore."""
-    spark = models["fct_played_track"].sparkSession
-    spark.sql(f"create database if not exists {database}")
-    for name in ("fct_played_track", "dim_track"):
-        (
-            models[name]
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, "track_id")
-            .sortBy("track_id")
-            .option("path", f"{out_dir}/{name}")
-            .saveAsTable(f"{database}.{name}")
-        )

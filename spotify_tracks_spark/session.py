@@ -20,35 +20,6 @@ from pyspark.sql import SparkSession
 from .config import DEFAULT_CPUS
 
 
-def cluster_conf(executors: int = 1000, cores_per_executor: int = 4) -> dict[str, str]:
-    """The production (multi-executor, ~100 TB) configuration profile —
-    the knobs that change between local[] testing and a real cluster,
-    with the reasoning encoded here instead of in a wiki:
-
-    - shuffle partitions ≈ 2-3× total cores so every core gets a few
-      waves and AQE coalescing has room to merge small ones;
-    - 256 MiB scan partitions: big enough to amortize task overhead at
-      100 TB (~400k scan tasks), small enough to fit executor memory;
-    - AQE on with skew-join splitting (hot artist/track keys);
-    - broadcast threshold sized to the dims (entity directories are MBs
-      even at full scale — always broadcast);
-    - shuffle compression + Kryo: wire volume dominates at cluster scale.
-    """
-    total_cores = executors * cores_per_executor
-    return {
-        "spark.sql.shuffle.partitions": str(total_cores * 2),
-        "spark.sql.files.maxPartitionBytes": str(256 * 1024 * 1024),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.shuffle.compress": "true",
-        "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
-        "spark.sql.session.timeZone": "UTC",
-    }
-
-
 def get_spark(app_name: str = "spotify-tracks-spark", cpus: int | None = None) -> SparkSession:
     cpus = cpus or DEFAULT_CPUS
     return (

@@ -34,22 +34,40 @@ Fetcher = Callable[[str], dict]
 RECENTLY_PLAYED_URL = "https://api.spotify.com/v1/me/player/recently-played?limit={limit}"
 
 
+def _checked(body: dict) -> dict:
+    """The page itself, or a ``ValueError`` for an API error body
+    (``{"error": {"status": ..., "message": ...}}``) or a page without an
+    ``items`` list — the reference's ``raise_for_status``
+    (flows/pull_recent_tracks.py:174,186).  Either would otherwise
+    flatten to zero rows and read as "no new plays"."""
+    error = body.get("error")
+    if error is not None:
+        raise ValueError(
+            f"recently-played request failed: status {error.get('status')}: "
+            f"{error.get('message')}"
+        )
+    if not isinstance(body.get("items"), list):
+        raise ValueError(f"recently-played page has no 'items' list: keys {sorted(body)}")
+    return body
+
+
 def fetch_pages(
     fetcher: Fetcher,
     limit: int = 50,
     max_extra_pages: int = 5,
     throttle_seconds: float = 0.0,
 ) -> list[dict]:
-    """Driver-side pagination: first page + ≤``max_extra_pages`` follows."""
+    """Driver-side pagination: first page + ≤``max_extra_pages`` follows.
+    A bad page raises (``_checked``)."""
     pages: list[dict] = []
     url = RECENTLY_PLAYED_URL.format(limit=limit)
-    body = fetcher(url)
+    body = _checked(fetcher(url))
     pages.append(body)
     j = 0
     while body.get("next") and j < max_extra_pages:
         if throttle_seconds:
             time.sleep(throttle_seconds)
-        body = fetcher(body["next"])
+        body = _checked(fetcher(body["next"]))
         pages.append(body)
         j += 1
     return pages

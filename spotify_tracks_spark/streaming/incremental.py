@@ -42,11 +42,13 @@ from __future__ import annotations
 import glob
 import os
 import re
+import shutil
 import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.memo import _fingerprint
 from ..plans.staging import stg_recent_tracks
 from ..sources.mapping import src_recent_tracks
 
@@ -64,9 +66,10 @@ FILES_PER_BATCH = 16
 
 _ATTRS = ("album_id", "album", "track_name", "artists")
 
-# (source tag, session id, sf_dir) -> materialized source-slice dir, one
-# dict for every fold; see _drain_fold for why fixture prep is shared.
-_SRC_CACHE: dict[tuple[str, int, str], str] = {}
+# (source tag, session id, sf_dir, fingerprint of sf_dir) -> materialized
+# source-slice dir, one dict for every fold; see _drain_fold for why
+# fixture prep is shared.
+_SRC_CACHE: dict[tuple[str, int, str, tuple], str] = {}
 
 
 def _partials(stg: DataFrame) -> DataFrame:
@@ -130,10 +133,15 @@ def _drain_fold(
         # being measured — and it costs ~3× the fold itself at sf0.1.
         # State + checkpoint stay per-call (fresh fold every run); an
         # explicit ``base`` keeps everything under one dir for the
-        # restart-recovery contract.
-        key = (tag, id(spark), sf_dir)
+        # restart-recovery contract.  The key carries ``memo``'s
+        # fingerprint of sf_dir: slices cut from an older state of the
+        # input would fold stale rows, so a changed input re-slices and
+        # the replaced slice dir is deleted.
+        key = (tag, id(spark), sf_dir, _fingerprint(sf_dir))
         src_path = _SRC_CACHE.get(key)
         if src_path is None or not os.path.isdir(src_path):
+            for old in [k for k in _SRC_CACHE if k[:3] == key[:3]]:
+                shutil.rmtree(os.path.dirname(_SRC_CACHE.pop(old)), ignore_errors=True)
             src_path = tempfile.mkdtemp(prefix=f"{prefix}src_") + "/src"
             _SRC_CACHE[key] = src_path
     else:

@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.time_utils import epoch_micros
 from ..sources.tables import normalize_events_ts
 
-MAX_LAG = "1 hour"
 WATERMARK = "1 day"
 
 _COUNTER = iter(range(1_000_000))

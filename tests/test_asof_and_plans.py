@@ -134,40 +134,6 @@ def test_percentiles_ordered(spark):
         assert r.p50 <= r.p90 <= r.p99
 
 
-def test_salted_join_equals_plain_join(spark):
-    """Salting is pure execution strategy: results identical to the plain
-    join on skewed data (one hot key), for inner and left."""
-    from pyspark.sql import functions as F
-
-    from spotify_tracks_spark.operators.skew import salted_join
-
-    probe = spark.createDataFrame(
-        [(1, i) for i in range(500)] + [(2, 900), (3, 901), (5, 999)],
-        "k: long, pv: long",
-    )
-    build = spark.createDataFrame(
-        [(1, "hot"), (2, "warm"), (4, "unmatched")], "k: long, bv: string"
-    )
-    for how in ("inner", "left"):
-        got = sorted(
-            (r.k, r.pv, r.bv)
-            for r in salted_join(probe, build, ["k"], n_salts=4, how=how).collect()
-        )
-        want = sorted(
-            (r.k, r.pv, r.bv) for r in probe.join(build, "k", how).collect()
-        )
-        assert got == want, how
-
-
-def test_cluster_conf_profile():
-    from spotify_tracks_spark.session import cluster_conf
-
-    conf = cluster_conf(executors=1000, cores_per_executor=4)
-    assert int(conf["spark.sql.shuffle.partitions"]) == 8000
-    assert conf["spark.sql.adaptive.skewJoin.enabled"] == "true"
-    assert int(conf["spark.sql.files.maxPartitionBytes"]) == 256 * 1024 * 1024
-
-
 def test_model_chain_joins_are_broadcast(spark):
     """Every dim join in the report models must stay a broadcast hash join
     (dims ≪ fact); a regression to sort-merge would shuffle the fact."""
@@ -293,32 +259,6 @@ def test_scan_column_pruning_reaches_parquet(spark):
     # events_sample never materializes the props JSON column
     for schema in read_schemas(events_sample(spark, SF_SMOKE)):
         assert "props" not in schema
-
-
-def test_kmeans_pandas_assign_twin_pinned(spark):
-    """The mapInPandas+BLAS assign kernel (production path for huge k×d)
-    must agree with the expression-path assign: identical clusters, and
-    distances equal up to BLAS summation reordering.  A cluster mismatch
-    is tolerated only on a genuine near-tie (best two distances within
-    1e-9) — none exist in this data, so in practice this pins equality."""
-    from spotify_tracks_spark.operators.clustering import (
-        kmeans_assign_pandas,
-        kmeans_init_counts,
-    )
-    from spotify_tracks_spark.sources.tables import read_table
-
-    expr = {
-        r.cluster: r.n_vectors
-        for r in kmeans_init_counts(spark, SF_SMOKE).collect()
-    }
-    pandas_rows = kmeans_assign_pandas(spark, SF_SMOKE).collect()
-    from collections import Counter
-
-    pand = Counter(r.cluster for r in pandas_rows)
-    assert dict(pand) == expr
-    n = read_table(spark, SF_SMOKE, "embeddings").count()
-    assert len(pandas_rows) == n
-    assert all(r.sq_dist >= 0 for r in pandas_rows)
 
 
 def test_kmeans_pandas_backend_trajectory_pinned(spark):

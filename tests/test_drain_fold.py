@@ -52,3 +52,53 @@ def test_drain_fold_equals_batch_and_replays_without_leaks(spark, tmp_path):
     assert not persisted() - before
     assert again == got
     assert sorted(glob.glob(f"{base}/state_b*")) == snaps
+
+
+def test_drain_fold_reslices_a_changed_input(spark, tmp_path):
+    """With no ``base``, the fold reuses the source slices cached per
+    session and input.  Overwriting the input with half its rows must
+    re-slice it: the counts follow the new file, and the replaced slice
+    dir is deleted."""
+    import os
+    import shutil
+
+    from spotify_tracks_spark.streaming import incremental
+
+    sf_dir = str(tmp_path)
+    rows = [(i % 12, i) for i in range(48)]
+
+    def plant(rows):
+        spark.createDataFrame(rows, "key long, v long").write.mode(
+            "overwrite"
+        ).parquet(f"{sf_dir}/planted.parquet")
+
+    def drain():
+        return sorted(map(tuple, incremental._drain_fold(
+            spark,
+            sf_dir,
+            "planted",
+            lambda s, d: s.read.parquet(f"{d}/planted.parquet"),
+            lambda df: df.groupBy("key").agg(F.count("*").alias("n")),
+            lambda u: u.groupBy("key").agg(F.sum("n").alias("n")),
+            n_slices=4,
+            files_per_batch=1,
+            prefix="drain_test_",
+        ).collect()))
+
+    def slice_dirs():
+        return [
+            os.path.dirname(p)
+            for k, p in incremental._SRC_CACHE.items()
+            if k[:3] == ("planted", id(spark), sf_dir)
+        ]
+
+    plant(rows)
+    assert drain() == [(k, 4) for k in range(12)]
+    [first] = slice_dirs()
+
+    plant(rows[:24])
+    assert drain() == [(k, 2) for k in range(12)]
+    assert not os.path.exists(first), "the replaced slices must be deleted"
+    [second] = slice_dirs()
+    assert second != first
+    shutil.rmtree(second)

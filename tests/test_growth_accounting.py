@@ -70,28 +70,6 @@ def test_merge_upsert_planted_actions(spark, tmp_path):
     assert (got[3].action, got[3].event_id) == ("insert", 4)
 
 
-def test_user_trend_pandas_twin_matches_builtin(spark):
-    from spotify_tracks_spark.operators.analytics import (
-        events_user_trend,
-        events_user_trend_pandas,
-    )
-
-    from .conftest import SF_SMOKE
-
-    a = {r.user_id: r for r in events_user_trend(spark, SF_SMOKE).collect()}
-    b = {r.user_id: r for r in events_user_trend_pandas(spark, SF_SMOKE).collect()}
-    assert set(a) == set(b) and a
-    for uid in a:
-        assert a[uid].n_events == b[uid].n_events
-        for f in ("slope", "intercept"):
-            va, vb = getattr(a[uid], f), getattr(b[uid], f)
-            if va is None:
-                assert vb is None
-            else:
-                # numpy sums in a different order — equal to float tolerance
-                assert abs(va - vb) <= 1e-9 * max(1.0, abs(va)), (uid, f)
-
-
 def test_user_trend_planted_line(spark, tmp_path):
     from spotify_tracks_spark.operators.analytics import events_user_trend
 
@@ -141,27 +119,6 @@ def test_session_overlap_planted(spark, tmp_path):
     assert set(got) == {1, 2}
     assert got[1].overlap_us == 60_000_000  # 10:05-10:06 inside browse
     assert got[2].overlap_us == 0  # touching endpoints still join
-
-
-def test_user_trend_arrow_twin_matches_builtin(spark):
-    from spotify_tracks_spark.operators.analytics import (
-        events_user_trend,
-        events_user_trend_arrow,
-    )
-
-    from .conftest import SF_SMOKE
-
-    a = {r.user_id: r for r in events_user_trend(spark, SF_SMOKE).collect()}
-    b = {r.user_id: r for r in events_user_trend_arrow(spark, SF_SMOKE).collect()}
-    assert set(a) == set(b) and a
-    for uid in a:
-        assert a[uid].n_events == b[uid].n_events
-        for f in ("slope", "intercept"):
-            va, vb = getattr(a[uid], f), getattr(b[uid], f)
-            if va is None:
-                assert vb is None
-            else:
-                assert abs(va - vb) <= 1e-9 * max(1.0, abs(va)), (uid, f)
 
 
 def test_corpus_split_is_disjoint_and_exhaustive(spark):

@@ -63,6 +63,24 @@ def test_fetch_pages_caps_extra_pages():
     assert len(pages) == 6  # first + 5 follows, mirrors the j < 5 cap
 
 
+def test_fetch_pages_raises_on_a_bad_page():
+    """An API error body or a page without an ``items`` list fails the
+    fetch (the reference's ``raise_for_status``) instead of flattening to
+    zero rows; an empty ``items`` list stays a valid page."""
+    expired = {"error": {"status": 401, "message": "The access token expired"}}
+    with pytest.raises(ValueError, match="401.*The access token expired"):
+        fetch_pages(lambda url: expired)
+    # the error arrives on a follow-up page, after a good first page
+    with pytest.raises(ValueError, match="401"):
+        fetch_pages(lambda url: expired if "page2" in url else PAGE1)
+    for bad in ({"itemz": [], "next": None}, {"items": None, "next": None}):
+        with pytest.raises(ValueError, match="items"):
+            fetch_pages(lambda url, bad=bad: bad)
+    assert fetch_pages(lambda url: {"items": [], "next": None}) == [
+        {"items": [], "next": None}
+    ]
+
+
 def test_flatten_payload(spark):
     flat = flatten_payload(pages_to_df(spark, fetch_pages(_fetcher)))
     rows = {(r.track_name, r.played_at): r for r in flat.collect()}
@@ -73,6 +91,22 @@ def test_flatten_payload(spark):
     b = rows[("Song B", "2024-01-01T11:00:00Z")]
     assert b.context is None  # null-safe context access
     assert b.track_popularity == pytest.approx(55.0)
+
+
+def test_flatten_payload_empty_artists_and_empty_page(spark):
+    """An item with an empty artists list and a NULL context flattens to
+    one row with an empty artists string; an empty page adds no rows."""
+    pages = fetch_pages(_fetcher) + [
+        {"items": [_item("Song D", "Album Z", [], "2024-05-02T09:30:00Z")], "next": None},
+        {"items": [], "next": None},
+    ]
+    rows = flatten_payload(pages_to_df(spark, pages)).collect()
+    assert len(rows) == 5
+    assert [r.track_artists for r in rows if r.track_name == "Song D"] == [""]
+    d = next(r for r in rows if r.track_name == "Song D")
+    assert (d.track_album, d.played_at, d.context) == (
+        "Album Z", "2024-05-02T09:30:00Z", None
+    )
 
 
 def test_pages_to_df_empty_batch(spark):
@@ -106,250 +140,3 @@ def test_ingest_end_to_end_dedup(spark):
     empty = spark.createDataFrame([], flat.schema)
     sink = idempotent_union(empty.dropDuplicates(key), flat.dropDuplicates(key), key)
     assert sink.count() == 3  # the overlapping play inserted once
-
-
-def test_custom_datasource_reads_pages(spark, tmp_path):
-    """The Python DataSource ingests the same pages as the fixture fetcher."""
-    import json
-
-    from spotify_tracks_spark.sources.recent_tracks_datasource import (
-        RecentTracksDataSource,
-    )
-
-    pages_file = tmp_path / "pages.json"
-    pages_file.write_text(json.dumps(fetch_pages(_fetcher)))
-    spark.dataSource.register(RecentTracksDataSource)
-    df = (
-        spark.read.format("recent_tracks")
-        .option("pages_path", str(pages_file))
-        .load()
-    )
-    assert df.count() == 4
-    assert df.schema.simpleString().count("string") >= 7
-
-
-def test_custom_datasource_matches_expression_flatten(spark, tmp_path):
-    """Two independent flatten implementations — the executor-side Python
-    DataSource and the from_json/explode expression path — must agree,
-    including on a NULL context, an empty artists list and an empty page."""
-    import json
-
-    from spotify_tracks_spark.sources.recent_tracks_datasource import (
-        RecentTracksDataSource,
-    )
-
-    pages = fetch_pages(_fetcher) + [
-        {"items": [_item("Song D", "Album Z", [], "2024-05-02T09:30:00Z")], "next": None},
-        {"items": [], "next": None},
-    ]
-    pages_file = tmp_path / "pages.json"
-    pages_file.write_text(json.dumps(pages))
-    spark.dataSource.register(RecentTracksDataSource)
-    via_source = (
-        spark.read.format("recent_tracks")
-        .option("pages_path", str(pages_file))
-        .load()
-    )
-    via_expr = flatten_payload(pages_to_df(spark, pages))
-    rows = via_expr.collect()
-    assert len(rows) == 5
-    assert [r.track_artists for r in rows if r.track_name == "Song D"] == [""]
-    assert sorted(map(tuple, via_source.collect())) == sorted(map(tuple, rows))
-
-
-def test_custom_datasource_page_cap(spark, tmp_path):
-    import json
-
-    from spotify_tracks_spark.sources.recent_tracks_datasource import (
-        RecentTracksDataSource,
-    )
-
-    pages_file = tmp_path / "pages.json"
-    pages_file.write_text(json.dumps([PAGE1] * 10))
-    spark.dataSource.register(RecentTracksDataSource)
-    df = (
-        spark.read.format("recent_tracks")
-        .option("pages_path", str(pages_file))
-        .option("max_extra_pages", "2")
-        .load()
-    )
-    assert df.count() == 6  # 3 pages x 2 items
-
-
-def test_custom_datasource_streams_pages(spark, tmp_path):
-    """The streaming reader drains the same rows as the batch reader, and
-    a later trigger consumes only pages appended since the checkpoint."""
-    import json
-
-    from spotify_tracks_spark.sources.recent_tracks_datasource import (
-        RecentTracksDataSource,
-    )
-
-    pages = fetch_pages(_fetcher)
-    pages_file = tmp_path / "pages.json"
-    pages_file.write_text(json.dumps(pages))
-    spark.dataSource.register(RecentTracksDataSource)
-
-    out = tmp_path / "out"
-
-    def drain() -> None:
-        (
-            spark.readStream.format("recent_tracks")
-            .option("pages_path", str(pages_file))
-            .load()
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    drain()
-    batch = (
-        spark.read.format("recent_tracks")
-        .option("pages_path", str(pages_file))
-        .load()
-    )
-    got = sorted(map(tuple, spark.read.parquet(str(out)).collect()))
-    assert got == sorted(map(tuple, batch.collect()))
-    n_first = len(got)
-
-    # append one page; the same checkpoint must emit ONLY the new items
-    new_page = {"items": [pages[0]["items"][0]], "next": None}
-    pages_file.write_text(json.dumps(pages + [new_page]))
-    drain()
-    assert len(spark.read.parquet(str(out)).collect()) == n_first + 1
-
-
-# --- OAuth token lifecycle (sources/auth.py) ---
-
-class _FakeSpotify:
-    """Offline transport fixture: a token server + an API that rejects
-    expired bearers with 401, mirroring the reference's check -> refresh
-    -> store flow (flows/pull_recent_tracks.py:73-109)."""
-
-    def __init__(self, valid_token="fresh", rotate_refresh=None):
-        self.valid_token = valid_token
-        self.rotate_refresh = rotate_refresh
-        self.refresh_calls = 0
-        self.page = {"items": [], "next": None}
-
-    def __call__(self, method, url, headers, data):
-        if method == "POST" and "api/token" in url:
-            self.refresh_calls += 1
-            assert data["grant_type"] == "refresh_token"
-            body = {"access_token": self.valid_token}
-            if self.rotate_refresh:
-                body["refresh_token"] = self.rotate_refresh
-            return 200, body
-        bearer = headers.get("Authorization", "")
-        if bearer != f"Bearer {self.valid_token}":
-            return 401, {"error": "expired"}
-        return 200, self.page if "recently-played" in url else {"ok": True}
-
-
-def test_token_provider_refreshes_expired_token():
-    from spotify_tracks_spark.sources.auth import InMemoryTokenStore, TokenProvider
-
-    api = _FakeSpotify(valid_token="fresh")
-    store = InMemoryTokenStore("stale", "refresh-1")
-    provider = TokenProvider(store, api, client_id="cid", client_secret="sec")
-    assert provider.token() == "fresh"
-    assert api.refresh_calls == 1
-    # refresh token is KEPT when the endpoint doesn't rotate it
-    assert store.load() == ("fresh", "refresh-1")
-    # second call: stored token now passes the check, no second refresh
-    assert provider.token() == "fresh"
-    assert api.refresh_calls == 1
-
-
-def test_token_provider_stores_rotated_refresh_token():
-    from spotify_tracks_spark.sources.auth import InMemoryTokenStore, TokenProvider
-
-    api = _FakeSpotify(valid_token="fresh", rotate_refresh="refresh-2")
-    store = InMemoryTokenStore("stale", "refresh-1")
-    TokenProvider(store, api).token()
-    assert store.load() == ("fresh", "refresh-2")
-
-
-def test_authorized_fetcher_retries_once_on_mid_pagination_401():
-    """Token expires BETWEEN the validity check and the page fetch: the
-    fetcher must refresh once and retry, and pagination proceeds."""
-    from spotify_tracks_spark.sources.auth import (
-        InMemoryTokenStore,
-        TokenProvider,
-        authorized_fetcher,
-    )
-
-    class _ExpiringApi(_FakeSpotify):
-        def __call__(self, method, url, headers, data):
-            if method == "GET" and "recently-played" in url and self.valid_token == "t0":
-                self.valid_token = "t1"  # expire the just-checked token
-            return super().__call__(method, url, headers, data)
-
-    api = _ExpiringApi(valid_token="t0")
-    api.page = {"items": [{"x": 1}], "next": None}
-    store = InMemoryTokenStore("t0", "refresh-1")
-    fetch = authorized_fetcher(TokenProvider(store, api), api)
-    pages = fetch_pages(fetch)
-    assert pages == [{"items": [{"x": 1}], "next": None}]
-    assert api.refresh_calls == 1
-    assert store.load()[0] == "t1"
-
-
-def test_token_provider_refresh_failure_raises():
-    from spotify_tracks_spark.sources.auth import (
-        InMemoryTokenStore,
-        RefreshError,
-        TokenProvider,
-    )
-
-    def dead_transport(method, url, headers, data):
-        return (400, {}) if method == "POST" else (401, {})
-
-    provider = TokenProvider(InMemoryTokenStore("stale", "r"), dead_transport)
-    with pytest.raises(RefreshError):
-        provider.token()
-
-
-# --- OAuth authorization-code capture (sources/login.py) ---
-
-def test_auth_code_capture_loopback():
-    """Full loopback round-trip: consent URL carries the issued state and
-    redirect URI; a simulated provider redirect delivers the code."""
-    import threading
-    import urllib.request
-    from urllib.parse import parse_qs, urlparse
-
-    from spotify_tracks_spark.sources.login import capture_auth_code
-
-    def fake_provider(url: str) -> None:
-        q = {k: v[0] for k, v in parse_qs(urlparse(url).query).items()}
-        assert q["response_type"] == "code"
-        assert q["client_id"] == "cid"
-        assert q["scope"] == "user-read-recently-played"
-        cb = f"{q['redirect_uri']}?code=authcode-xyz&state={q['state']}"
-        threading.Thread(
-            target=lambda: urllib.request.urlopen(cb, timeout=5).read(),
-            daemon=True,
-        ).start()
-
-    code = capture_auth_code("cid", fake_provider, timeout=10)
-    assert code == "authcode-xyz"
-
-
-def test_auth_code_capture_rejects_bad_state_and_errors():
-    from spotify_tracks_spark.sources.login import (
-        AuthorizationDenied,
-        StateMismatch,
-        parse_callback,
-    )
-
-    with pytest.raises(StateMismatch):
-        parse_callback("code=x&state=wrong", "right")
-    with pytest.raises(AuthorizationDenied):
-        parse_callback("error=access_denied&state=s", "s")
-    with pytest.raises(AuthorizationDenied):
-        parse_callback("state=s", "s")
-    assert parse_callback("code=ok&state=s", "s") == "ok"

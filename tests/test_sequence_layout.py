@@ -324,28 +324,6 @@ def test_compact_table_file_count_and_pruning_order(spark, tmp_path_factory):
         assert hi < lo, ranges
 
 
-def test_dynamic_partition_overwrite_touches_only_written_days(spark, tmp_path_factory):
-    from spotify_tracks_spark.operators.layout import write_partitioned_dynamic
-
-    tmp = tmp_path_factory.mktemp("dyn")
-    out = f"{tmp}/fact"
-    full = spark.createDataFrame(
-        [(i, f"d{i % 3}", i * 1.0) for i in range(30)], "id long, day string, v double"
-    )
-    write_partitioned_dynamic(full, out, "day")
-    assert spark.read.parquet(out).count() == 30
-    # backfill ONLY day d1 with corrected values
-    fixed = spark.createDataFrame(
-        [(100 + i, "d1", -1.0) for i in range(5)], "id long, day string, v double"
-    )
-    write_partitioned_dynamic(fixed, out, "day")
-    back = spark.read.parquet(out)
-    # d0/d2 untouched (10 rows each), d1 replaced by the 5 fixed rows
-    assert back.filter(F.col("day") != "d1").count() == 20
-    d1 = back.filter(F.col("day") == "d1").collect()
-    assert len(d1) == 5 and all(r["v"] == -1.0 for r in d1)
-
-
 def test_new_operator_plans_broadcast_their_small_sides(spark):
     """Plan audit: every operator whose docstring claims a broadcast of a
     tiny frame must actually compile to a BroadcastHashJoin (or BNLJ for
@@ -428,37 +406,3 @@ def test_retention_rate_offset_zero_is_one(spark):
         if r["week_offset"] == 0:
             assert r["rate"] == 1.0
         assert r["n_users"] <= r["cohort_size"]
-
-
-def test_snapshot_publish_old_or_new(spark, tmp_path):
-    """The manifest contract: a reader resolving between publishes sees
-    a complete old snapshot; after the pointer swap it sees the new
-    one; a simulated half-written snapshot (directory present, manifest
-    not yet swapped) is invisible."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from spotify_tracks_spark.operators.layout import (
-        publish_snapshot,
-        read_snapshot,
-    )
-
-    base = str(tmp_path / "mart")
-    v0 = spark.range(5).withColumn("v", F.lit("a"))
-    assert publish_snapshot(v0, base) == 0
-    assert read_snapshot(spark, base).count() == 5
-
-    # a later, bigger version lands in its own dir...
-    v1 = spark.range(9).withColumn("v", F.lit("b"))
-    assert publish_snapshot(v1, base) == 1
-    got = read_snapshot(spark, base)
-    assert got.count() == 9 and got.select("v").distinct().collect()[0][0] == "b"
-    # ...and the old snapshot is still intact for in-flight readers
-    assert spark.read.parquet(f"{base}/snapshot-0").count() == 5
-
-    # half-written next version: directory exists, pointer not swapped
-    spark.range(2).write.parquet(f"{base}/snapshot-2")
-    assert read_snapshot(spark, base).count() == 9  # still v1
-    with open(os.path.join(base, "MANIFEST")) as fh:
-        assert fh.read().strip() == "1"

@@ -150,22 +150,6 @@ def test_rolling_7d_matches_bruteforce(spark, tmp_path_factory, events):
     assert got == want
 
 
-def test_median_grouped_agg_twin_matches_builtin(spark):
-    from spotify_tracks_spark.operators.events import (
-        events_median,
-        events_median_grouped_agg,
-    )
-
-    from .conftest import SF_SMOKE
-
-    a = {r.event_type: r for r in events_median(spark, SF_SMOKE).collect()}
-    b = {r.event_type: r for r in events_median_grouped_agg(spark, SF_SMOKE).collect()}
-    assert set(a) == set(b) and a
-    for t in a:
-        assert a[t].n == b[t].n
-        assert a[t].median_value == b[t].median_value, t
-
-
 def test_ewma_daily_gap_decay_planted(spark, tmp_path):
     """Dyadic EWMA hand-check with a calendar gap: days 1/2/4 carry
     counts 4/2/8 (day 3 missing).  At day 4 the weights are the DAY-GAP
