@@ -69,7 +69,6 @@ from spotify_tracks_spark.operators import layout as _layout
 from spotify_tracks_spark.operators.idempotent_sink import idempotent_union
 from spotify_tracks_spark.operators.multimodal import (
     multimodal_bytes,
-    multimodal_bytes_arrow,
     multimodal_frames,
 )
 from spotify_tracks_spark.sinks.publish import publish_roundtrip
@@ -92,12 +91,6 @@ def _model(name: str) -> Callable[[SparkSession, str], DataFrame]:
         return run_models(spark, sf_dir)[name]
 
     return q
-
-
-def _dim_track_window_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spotify_tracks_spark.plans import dim_track_window_variant
-
-    return dim_track_window_variant(run_models(spark, sf_dir)["stg_recent_tracks"])
 
 
 def _ngram_jaccard_uncapped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -134,8 +127,8 @@ def _idempotent_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming ingest (watermark + dropDuplicates +
-    foreachBatch idempotent sink), availableNow trigger."""
+    """Structured Streaming ingest (watermark + dropDuplicatesWithinWatermark
+    + foreachBatch idempotent sink), availableNow trigger."""
     import tempfile
 
     from spotify_tracks_spark.streaming import stream_events_dedup
@@ -143,23 +136,6 @@ def _events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="stream_dedup_")
     return stream_events_dedup(
         spark, sf_dir, out_dir=f"{base}/out", checkpoint_dir=f"{base}/ckpt"
-    )
-
-
-def _events_stream_dedup_ww(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same ingest via dropDuplicatesWithinWatermark — the successor API
-    with contract-guaranteed state eviction (streaming/ingest.py)."""
-    import tempfile
-
-    from spotify_tracks_spark.streaming import stream_events_dedup
-
-    base = tempfile.mkdtemp(prefix="stream_dedup_ww_")
-    return stream_events_dedup(
-        spark,
-        sf_dir,
-        out_dir=f"{base}/out",
-        checkpoint_dir=f"{base}/ckpt",
-        within_watermark=True,
     )
 
 
@@ -573,7 +549,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sales_by_region_quarter": _an.sales_by_region_quarter,
         "events_dedup_windowed": _an.events_dedup_windowed,
         "corpus_dup_inflation": corpus_dup_inflation,
-        "dedup_clusters_sql": _dedup.dedup_clusters_sql,
         "sql_top_artists": sql_top_artists,
         "dedup_minhash_lsh": _dedup.dedup_minhash_lsh,
         "dedup_simhash": _dedup.dedup_simhash,
@@ -589,19 +564,10 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_quality": _text.text_quality,
         "text_fingerprint": _text.text_fingerprint,
         "multimodal_frames": multimodal_frames,
-        # OVER-window re-expression of Q2 (same rows, same oracle)
-        "q2_dim_track_window_variant": _dim_track_window_variant,
         # streaming-incremental trailing-window mart (eviction state;
         # same Q6 oracle as the batch build)
         # streaming-incremental two-DISTINCT weekly mart (exact set-state
         # at (year, week, track) grain; same Q8 oracle as the batch build)
-        # built-in session_window formulation of events_sessionize
-        "events_sessionize_native": _events.events_sessionize_native,
-        # two-phase salted top-k: skew-proof twin, byte-identical result
-        "events_topk_per_user_salted": _an.events_topk_per_user_salted,
-        # dropDuplicatesWithinWatermark variant of the streaming ingest
-        # mapInArrow sibling of multimodal_bytes (zero-copy RecordBatches)
-        "multimodal_bytes_arrow": multimodal_bytes_arrow,
         # (ngram_jaccard_uncapped rotated INTO the driver round 10)
         # probe-set top-1 embedding near-dup (baseline form)
         "dedup_embedding": _sim.dedup_embedding,
@@ -717,7 +683,7 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_attribution_linear": _events.events_attribution_linear,
         # (attribution_time_decay, corpus_source_cap,
         # corpus_quality_sweep rotated INTO the driver round 10)
-        # (pagerank, clusters_star, containment, jaccard_exact_join,
+        # (pagerank, containment, jaccard_exact_join,
         # quantile_hist batch+stream rotated INTO the driver round 7)
         # two-pass equi-width histogram (bounds broadcast back)
         "events_value_histogram": _profile.events_value_histogram,
@@ -825,7 +791,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "parts_copurchase_pagerank": _graph_pagerank,
         "dedup_jaccard_exact_join": _dedup.dedup_jaccard_exact_join,
         "dedup_containment": _dedup.dedup_containment,
-        "dedup_clusters_star": _dedup.dedup_clusters_star,
         "dedup_semantic_ivf": _dedup_semantic_ivf,
         "events_welch_ttest": _an.events_welch_ttest,
         "events_bootstrap_ci": _an.events_bootstrap_ci,
@@ -929,8 +894,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_stream_kmv": _events_stream_kmv,
         "events_stream_hll": _events_stream_hll,
         "events_stream_bloom": _events_stream_bloom,
-        # dropDuplicatesWithinWatermark variant of the streaming ingest
-        "events_stream_dedup_within_watermark": _events_stream_dedup_ww,
         # chained stateful aggregation (window-over-window, Spark 4)
         "events_stream_peak_rate": _events_stream_peak_rate,
         # distinct-count + NOT-IN anti-join (warehouse Q16 shape)
@@ -1044,7 +1007,6 @@ def extra_oracle_sql() -> dict[str, str]:
         "sales_by_region_quarter": oracles_ext.SALES_BY_REGION_QUARTER,
         "events_dedup_windowed": oracles_ext.EVENTS_DEDUP_WINDOWED,
         "corpus_dup_inflation": oracles_ext.CORPUS_DUP_INFLATION,
-        "dedup_clusters_sql": oracles_ext.DEDUP_CLUSTERS_SQL,
         "sql_top_artists": oracles.SQL_TOP_ARTISTS,
         "dedup_minhash_lsh": oracles_ext.DEDUP_MINHASH_LSH,
         "dedup_simhash": oracles_ext.DEDUP_SIMHASH,
@@ -1064,10 +1026,6 @@ def extra_oracle_sql() -> dict[str, str]:
         "text_quality": oracles_ext.TEXT_QUALITY,
         "text_fingerprint": oracles_ext.TEXT_FINGERPRINT,
         "multimodal_frames": oracles_ext.MULTIMODAL_FRAMES,
-        "q2_dim_track_window_variant": oracles.Q2_DIM_TRACK,
-        "events_sessionize_native": oracles_ext.EVENTS_SESSIONIZE,
-        "events_topk_per_user_salted": oracles_ext.EVENTS_TOPK_PER_USER,
-        "multimodal_bytes_arrow": oracles_ext.MULTIMODAL_BYTES,
         "dedup_embedding": oracles_ext.DEDUP_EMBEDDING,
         "events_sample": oracles_ext.EVENTS_SAMPLE,
         "events_cube": oracles_ext.EVENTS_CUBE,
@@ -1137,7 +1095,6 @@ def extra_oracle_sql() -> dict[str, str]:
         "parts_copurchase_pagerank": oracles_ext.PARTS_COPURCHASE_PAGERANK,
         "dedup_jaccard_exact_join": oracles_ext.DEDUP_JACCARD_EXACT_JOIN,
         "dedup_containment": oracles_ext.DEDUP_CONTAINMENT,
-        "dedup_clusters_star": oracles_ext.DEDUP_CLUSTERS,
         "dedup_semantic_ivf": oracles_ext.DEDUP_SEMANTIC_IVF,
         "events_welch_ttest": oracles_ext.EVENTS_WELCH_TTEST,
         "events_bootstrap_ci": oracles_ext.EVENTS_BOOTSTRAP_CI,
@@ -1215,7 +1172,6 @@ def extra_oracle_sql() -> dict[str, str]:
         "events_stream_kmv": oracles_ext.EVENTS_STREAM_KMV,
         "events_stream_hll": oracles_ext.EVENTS_STREAM_HLL,
         "events_stream_bloom": oracles_ext.EVENTS_STREAM_BLOOM,
-        "events_stream_dedup_within_watermark": oracles_ext.EVENTS_STREAM_DEDUP,
         "events_stream_peak_rate": oracles_ext.EVENTS_STREAM_PEAK_RATE,
         "part_supplier_diversity": oracles_ext.PART_SUPPLIER_DIVERSITY,
         "embedding_truncation_recall": oracles_ext.EMBEDDING_TRUNCATION_RECALL,

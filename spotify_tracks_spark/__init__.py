@@ -16,8 +16,9 @@ multimodal plumbing) — as idiomatic Spark DataFrame plans:
                   DataFrame→DataFrame functions.
 - ``operators/``  idempotent sink, dedup family, ANN similarity, text analysis,
                   multimodal column plumbing.
-- ``streaming/``  Structured Streaming ingest (watermark + dropDuplicates +
-                  foreachBatch idempotent append).
+- ``streaming/``  Structured Streaming ingest (watermark +
+                  dropDuplicatesWithinWatermark + foreachBatch idempotent
+                  append).
 - ``oracles.py``  DuckDB-dialect SQL equivalents for every SQL-expressible
                   query (the correctness contract).
 """

@@ -9,7 +9,7 @@ plans with exact DuckDB oracles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import portable_hash60
 from ..sources.tables import read_table
@@ -162,45 +162,6 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("s")
     ).select("s.stage", "s.step", "s.n_users")
-
-
-N_SALTS = 8
-
-
-def events_topk_per_user_salted(
-    spark: SparkSession, sf_dir: str, n_salts: int = N_SALTS
-) -> DataFrame:
-    """Two-phase salted top-k — the skew-proof form of
-    ``events_topk_per_user``.
-
-    A hot key (one user with 10% of a 100 TB event log) serializes the
-    single-shuffle window form: every row for that user lands in ONE task.
-    Top-k is mergeable (top-k of a union = top-k of per-part top-ks), so
-    phase 1 ranks within (user_id, salt) — the hot user's rows spread over
-    ``n_salts`` tasks, each keeping k — and phase 2 re-ranks the surviving
-    ≤ k·n_salts rows per user, a shuffle of k·n_salts·|users| rows instead
-    of the full log.  The salt is a hash of the unique event_id:
-    deterministic (re-runs bucket identically — no nondeterministic
-    repartition), uniform, and engine-independent.  Result is
-    byte-identical to the unsalted form (same total order, same oracle).
-    """
-    ev = read_table(spark, sf_dir, "events").select("user_id", "event_id", "value")
-    salt = F.pmod(F.crc32(F.col("event_id").cast("string")), F.lit(n_salts))
-    w1 = Window.partitionBy("user_id", "salt").orderBy(
-        F.desc("value"), F.asc("event_id")
-    )
-    partial = (
-        ev.withColumn("salt", salt)
-        .withColumn("rnk", F.row_number().over(w1))
-        .filter(F.col("rnk") <= TOPK_PER_USER)
-        .drop("rnk", "salt")
-    )
-    w2 = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
-    return (
-        partial.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= TOPK_PER_USER)
-        .select("user_id", "event_id", "value", "rnk")
-    )
 
 
 def events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1404,12 +1365,14 @@ def _poisson1_cdf(kmax: int = 6) -> tuple[float, ...]:
 POISSON1_CDF = _poisson1_cdf()
 
 
-def _poisson_mult(b: int):
+def _poisson_mult(b: Column) -> Column:
     """Replica ``b``'s Poisson(1) multiplicity for the current row's
-    user_id: inverse-CDF on the hash-derived uniform (see POISSON1_CDF)."""
-    from ..functions.hashing import portable_hash60
-
-    u = portable_hash60(F.col("user_id"), seed=b) / F.lit(float(2**60))
+    user_id: inverse-CDF on the hash-derived uniform (see POISSON1_CDF).
+    The hashed string ``concat(b, '|', user_id)`` is the one that
+    ``portable_hash60(user_id, seed=b)`` builds, so the oracle's seeded
+    hash mirrors it."""
+    seeded = F.concat(b.cast("string"), F.lit("|"), F.col("user_id").cast("string"))
+    u = portable_hash60(seeded) / F.lit(float(2**60))
     expr = None
     for k, t in enumerate(POISSON1_CDF):
         expr = F.when(u < F.lit(t), k) if expr is None else expr.when(
@@ -1418,15 +1381,16 @@ def _poisson_mult(b: int):
     return expr.otherwise(F.lit(len(POISSON1_CDF))).cast("long")
 
 
-def _poisson_replicas(n_replicas: int):
+def _poisson_replicas(n_replicas: int) -> Column:
     """Exploded (b, m) replica structs — the B× fan-out of the ENTITY
-    frame shared by the bootstrap operators."""
+    frame shared by the bootstrap operators.  One ``transform`` over
+    ``sequence(0, B-1)`` keeps a single copy of the hash and inverse-CDF
+    expression in the plan; B inlined copies made whole-stage codegen
+    fail to compile and fall back to interpreted execution."""
     return F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(b).alias("b"), _poisson_mult(b).alias("m"))
-                for b in range(n_replicas)
-            ]
+        F.transform(
+            F.sequence(F.lit(0), F.lit(n_replicas - 1)),
+            lambda b: F.struct(b.alias("b"), _poisson_mult(b).alias("m")),
         )
     )
 

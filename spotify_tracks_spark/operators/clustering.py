@@ -87,56 +87,6 @@ def _assign(emb: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFra
     )
 
 
-def _assign_pandas(emb: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
-    """BLAS twin of ``_assign`` — same (vec_id, e, cluster, sq_dist)
-    contract, for k×d beyond what per-row HOF scoring can chew.
-
-    The centroid matrix ships as a REAL SparkContext broadcast variable
-    (block-manager torrent, one copy per executor, referenced per Arrow
-    batch — never per row); assignment is one GEMM per batch via
-    ‖x−c‖² = ‖x‖² + ‖c‖² − 2·x·cᵀ with row-wise argmin (NumPy argmin
-    takes the FIRST minimum — the same tie-to-lower-cluster contract as
-    the expression path).  BLAS pairwise summation reorders the IEEE
-    adds, so distances can differ from the fold-ordered expression path
-    in the last bits; the Lloyd trajectory is pytest-pinned equal."""
-    import numpy as np
-
-    cents = sorted(centroids)
-    assert [c for c, _ in cents] == list(range(len(cents)))
-    bc = emb.sparkSession.sparkContext.broadcast(
-        np.array([vec for _, vec in cents], dtype="float64")
-    )
-
-    def assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        m = bc.value
-        c2 = (m * m).sum(axis=1)
-        for pdf in batches:
-            x = np.stack(pdf["e"].to_numpy()).astype("float64")
-            d2 = (x * x).sum(axis=1)[:, None] + c2[None, :] - 2.0 * (x @ m.T)
-            # the expanded form can dip to ~-1e-13 when x ≈ a centroid
-            # (cancellation); a true squared distance is never negative
-            np.maximum(d2, 0.0, out=d2)
-            cl = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "e": pdf["e"],
-                    "cluster": cl.astype("int32"),
-                    "sq_dist": d2[np.arange(len(cl)), cl],
-                }
-            )
-
-    return emb.mapInPandas(
-        assign, "vec_id long, e array<double>, cluster int, sq_dist double"
-    )
-
-
-ASSIGN_BACKENDS = {"expr": _assign, "pandas": _assign_pandas}
-
-
 def _update(assigned: DataFrame, d: int) -> DataFrame:
     """New centroid per cluster = element-wise mean of member vectors.
 
@@ -156,21 +106,10 @@ def embedding_kmeans(
     sf_dir: str,
     k: int = K_CLUSTERS,
     n_iters: int = N_ITERS,
-    assign: str = "expr",
 ) -> DataFrame:
     """k-means assignments after ``n_iters`` Lloyd iterations.
 
-    ``assign`` selects the scoring backend for EVERY iteration:
-    ``"expr"`` (default) is the zero-shuffle expression-path argmin —
-    right while k fold-expressions per row stay cheap; ``"pandas"`` is
-    the BLAS ``mapInPandas`` kernel — the production path at large k×d
-    (one GEMM per Arrow batch instead of k folds per row).  Both emit
-    the same (vec_id, e, cluster, sq_dist) contract, so the update step
-    is backend-agnostic; the iteration trajectory is pytest-pinned
-    equal across backends.
-
     Output: (vec_id, cluster, sq_dist) — final assignment per vector."""
-    assign_fn = ASSIGN_BACKENDS[assign]
     emb = read_table(spark, sf_dir, "embeddings", spread=True).select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
     ).persist()
@@ -184,13 +123,13 @@ def embedding_kmeans(
 
     d = len(centroids[0][1])
     for _ in range(n_iters):
-        assigned = assign_fn(emb, centroids)
+        assigned = _assign(emb, centroids)
         new = {r.cluster: r.c for r in _update(assigned, d).collect()}
         # a cluster that lost all members keeps its previous centroid, so
         # ids stay the positions 0..k-1 (the _assign literal invariant)
         centroids = [(cid, new.get(cid, vec)) for cid, vec in centroids]
 
-    out = assign_fn(emb, centroids).select(
+    out = _assign(emb, centroids).select(
         "vec_id", F.col("cluster").cast("long").alias("cluster"), "sq_dist"
     )
     return out

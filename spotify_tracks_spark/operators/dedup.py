@@ -30,8 +30,6 @@ also cap bucket width (documented in each function).
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import portable_hash60
@@ -339,8 +337,8 @@ def dedup_minhash_lsh(
     pairs ≥ threshold.  ``hash_sets`` as in ``dedup_ngram_jaccard``.
 
     The full-corpus default path is session-cached per threshold
-    (``functions/memo.py``): clusters, clusters_star, edit-distance and
-    the recall eval all consume this exact pair set instead of each
+    (``functions/memo.py``): clusters, edit-distance and the recall
+    eval all consume this exact pair set instead of each
     re-running the whole signature+band join."""
     if hash_sets is None:
 
@@ -866,239 +864,6 @@ def dedup_containment(
         kept.unpersist()
 
 
-STAR_MAX_ROUNDS = 20
-
-
-def dedup_clusters_star(
-    spark: SparkSession,
-    sf_dir: str,
-    max_rounds: int = STAR_MAX_ROUNDS,
-    edges: DataFrame | None = None,
-) -> DataFrame:
-    """Duplicate clusters by ALTERNATING LARGE-STAR / SMALL-STAR — the
-    connected-components algorithm that actually holds at 100 TB graph
-    scale (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14): convergence in O(log² n) rounds REGARDLESS of
-    component diameter, where min-label propagation (``dedup_clusters``)
-    needs O(diameter) rounds and the recursive-CTE twin a hop bound.
-    Near-dup graphs are shallow so all three agree quickly here; this
-    variant is the one whose round count survives a pathological chain
-    (planted-fixture test) — the scale insurance policy of the family.
-
-    Per round, with edges held canonically (u < v, distinct):
-
-    - LARGE-STAR: for each node n, every strictly-larger neighbor
-      re-links to m = min(N(n) ∪ {n}) — hub fan-in collapses tall
-      components geometrically.
-    - SMALL-STAR: every ≤-neighbor re-links to the same m — flattens
-      the remaining short chains into stars.
-
-    Both steps are one groupBy(min) + one self-join over the EDGE list
-    only (never the corpus); each round's result is localCheckpointed so
-    lineage stays O(1) across rounds.  Convergence = the canonical edge
-    set reaches a fixpoint (exact symmetric-difference check, not a
-    probabilistic hash).  At the fixpoint every edge is (member, root)
-    with root = the component's min id.
-
-    Same contract and output as ``dedup_clusters`` (ground truth — the
-    pytest pins label-for-label equality): (doc_id, cluster_id,
-    cluster_size).  ``edges`` overrides the minhash pair source for
-    fixture graphs."""
-    if edges is None:
-        edges = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    cur = (
-        edges.filter(F.col("doc_a") != F.col("doc_b"))
-        .select(
-            F.least("doc_a", "doc_b").alias("u"),
-            F.greatest("doc_a", "doc_b").alias("v"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _star(e: DataFrame, large: bool) -> DataFrame:
-        # neighbor list in both directions; n's minimum link target is
-        # min(neighbors ∪ {n})
-        nbrs = e.select(F.col("u").alias("n"), F.col("v").alias("w")).unionByName(
-            e.select(F.col("v").alias("n"), F.col("u").alias("w"))
-        )
-        m = nbrs.groupBy("n").agg(F.least(F.min("w"), F.first("n")).alias("m"))
-        linked = nbrs.join(m, "n")
-        # large-star re-links the strictly larger neighbors; small-star
-        # the ≤ ones plus n itself (the (n, m) edge keeps n attached)
-        if large:
-            out = linked.filter(F.col("w") > F.col("n")).select(
-                F.col("w").alias("a"), F.col("m").alias("b")
-            )
-        else:
-            out = (
-                linked.filter(F.col("w") < F.col("n"))
-                .select(F.col("w").alias("a"), F.col("m").alias("b"))
-                .unionByName(m.select(F.col("n").alias("a"), F.col("m").alias("b")))
-            )
-        return (
-            out.filter(F.col("a") != F.col("b"))
-            .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-            .distinct()
-        )
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for _ in range(max_rounds):
-            nxt = _star(_star(cur, large=True), large=False).localCheckpoint(
-                eager=True
-            )
-            changed = (
-                nxt.exceptAll(cur).limit(1).count() + cur.exceptAll(nxt).limit(1).count()
-            )
-            prev, cur = cur, nxt
-            if changed == 0:
-                break
-        else:
-            raise ValueError(
-                f"dedup_clusters_star: no fixpoint within {max_rounds} rounds"
-            )
-        # fixpoint: every edge is (root=u, member=v) with u the component
-        # min; singletons never appear (every pair node has an edge)
-        labels = cur.select(
-            F.col("v").alias("doc_id"), F.col("u").alias("cluster_id")
-        ).unionByName(
-            cur.select(F.col("u").alias("doc_id"), F.col("u").alias("cluster_id"))
-        ).distinct()
-        sizes = labels.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-        return labels.join(sizes, "cluster_id").select(
-            "doc_id", "cluster_id", "cluster_size"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-
-
-# recursion bound for the SQL-surface clustering twin: must be ≥ the dup
-# graph's component diameter (near-dup clusters are near-cliques, so the
-# practical diameter is 2-3; the pytest pins equality with the exact
-# union-find operator, which would fail loudly if a deeper chain appeared).
-# Keep this TIGHT: UNION ALL recursion enumerates WALKS, whose count grows
-# ~(avg degree)^hops inside a clique — 8 hops measured 27× slower than 4.
-CLUSTER_MAX_HOPS = 4
-
-# unique temp-view suffixes (same pattern as the streaming operators);
-# unbounded — a bounded iter(range(N)) raises StopIteration at call N+1
-_CLUSTERS_SQL_COUNTER = itertools.count()
-
-
-def dedup_clusters_sql(
-    spark: SparkSession, sf_dir: str, max_hops: int = CLUSTER_MAX_HOPS
-) -> DataFrame:
-    """Duplicate clusters via a Spark 4 RECURSIVE CTE — the SQL-surface
-    twin of ``dedup_clusters`` (same verified minhash-LSH edge set, same
-    (doc_id, cluster_id, cluster_size) contract), exercising the
-    ``WITH RECURSIVE`` capability Catalyst gained in 4.0 (SPARK-24497).
-
-    Spark's recursion only supports UNION ALL (no distinct-union
-    fixpoint), which diverges on the cyclic bidirected dup graph — so the
-    recursion carries a DECREASING MEASURE instead: only labels smaller
-    than the target node propagate (``r.lbl < e.b``), and depth caps at
-    ``max_hops``.  With max_hops ≥ component diameter this computes exact
-    connected components: the component's min label m reaches every
-    member along any simple path (every hop satisfies m < node), and
-    min() per node discards the rest.  The DuckDB oracle is the
-    INDEPENDENT distinct-union fixpoint (DEDUP_CLUSTERS's ground truth,
-    no hop bound) — the stronger check: parity fails if the bounded
-    recursion ever splits a component — and tests additionally pin
-    equality with the exact union-find path.
-
-    Sufficiency of ``max_hops`` is ASSERTED, not assumed: after the
-    recursion, every dup edge is checked for label agreement — a
-    component split by a too-small bound necessarily leaves an edge
-    whose endpoints carry different labels (and conversely, if every
-    edge is label-consistent, labels are constant per component and
-    equal to the component min, i.e. the assignment is exact).  The
-    check is one edge-list-sized join, far cheaper than an extra
-    recursion hop (walk count grows ~avg-degree× per hop), and raises
-    ValueError instead of silently returning split clusters on
-    production data with longer near-dup chains.
-
-    Scale: the recursion's working set is the near-dup EDGE list (≪
-    corpus) times the few hops a shallow dup cluster needs — the same
-    "shuffle edges, never the corpus" bound as the iterative operator.
-    The edge list is materialized (localCheckpoint) BEFORE the recursion:
-    a lazy temp view would re-run the whole minhash pipeline on every
-    recursion step (measured 141 s → 3 s at sf0.01)."""
-    pairs = (
-        dedup_minhash_lsh(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    # counter-suffixed view name (the streaming operators' discipline):
-    # a fixed name collides under concurrent callers and leaks into the
-    # session; this one is unique per call and dropped after the query.
-    view = f"dup_pairs_{next(_CLUSTERS_SQL_COUNTER)}"
-    pairs.createOrReplaceTempView(view)
-    # the recursion's per-iteration frames are edge-list-sized; 32
-    # shuffle partitions is pure task overhead × iterations (measured
-    # 3.4 s -> 2.8 s at sf0.1 with 8).  Scoped + restored, the same
-    # discipline as the streaming operators.
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = spark.sql(f"""
-        WITH RECURSIVE edges AS (
-            SELECT doc_a AS a, doc_b AS b FROM {view}
-            UNION
-            SELECT doc_b AS a, doc_a AS b FROM {view}
-        ),
-        reach(node, lbl, depth) AS (
-            SELECT a, a, 0 FROM edges
-            UNION ALL
-            SELECT e.b, r.lbl, r.depth + 1
-            FROM reach r JOIN edges e ON e.a = r.node
-            WHERE r.depth < {max_hops} AND r.lbl < e.b
-        ),
-        comp AS (
-            SELECT node AS doc_id, min(lbl) AS cluster_id
-            FROM reach GROUP BY node
-        )
-        SELECT c.doc_id, c.cluster_id, s.cluster_size
-        FROM comp c
-        JOIN (
-            SELECT cluster_id, count(*) AS cluster_size
-            FROM comp GROUP BY cluster_id
-        ) s USING (cluster_id)
-    """)
-        out = out.localCheckpoint(eager=True)
-        # convergence assertion (see docstring): a split component leaves
-        # a dup edge whose endpoints disagree on cluster_id.  One
-        # edge-list-scale join over the checkpointed inputs.
-        lab = out.select("doc_id", "cluster_id")
-        n_split = (
-            pairs.join(
-                lab.withColumnRenamed("doc_id", "doc_a").withColumnRenamed(
-                    "cluster_id", "cid_a"
-                ),
-                "doc_a",
-            )
-            .join(
-                lab.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-                    "cluster_id", "cid_b"
-                ),
-                "doc_b",
-            )
-            .filter(F.col("cid_a") != F.col("cid_b"))
-            .count()
-        )
-        if n_split:
-            raise ValueError(
-                f"dedup_clusters_sql: max_hops={max_hops} is below the dup "
-                f"graph's component diameter ({n_split} edges cross cluster "
-                "labels) — raise max_hops or use dedup_clusters (union-find)"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-        spark.catalog.dropTempView(view)
-    return out
-
-
 # edit-distance verify: prefix length and acceptance threshold
 EDIT_PREFIX = 64
 EDIT_MAX = 8
@@ -1253,7 +1018,7 @@ def dedup_recall_eval(
     each query at least twice) don't accumulate executor storage."""
     hs_shared = shingle_hash_sets(spark, sf_dir)  # session-memoized table
     # the minhash call hits the session-memoized checkpointed pair set
-    # (shared with clusters/clusters_star/edit across the whole session,
+    # (shared with clusters/edit across the whole session,
     # not just within this evaluation)
     minhash_pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     pairs: dict[str, DataFrame] = {}

@@ -61,52 +61,6 @@ def events_sessionize(
     )
 
 
-def events_sessionize_native(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = SESSION_GAP_MINUTES
-) -> DataFrame:
-    """``events_sessionize`` via Spark's built-in ``session_window``.
-
-    The native session aggregate merges overlapping [ts, ts+gap) windows
-    per group — one hash-aggregate shuffle on (user_id, window), no window
-    functions, and the SAME operator works unchanged over a watermarked
-    stream (the batch/streaming-unified path).
-
-    BOUNDARY ALIGNMENT (round 5): the family contract (the lag form and
-    every session-consuming operator + oracle) splits on *floor-truncated
-    epoch seconds* with a strict ``>``, while raw session_window compares
-    full-precision timestamps with ``≥`` — a true gap in [gap, gap+1s)
-    split here but not in the lag form (a latent hash mismatch the
-    round-5 synthetic-fixture generator actually hit).  Windowing on
-    second-TRUNCATED timestamps closes the band exactly: session_window
-    merges INCLUSIVELY (an event landing exactly on a window's end
-    joins it — verified empirically at the 1801-whole-second boundary),
-    so over whole-second inputs "merge iff trunc-diff ≤ gap" ⟺ "split
-    iff trunc-diff > gap" — the family contract, reproduced bit-for-bit
-    (min/max aggregate the ORIGINAL microsecond timestamps; only the
-    merge decision is truncated).
-    ``session_no`` (a running index per user) needs one extra step:
-    row_number over session_start — a second shuffle the lag form avoids;
-    at scale prefer this variant when downstreams key on the window
-    itself rather than an ordinal."""
-    ev = read_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    from pyspark.sql import Window as W
-
-    sw = ev.groupBy(
-        "user_id",
-        F.session_window(
-            F.date_trunc("second", F.col("ts")), f"{gap_minutes * 60} seconds"
-        ).alias("w"),
-    ).agg(
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.count("*").alias("n_events"),
-    )
-    win = W.partitionBy("user_id").orderBy("session_start")
-    return sw.withColumn("session_no", F.row_number().over(win) - 1).select(
-        "user_id", "session_no", "session_start", "session_end", "n_events"
-    )
-
-
 def events_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentiles of ``value`` per event type.
 

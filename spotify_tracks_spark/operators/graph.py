@@ -482,7 +482,7 @@ def parts_copurchase_kcore(
     peel loop is a driver loop of bounded rounds; each round is one
     degree aggregate + two semi-joins, localCheckpointed so lineage
     stays flat.  Convergence within ``max_rounds`` is ASSERTED
-    (ValueError otherwise — the dedup_clusters_sql discipline); the
+    (ValueError otherwise, not a silently partial peel); the
     oracle unrolls exactly ``max_rounds`` rounds, which is safe
     BECAUSE peeling is idempotent at the fixpoint, so over-unrolling
     is a no-op.

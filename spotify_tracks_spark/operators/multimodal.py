@@ -135,45 +135,3 @@ def multimodal_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_bytes", "content_md5", F.element_at("feature", 1).cast("double").alias("first_byte")
     )
 
-
-def extract_features_arrow(media: DataFrame) -> DataFrame:
-    """``mapInArrow`` feature extraction — the zero-copy sibling of
-    ``extract_features``: RecordBatches straight from the JVM, no
-    Arrow→pandas materialization of the binary column on the way in
-    (pandas wraps each cell in a Python bytes object; for GB-scale media
-    payloads that copy is the batch's dominant cost).  Same output
-    contract as the pandas path (pinned by test)."""
-    import pyarrow as pa
-
-    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            content = batch.column(batch.schema.get_field_index("content"))
-            doc_id = batch.column(batch.schema.get_field_index("doc_id"))
-            payloads = [c.as_py() for c in content]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_id,
-                    pa.array([len(b) for b in payloads], pa.int64()),
-                    pa.array([hashlib.md5(b).hexdigest() for b in payloads]),
-                    # float32 to match FEATURE_SCHEMA's ArrayType(FloatType)
-                    # exactly — mapInArrow does no implicit cast
-                    pa.array(
-                        [_fake_decode(b) for b in payloads],
-                        pa.list_(pa.float32()),
-                    ),
-                ],
-                names=["doc_id", "n_bytes", "content_md5", "feature"],
-            )
-
-    return media.mapInArrow(batches, FEATURE_SCHEMA)
-
-
-def multimodal_bytes_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``multimodal_bytes`` through the mapInArrow path; same oracle."""
-    docs = read_table(spark, sf_dir, "documents", spread=True)
-    return extract_features_arrow(attach_binary(docs)).select(
-        "doc_id",
-        "n_bytes",
-        "content_md5",
-        F.element_at("feature", 1).cast("double").alias("first_byte"),
-    )

@@ -2437,14 +2437,6 @@ join per_type pb on pb.event_type = type_b
 """
 
 
-# The WITH RECURSIVE twin (dedup_clusters_sql) is checked against the SAME
-# ground-truth oracle as the exact operator: the oracle computes connected
-# components by distinct-union fixpoint, the Spark side by bounded-walk
-# UNION ALL recursion — different algorithms, identical contract, which
-# makes the hash compare an independent check rather than a mirror.
-DEDUP_CLUSTERS_SQL = DEDUP_CLUSTERS
-
-
 def _histogram_sql() -> str:
     from .operators.profile import HIST_BINS
 

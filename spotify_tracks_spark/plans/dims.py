@@ -51,52 +51,6 @@ def dim_track(stg: DataFrame) -> DataFrame:
     )
 
 
-def dim_track_window_variant(stg: DataFrame) -> DataFrame:
-    """``dim_track`` re-expressed with OVER-window analytics — the idiomatic
-    Spark alternative SURVEY.md §2.8 calls out for benchmarking against the
-    reference's aggregate-then-join form (dim_track.sql:5-38).  Same result
-    set, same oracle as Q2; only the physical plan differs:
-
-    - aggregate-join: two hash aggregates + two (broadcast) joins, three
-      scans of staging;
-    - window variant: ONE shuffle on ``track_id`` computes count/min/max
-      over the partition in a single pass, then distinct collapses grain.
-
-    At 100 TB the window form shuffles every play row (no partial
-    aggregation before the exchange), while the aggregate-join form ships
-    only per-track partials — which is why the reference shape stays the
-    contract and this is the benchmarked variant.
-    """
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("track_id")
-    return (
-        stg.select(
-            "track_id",
-            "album_id",
-            F.col("track_album").alias("album"),
-            "track_name",
-            F.col("track_artists").alias("artists"),
-            F.count("*").over(w).alias("total_plays"),
-            F.min("played_at_mtn").over(w).alias("dttm_first_played"),
-            F.max("duration_ms").over(w).alias("duration_ms"),
-        )
-        .select(
-            "track_id",
-            "album_id",
-            "album",
-            "track_name",
-            "artists",
-            "total_plays",
-            "dttm_first_played",
-            F.year(F.col("dttm_first_played").cast("date")).cast("long").alias("yr_first_played"),
-            F.weekofyear(F.col("dttm_first_played").cast("date")).cast("long").alias("wk_first_played"),
-            "duration_ms",
-        )
-        .distinct()
-    )
-
-
 def dim_artist(stg: DataFrame) -> DataFrame:
     """One row per ``artist_id`` — an artist *set* (comma-joined collaboration
     string), so "A" and "A, B" are distinct entities (dim_artist.sql:1-24)."""

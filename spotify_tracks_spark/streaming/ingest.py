@@ -8,8 +8,11 @@ mapping:
 - ``readStream`` over the source (file source here; the REST adapter in
   ``sources/rest.py`` plays the driver-side role in batch mode);
 - ``withWatermark`` sized to the redelivery window (the API's ≤50-item
-  overlap ⇒ 1 day is generous) bounds the dedup state store;
-- ``dropDuplicates([key])`` within the watermark;
+  overlap ⇒ 1 day is generous);
+- ``dropDuplicatesWithinWatermark([key])``: a key's state is evicted
+  once the watermark passes its first-seen event time plus the delay, so
+  the watermark bounds the dedup state store (plain ``dropDuplicates`` on
+  a key without the event-time column keeps every key forever);
 - ``foreachBatch`` + ``append_if_absent`` makes the sink idempotent across
   restarts (at-least-once micro-batches → exactly-once table effect);
 - ``trigger(availableNow=True)`` = the cron-run semantics: drain what's
@@ -22,7 +25,7 @@ ranks the micro-batch with the sink's key projection in one exchange.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.idempotent_sink import append_if_absent
 from ..sources.tables import normalize_events_ts
@@ -35,18 +38,14 @@ def stream_events_dedup(
     checkpoint_dir: str,
     watermark: str = "1 day",
     key: str = "event_id",
-    within_watermark: bool = False,
 ) -> DataFrame:
     """Run the streaming ingest over the events table (availableNow) and
     return the resulting deduplicated sink table as a batch DataFrame.
 
-    ``within_watermark=True`` swaps ``dropDuplicates`` for
-    ``dropDuplicatesWithinWatermark``: the successor API whose state
-    eviction is *guaranteed* by contract (a key expires once the watermark
-    passes its first-seen event time) instead of by the implicit
-    dropDuplicates+watermark interaction — the call a long-running
-    deployment should make.  Identical drained result here (the testdata
-    has no cross-watermark duplicate keys), same oracle."""
+    A redelivery more than ``watermark`` after a key's first sighting may
+    pass the stream dedup; the sink's ``append_if_absent`` still drops
+    it, so the table stays exactly-once while the state store holds only
+    the keys inside the watermark."""
     # `ts` is normalized to a microsecond timestamp before the watermark via
     # the shared dtype-guarded helper (sources/tables.py) — a no-op for the
     # timestamp[us] testdata, a lossless integer conversion for nanos-as-long.
@@ -62,15 +61,14 @@ def stream_events_dedup(
     prior = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
 
-    marked = normalize_events_ts(
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    ).withWatermark("ts", watermark)
     stream = (
-        marked.dropDuplicatesWithinWatermark([key])
-        if within_watermark
-        else marked.dropDuplicates([key])
+        normalize_events_ts(
+            spark.readStream.schema(schema)
+            .option("pathGlobFilter", "events.parquet")
+            .parquet(sf_dir)
+        )
+        .withWatermark("ts", watermark)
+        .dropDuplicatesWithinWatermark([key])
     )
 
     def sink_batch(batch: DataFrame, batch_id: int) -> None:

@@ -72,7 +72,6 @@ def test_no_accidental_cartesian_products(spark):
     qs = {**entrymod.queries(), **entrymod.extra_queries()}
     skip = {  # streaming / sink queries execute eagerly; lint is for plans
         "events_stream_dedup",
-        "events_stream_dedup_within_watermark",
         "events_stream_window",
         "events_stream_sessionize",
         "publish_roundtrip",
@@ -259,32 +258,6 @@ def test_scan_column_pruning_reaches_parquet(spark):
     # events_sample never materializes the props JSON column
     for schema in read_schemas(events_sample(spark, SF_SMOKE)):
         assert "props" not in schema
-
-
-def test_kmeans_pandas_backend_trajectory_pinned(spark):
-    """embedding_kmeans(assign='pandas') must walk the SAME Lloyd
-    trajectory as the expression backend: after 2 full iterations
-    (assign→update→assign→update→final assign) the assignments are
-    identical and distances agree to within BLAS-reassociation noise.
-    Trajectory equality is the strong form — any iteration-k divergence
-    compounds into different means and fails here."""
-    import math
-
-    from spotify_tracks_spark.operators.clustering import embedding_kmeans
-
-    expr = {
-        r.vec_id: (r.cluster, r.sq_dist)
-        for r in embedding_kmeans(spark, SF_SMOKE, n_iters=2).collect()
-    }
-    pand = {
-        r.vec_id: (r.cluster, r.sq_dist)
-        for r in embedding_kmeans(spark, SF_SMOKE, n_iters=2, assign="pandas").collect()
-    }
-    assert set(expr) == set(pand)
-    mismatched = [v for v in expr if expr[v][0] != pand[v][0]]
-    assert not mismatched, f"backend trajectories diverged for {mismatched[:5]}"
-    for v in expr:
-        assert math.isclose(expr[v][1], pand[v][1], rel_tol=1e-9, abs_tol=1e-9)
 
 
 def test_cms_never_undercounts(spark):

@@ -128,45 +128,6 @@ def test_debounce_planted(spark, tmp_path):
     assert kept == {0, 3, 4, 5}
 
 
-def test_clusters_star_equals_union_find(spark):
-    """The large-star/small-star CC must produce label-for-label the same
-    clusters as the exact union-find path on the real minhash graph."""
-    from tests.conftest import SF_SMOKE
-
-    from spotify_tracks_spark.operators.dedup import (
-        dedup_clusters,
-        dedup_clusters_star,
-    )
-
-    want = {
-        (r.doc_id, r.cluster_id, r.cluster_size)
-        for r in dedup_clusters(spark, SF_SMOKE).collect()
-    }
-    got = {
-        (r.doc_id, r.cluster_id, r.cluster_size)
-        for r in dedup_clusters_star(spark, SF_SMOKE).collect()
-    }
-    assert got == want
-
-
-def test_clusters_star_converges_on_long_chain(spark):
-    """The diameter-proof claim: a 64-node path (diameter 63 — where
-    min-label propagation needs ~63 rounds and the recursive CTE's hop
-    bound would split it) converges inside the default 20-round cap and
-    labels every node with the chain's minimum."""
-    from pyspark.sql import functions as F
-
-    from spotify_tracks_spark.operators.dedup import dedup_clusters_star
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(100, 163)], "doc_a long, doc_b long"
-    )
-    rows = dedup_clusters_star(spark, "", edges=chain).collect()
-    assert {r.doc_id for r in rows} == set(range(100, 164))
-    assert {r.cluster_id for r in rows} == {100}
-    assert all(r.cluster_size == 64 for r in rows)
-
-
 def test_containment_planted(spark, tmp_path):
     """An excerpt embedded in a longer host must be caught by containment
     (C(A→B)=1.0) even though pair Jaccard is far below any near-dup

@@ -140,3 +140,23 @@ def test_ingest_end_to_end_dedup(spark):
     empty = spark.createDataFrame([], flat.schema)
     sink = idempotent_union(empty.dropDuplicates(key), flat.dropDuplicates(key), key)
     assert sink.count() == 3  # the overlapping play inserted once
+
+
+def test_stream_dedup_state_stays_bounded(spark, tmp_path):
+    """The watermark bounds the dedup state store: after an availableNow
+    drain, the store holds fewer keys than the stream saw, while the sink
+    still holds every distinct event exactly once.  Plain
+    ``dropDuplicates([key])`` keeps one state row per key forever."""
+    from spotify_tracks_spark.sources.tables import read_table
+    from spotify_tracks_spark.streaming import stream_events_dedup
+
+    from .conftest import SF_SMOKE
+
+    ckpt = str(tmp_path / "ckpt")
+    sink = stream_events_dedup(
+        spark, SF_SMOKE, out_dir=str(tmp_path / "out"), checkpoint_dir=ckpt
+    )
+    n_keys = read_table(spark, SF_SMOKE, "events").select("event_id").distinct().count()
+    assert sink.count() == sink.select("event_id").distinct().count() == n_keys
+    n_state = spark.read.format("statestore").load(ckpt).count()
+    assert n_state < n_keys, f"{n_state} state rows for {n_keys} keys"

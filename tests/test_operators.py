@@ -523,23 +523,6 @@ def test_dedup_embedding_corpus_contract(spark):
         assert abs(r.cos - dot / (na * nb)) < 1e-5
 
 
-def test_salted_topk_equals_unsalted(spark):
-    """Top-k mergeability: the two-phase salted form is byte-identical to
-    the single-shuffle window form, for any salt count."""
-    from spotify_tracks_spark.operators.analytics import (
-        events_topk_per_user,
-        events_topk_per_user_salted,
-    )
-
-    want = {tuple(r) for r in events_topk_per_user(spark, SF_SMOKE).collect()}
-    for n_salts in (1, 3, 8):
-        got = {
-            tuple(r)
-            for r in events_topk_per_user_salted(spark, SF_SMOKE, n_salts=n_salts).collect()
-        }
-        assert got == want, f"n_salts={n_salts}"
-
-
 def test_sketch_rollup_estimate_close_to_exact(spark):
     """Merged daily HLL sketches estimate per-type distinct users within
     HLL++ tolerance of the exact count (and exactly for small counts)."""

@@ -203,20 +203,6 @@ def test_session_cooccurrence_support_and_lift_bounds(spark):
         assert r["n_both"] > 0
 
 
-def test_recursive_cte_clusters_equal_exact_operator(spark):
-    """The WITH RECURSIVE twin must produce byte-identical clusters to
-    the exact union-find/iterative operator — this is also the guard
-    that CLUSTER_MAX_HOPS covers the real component diameter."""
-    from spotify_tracks_spark.operators.dedup import (
-        dedup_clusters,
-        dedup_clusters_sql,
-    )
-
-    exact = {tuple(r) for r in dedup_clusters(spark, SF_SMOKE).collect()}
-    sql = {tuple(r) for r in dedup_clusters_sql(spark, SF_SMOKE).collect()}
-    assert exact == sql
-
-
 def test_session_paths_ranked_and_bounded(spark):
     from spotify_tracks_spark.operators.events import (
         PATH_LEN,

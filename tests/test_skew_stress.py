@@ -9,10 +9,10 @@ user (a hot key holding ~half the log), then asserts:
 1. the fixture IS skewed: hash-partitioning on ``user_id`` alone leaves
    a straggler partition >10x the median (the thing that serializes a
    1000-executor cluster behind one task);
-2. the salted two-phase top-k spreads that key: partitioning on
-   (user_id, salt) has NO partition >10x the median — and its result is
-   byte-identical to the single-shuffle window form (mergeability is the
-   correctness contract, the salt only re-routes rows);
+2. ``events_topk_per_user`` needs no salting on that input: Spark
+   plans a Partial ``WindowGroupLimit`` below the ``user_id`` exchange,
+   so every map task keeps at most k rows per user before the shuffle
+   (the map-side top-k a two-phase salted form would hand-code);
 3. the sessionize / rank-function family still completes and returns
    per-user-correct grains on the skewed input (at this scale they
    finish regardless; the assertion pins correctness so a future
@@ -79,8 +79,8 @@ def _median(xs: list[int]) -> float:
     return (xs[n // 2] + xs[(n - 1) // 2]) / 2
 
 
-def test_fixture_is_skewed_and_salting_rebalances(spark, skew_dir):
-    from spotify_tracks_spark.operators.analytics import N_SALTS
+def test_fixture_is_skewed_and_topk_limits_before_exchange(spark, skew_dir):
+    from spotify_tracks_spark.operators.analytics import events_topk_per_user
     from spotify_tracks_spark.sources.tables import read_table
 
     ev = read_table(spark, skew_dir, "events").select(
@@ -93,26 +93,17 @@ def test_fixture_is_skewed_and_salting_rebalances(spark, skew_dir):
         f"fixture not skewed enough: {plain[-3:]} vs median {_median(plain)}"
     )
 
-    # the salted key spreads the same rows across n_salts tasks
-    salt = F.pmod(F.crc32(F.col("event_id").cast("string")), F.lit(N_SALTS))
-    salted = _partition_histogram(
-        ev.withColumn("salt", salt).repartition(N_SHUFFLE, "user_id", "salt")
+    # the straggler never forms for top-k: a Partial WindowGroupLimit
+    # below the user_id exchange cuts each map task to k rows per user
+    topk = events_topk_per_user(spark, skew_dir)
+    topk.collect()
+    lines = topk._jdf.queryExecution().executedPlan().toString().splitlines()
+    exchange = next(
+        i for i, ln in enumerate(lines) if "Exchange hashpartitioning(user_id" in ln
     )
-    assert max(salted) <= 10 * _median(salted), (
-        f"salted straggler: {salted[-3:]} vs median {_median(salted)}"
-    )
-
-
-def test_salted_topk_matches_plain_on_skewed_input(spark, skew_dir):
-    from spotify_tracks_spark.operators.analytics import (
-        events_topk_per_user,
-        events_topk_per_user_salted,
-    )
-
-    plain = events_topk_per_user(spark, skew_dir).collect()
-    salted = events_topk_per_user_salted(spark, skew_dir).collect()
-    key = lambda r: (r.user_id, r.rnk)  # noqa: E731
-    assert sorted(plain, key=key) == sorted(salted, key=key)
+    assert any(
+        "WindowGroupLimit" in ln and "Partial" in ln for ln in lines[exchange + 1 :]
+    ), "\n".join(lines)
 
 
 def test_window_family_completes_correctly_on_skewed_input(spark, skew_dir):
