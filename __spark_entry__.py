@@ -71,9 +71,11 @@ from spotify_tracks_spark.operators.multimodal import (
     multimodal_bytes,
     multimodal_frames,
 )
+from spotify_tracks_spark import streaming as _stream
 from spotify_tracks_spark.sinks.publish import publish_roundtrip
 from spotify_tracks_spark.sql_api import sql_top_artists, sql_udf_user_buckets
 from spotify_tracks_spark.sources.tables import read_table
+from spotify_tracks_spark.streaming.windowed import SLIDE
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -131,205 +133,24 @@ def _events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     + foreachBatch idempotent sink), availableNow trigger."""
     import tempfile
 
-    from spotify_tracks_spark.streaming import stream_events_dedup
-
     base = tempfile.mkdtemp(prefix="stream_dedup_")
-    return stream_events_dedup(
+    return _stream.stream_events_dedup(
         spark, sf_dir, out_dir=f"{base}/out", checkpoint_dir=f"{base}/ckpt"
     )
-
-
-def _events_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window streaming aggregate (watermark, append mode)."""
-    from spotify_tracks_spark.streaming import stream_events_windowed
-
-    return stream_events_windowed(spark, sf_dir)
-
-
-def _events_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static broadcast enrichment join (no state, no watermark)."""
-    from spotify_tracks_spark.streaming import stream_events_enrich
-
-    return stream_events_enrich(spark, sf_dir)
-
-
-def _events_stream_update_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Update-mode running counts (single-batch availableNow drain)."""
-    from spotify_tracks_spark.streaming import stream_events_update_counts
-
-    return stream_events_update_counts(spark, sf_dir)
-
-
-def _events_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window streaming aggregate (window 1 d, slide 12 h)."""
-    from spotify_tracks_spark.streaming import stream_events_sliding
-
-    return stream_events_sliding(spark, sf_dir)
-
-
-def _events_stream_peak_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chained stateful aggregation: 10-min tumbling counts re-windowed
-    into per-day peak rate (two stateful operators, one query)."""
-    from spotify_tracks_spark.streaming import stream_events_peak_rate
-
-    return stream_events_peak_rate(spark, sf_dir)
-
-
-def _events_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER stream-stream interval join: null-click purchases emit
-    once the watermark proves no future click can match."""
-    from spotify_tracks_spark.streaming import stream_click_purchase_join_outer
-
-    return stream_click_purchase_join_outer(spark, sf_dir)
 
 
 def _events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator: applyInPandasWithState sessionization."""
     import tempfile
 
-    from spotify_tracks_spark.streaming import stream_sessionize
-
-    return stream_sessionize(
+    return _stream.stream_sessionize(
         spark, sf_dir, checkpoint_dir=tempfile.mkdtemp(prefix="stream_sess_ckpt_")
     )
 
 
-
-def _events_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CMS maintenance: the sketch folded forward per micro-batch
-    (constant depth x width state); drained cells hash-equal the batch
-    sketch (streaming/sketch.py)."""
-    from spotify_tracks_spark.streaming import stream_events_cms
-
-    return stream_events_cms(spark, sf_dir)
-
-
-def _events_stream_sequential_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming group-sequential monitor: per-user first-purchase +
-    observed-day state folded per micro-batch; the drain hands the
-    state to the batch operator's shared report tail (hash-equal —
-    same EVENTS_SEQUENTIAL_AB oracle)."""
-    from spotify_tracks_spark.streaming import stream_events_sequential_ab
-
-    return stream_events_sequential_ab(spark, sf_dir)
-
-
-def _events_stream_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming quantile-sketch fold: equi-width bin vectors added per
-    micro-batch (constant |types|xn_bins state), bounds supplied from
-    the prior profile; drained estimates hash-equal the batch sketch
-    (streaming/sketch.py)."""
-    from spotify_tracks_spark.streaming import stream_events_quantile_hist
-
-    return stream_events_quantile_hist(spark, sf_dir)
-
-
-def _events_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming KMV maintenance: the distinct-count registers folded
-    forward per micro-batch by union-and-retake (constant <=k rows per
-    type); drained sketch hash-equals the batch build
-    (streaming/sketch.py)."""
-    from spotify_tracks_spark.streaming import stream_events_kmv
-
-    return stream_events_kmv(spark, sf_dir)
-
-
-def _events_stream_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming theta-sketch set operations: the drained per-type KMV
-    registers feed the identical pair-overlap tail as the batch build —
-    same EVENTS_KMV_SET_OPS oracle (streaming/sketch.py)."""
-    from spotify_tracks_spark.streaming import stream_events_kmv_set_ops
-
-    return stream_events_kmv_set_ops(spark, sf_dir)
-
-
-def _events_stream_hll_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming fold of the HLL set-operations report: drained
-    registers (register-max merge) through the identical pair tail as
-    the batch build — same EVENTS_HLL_SET_OPS oracle
-    (streaming/sketch.py)."""
-    from spotify_tracks_spark.streaming import stream_events_hll_set_ops
-
-    return stream_events_hll_set_ops(spark, sf_dir)
-
-
-def _events_stream_kmv_anotb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming fold of the theta-sketch A-NOT-B report: drained
-    registers through the identical directional-difference tail as the
-    batch build — same EVENTS_KMV_ANOTB oracle (streaming/sketch.py)."""
-    from spotify_tracks_spark.streaming import stream_events_kmv_anotb
-
-    return stream_events_kmv_anotb(spark, sf_dir)
-
-
-def _events_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming HLL register fold (availableNow drain): register-wise
-    max merge, constant-size state, hash-equal to the batch sketch."""
-    from spotify_tracks_spark.streaming import stream_events_hll
-
-    return stream_events_hll(spark, sf_dir)
-
-
-def _events_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Bloom membership-index fold (availableNow drain):
-    idempotent bitmap-OR merge, <=m/32 word rows of constant state."""
-    from spotify_tracks_spark.streaming import stream_events_bloom
-
-    return stream_events_bloom(spark, sf_dir)
-
-
-def _dim_track_streaming_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming-incremental mart maintenance: dim_track folded forward
-    per micro-batch via foreachBatch; drained result hash-equals batch Q2
-    (streaming/incremental.py)."""
-    from spotify_tracks_spark.streaming import stream_dim_track_incremental
-
-    return stream_dim_track_incremental(spark, sf_dir)
-
-
-def _rpt_discovery_rate_streaming_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming-incremental two-DISTINCT weekly mart: rpt_discovery_rate
-    maintained as exact distinct-set state + first-played minima per
-    micro-batch; drained result hash-equals batch Q8
-    (streaming/incremental.py)."""
-    from spotify_tracks_spark.streaming import stream_rpt_discovery_rate_incremental
-
-    return stream_rpt_discovery_rate_incremental(spark, sf_dir)
-
-
-def _rpt_track_counts_streaming_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming-incremental TRAILING-WINDOW mart: rpt_track_counts kept
-    at (track_id, play_date) grain with per-batch window eviction;
-    drained result bit-equals batch Q6 (streaming/incremental.py)."""
-    from spotify_tracks_spark.streaming import stream_rpt_track_counts_incremental
-
-    return stream_rpt_track_counts_incremental(spark, sf_dir)
-
-
-def _docs_stream_heavy_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Misra-Gries fold over the micro-batched document token
-    stream; drained candidates re-counted exactly (streaming/sketch.py),
-    so the report hash-equals the batch text_heavy_terms_mg oracle."""
-    from spotify_tracks_spark.streaming import stream_docs_heavy_terms
-
-    return stream_docs_heavy_terms(spark, sf_dir)
-
-
-def _rpt_artist_counts_streaming_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SECOND mart read over the Q6 fold's (track_id, play_date) state
-    design: rpt_artist_counts maintained incrementally; drained result
-    bit-equals batch Q7 (streaming/incremental.py)."""
-    from spotify_tracks_spark.streaming import stream_rpt_artist_counts_incremental
-
-    return stream_rpt_artist_counts_incremental(spark, sf_dir)
-
-
-def _events_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join (watermarked both sides, event-time
-    bound, append mode): purchases ⋈ same-user clicks in the prior hour."""
-    from spotify_tracks_spark.streaming import stream_click_purchase_join
-
-    return stream_click_purchase_join(spark, sf_dir)
+def _events_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding-window streaming aggregate (window 1 d, slide 12 h)."""
+    return _stream.stream_events_windowed(spark, sf_dir, slide=SLIDE)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -353,10 +174,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "parts_copurchase_ppr": _graph_ppr,
         # streaming fold of the Misra-Gries heavy-terms pass (same
         # exact-recount oracle as the batch twin)
-        "docs_stream_heavy_terms": _docs_stream_heavy_terms,
+        "docs_stream_heavy_terms": _stream.stream_docs_heavy_terms,
         # streaming-incremental artist mart (same Q7 oracle as batch)
         "q7_rpt_artist_counts_streaming_incremental": (
-            _rpt_artist_counts_streaming_incremental
+            _stream.stream_rpt_artist_counts_incremental
         ),
         # top principal component via power iteration (O(n·d)/iter)
         "embedding_top_component": _clu.embedding_top_component,
@@ -393,7 +214,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # Herfindahl supplier-concentration index per nation
         "nation_supplier_hhi": _tpch.nation_supplier_hhi,
         # stream-static broadcast enrichment join (complete-mode drain)
-        "events_stream_enrich": _events_stream_enrich,
+        "events_stream_enrich": _stream.stream_events_enrich,
         # RAKE keyword phrases (corpus-wide deg/freq word scores)
         "text_rake_phrases": _text.text_rake_phrases,
         # sliding-window streaming aggregate (window 1d, slide 12h)
@@ -427,7 +248,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # interval×interval overlap join (completes asof/range family)
         "events_session_overlap": _events.events_session_overlap,
         # update-mode streaming counts (third output mode; 1-batch drain)
-        "events_stream_update_counts": _events_stream_update_counts,
+        "events_stream_update_counts": _stream.stream_events_update_counts,
         # attribution-window funnel (each step within N days of previous)
         "events_window_funnel": _an.events_window_funnel,
         # probe-panel cap BINDING path: 16-probe lowest-vec_id panel
@@ -465,11 +286,11 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round-10 cohort, driver-green r10+r11; identical hash-compare
         # continues here every pytest run) ---
         # streaming fold of the HLL pair report (register-max drain)
-        "events_stream_hll_set_ops": _events_stream_hll_set_ops,
+        "events_stream_hll_set_ops": _stream.stream_events_hll_set_ops,
         # theta-sketch A-NOT-B: directional audience difference per
         # event-type pair (batch + streaming fold, same oracle)
         "events_kmv_anotb": _events.events_kmv_anotb,
-        "events_stream_kmv_anotb": _events_stream_kmv_anotb,
+        "events_stream_kmv_anotb": _stream.stream_events_kmv_anotb,
         # Adamic-Adar link prediction over the shared co-purchase graph
         "parts_copurchase_adamic_adar": _graph_adamic_adar,
         # additive trend/seasonal/residual decomposition (daily grain)
@@ -543,7 +364,7 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "parts_copurchase_triangles": parts_copurchase_triangles,
         "text_doc_similarity": _text.text_doc_similarity,
         "events_cms_heavy_hitters": _events.events_cms_heavy_hitters,
-        "events_stream_cms": _events_stream_cms,
+        "events_stream_cms": _stream.stream_events_cms,
         "dedup_recall_eval": _dedup.dedup_recall_eval,
         "supplier_nation_share": _an.supplier_nation_share,
         "sales_by_region_quarter": _an.sales_by_region_quarter,
@@ -799,12 +620,12 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_cuped_ab_test": _an.events_cuped_ab_test,
         "corpus_curriculum_order": _llm.corpus_curriculum_order,
         "events_quantile_hist": _profile.events_quantile_hist,
-        "events_stream_quantile_hist": _events_stream_quantile_hist,
+        "events_stream_quantile_hist": _stream.stream_events_quantile_hist,
         # round-8 cohort:
         "parts_copurchase_communities": _graph_communities,
         "parts_copurchase_substitutes": _graph_substitutes,
         "events_sequential_ab": _an.events_sequential_ab,
-        "events_stream_sequential_ab": _events_stream_sequential_ab,
+        "events_stream_sequential_ab": _stream.stream_events_sequential_ab,
         "events_did": _an.events_did,
         "events_retention_curve_fit": _an.events_retention_curve_fit,
         "text_naive_bayes_langid": _text.text_naive_bayes_langid,
@@ -818,16 +639,16 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # longest-green: 8-round core-adjacent entries, the 7-round
         # streaming/sink/multimodal cohort, and the 10-strong 4-round
         # round-5 cohort; identical hash-compare continues here) ---
-        "q2_dim_track_streaming_incremental": _dim_track_streaming_incremental,
+        "q2_dim_track_streaming_incremental": _stream.stream_dim_track_incremental,
         "publish_roundtrip": publish_roundtrip,
         "dedup_clusters": _dedup.dedup_clusters,
         "ann_topk_ivf": _sim.ann_topk_ivf,
         "idempotent_append": _idempotent_append,
         "multimodal_bytes": multimodal_bytes,
         "events_stream_dedup": _events_stream_dedup,
-        "events_stream_window": _events_stream_window,
+        "events_stream_window": _stream.stream_events_windowed,
         "events_stream_sessionize": _events_stream_sessionize,
-        "events_stream_join": _events_stream_join,
+        "events_stream_join": _stream.stream_click_purchase_join,
         "events_hll_distinct": _events.events_hll_distinct,
         "events_bloom_membership": _events.events_bloom_membership,
         "dedup_minhash_incremental": _dedup.dedup_minhash_incremental,
@@ -871,11 +692,11 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # streaming-incremental two-DISTINCT weekly mart (same Q8
         # oracle as the batch build)
         "q8_rpt_discovery_rate_streaming_incremental": (
-            _rpt_discovery_rate_streaming_incremental
+            _stream.stream_rpt_discovery_rate_incremental
         ),
         # streaming-incremental TRAILING-WINDOW mart (same Q6 oracle)
         "q6_rpt_track_counts_streaming_incremental": (
-            _rpt_track_counts_streaming_incremental
+            _stream.stream_rpt_track_counts_incremental
         ),
         # L2-normalized power iteration over the shared co-purchase graph
         "parts_copurchase_eigencentrality": _graph_eigen,
@@ -884,18 +705,18 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # tokenizer APPLICATION: per-doc token budget under learned merges
         "corpus_bpe_encode": _llm.corpus_bpe_encode,
         # LEFT OUTER stream-stream interval join (watermark null-emits)
-        "events_stream_join_outer": _events_stream_join_outer,
+        "events_stream_join_outer": _stream.stream_click_purchase_join_outer,
         # theta-sketch set ops: batch + streaming fold (same oracle)
         "events_kmv_set_ops": _events.events_kmv_set_ops,
-        "events_stream_kmv_set_ops": _events_stream_kmv_set_ops,
+        "events_stream_kmv_set_ops": _stream.stream_events_kmv_set_ops,
         # HLL inclusion-exclusion pair overlap (register-max union merge)
         "events_hll_set_ops": _events.events_hll_set_ops,
         # streaming sketch folds (constant-size mergeable state each)
-        "events_stream_kmv": _events_stream_kmv,
-        "events_stream_hll": _events_stream_hll,
-        "events_stream_bloom": _events_stream_bloom,
+        "events_stream_kmv": _stream.stream_events_kmv,
+        "events_stream_hll": _stream.stream_events_hll,
+        "events_stream_bloom": _stream.stream_events_bloom,
         # chained stateful aggregation (window-over-window, Spark 4)
-        "events_stream_peak_rate": _events_stream_peak_rate,
+        "events_stream_peak_rate": _stream.stream_events_peak_rate,
         # distinct-count + NOT-IN anti-join (warehouse Q16 shape)
         "part_supplier_diversity": _tpch.part_supplier_diversity,
         # matryoshka dimension ablation: recall@k at truncated dims

@@ -25,7 +25,6 @@ from .joins import (
 from .stateful import stream_sessionize
 from .windowed import (
     stream_events_peak_rate,
-    stream_events_sliding,
     stream_events_update_counts,
     stream_events_windowed,
 )
@@ -33,7 +32,6 @@ from .windowed import (
 __all__ = [
     "stream_events_dedup",
     "stream_events_peak_rate",
-    "stream_events_sliding",
     "stream_events_update_counts",
     "stream_events_windowed",
     "stream_sessionize",

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.memo import _fingerprint
 from ..plans.staging import stg_recent_tracks
 from ..sources.mapping import src_recent_tracks
+from .drain import run
 
 N_SLICES = 2
 # Files written (and drained) per micro-batch: the slice write fans out to
@@ -191,21 +192,14 @@ def _drain_fold(
         cur["df"] = merged
         cur["batch"] = batch_id
 
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    slice_stream = (
+        spark.readStream.schema(slices.schema)
+        .option("maxFilesPerTrigger", str(files_per_batch))
+        .parquet(src_path)
+    )
     try:
-        (
-            spark.readStream.schema(slices.schema)
-            .option("maxFilesPerTrigger", str(files_per_batch))
-            .parquet(src_path)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        run(spark, slice_stream.writeStream.foreachBatch(merge), f"{base}/ckpt")
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
         # release the hand-off: the result is read from the durable
         # snapshot, so it never depends on executor memory state
         if cur["df"] is not None:
@@ -221,7 +215,6 @@ def _drain_mart(
     base: str | None,
     partials: Callable[[DataFrame], DataFrame],
     remerge: Callable[[DataFrame], DataFrame],
-    n_slices: int,
     prefix: str,
 ) -> DataFrame:
     """``_drain_fold`` over the play log, shared by the four mart folds:
@@ -230,23 +223,20 @@ def _drain_mart(
     return _drain_fold(
         spark, sf_dir, "plays", src_recent_tracks,
         lambda batch_df: partials(stg_recent_tracks(batch_df)), remerge,
-        base, n_slices, prefix=prefix,
+        base, prefix=prefix,
     )
 
 
 def stream_dim_track_incremental(
     spark: SparkSession,
     sf_dir: str,
-    n_slices: int = N_SLICES,
     base: str | None = None,
 ) -> DataFrame:
     """Maintain dim_track incrementally over a micro-batched source stream
     (availableNow drain) and return the final mart — hash-equal to the
     batch ``dim_track`` (same Q2 oracle).  See ``_drain_fold`` for the
     snapshot/restart contract."""
-    state = _drain_mart(
-        spark, sf_dir, base, _partials, _remerge, n_slices, prefix="incr_dim_"
-    )
+    state = _drain_mart(spark, sf_dir, base, _partials, _remerge, prefix="incr_dim_")
     first_date = F.col("dttm_first_played").cast("date")
     return state.select(
         "track_id",
@@ -482,7 +472,6 @@ def _q8_assert_attr_consistency(state: DataFrame) -> None:
 def stream_rpt_discovery_rate_incremental(
     spark: SparkSession,
     sf_dir: str,
-    n_slices: int = N_SLICES,
     base: str | None = None,
 ) -> DataFrame:
     """Maintain ``rpt_discovery_rate`` (Q8) incrementally — the mart
@@ -499,8 +488,7 @@ def stream_rpt_discovery_rate_incremental(
     from ..functions.math_utils import safe_divide
 
     state = _drain_mart(
-        spark, sf_dir, base, _q8_partials, _q8_remerge, n_slices,
-        prefix="incr_q8_",
+        spark, sf_dir, base, _q8_partials, _q8_remerge, prefix="incr_q8_"
     )
     _q8_assert_attr_consistency(state)
     wk = state.filter(F.col("grain") == "wk").drop("artists")
@@ -564,7 +552,6 @@ def stream_rpt_discovery_rate_incremental(
 def stream_rpt_artist_counts_incremental(
     spark: SparkSession,
     sf_dir: str,
-    n_slices: int = N_SLICES,
     base: str | None = None,
 ) -> DataFrame:
     """Maintain ``rpt_artist_counts`` (Q7) incrementally — a SECOND mart
@@ -588,8 +575,7 @@ def stream_rpt_artist_counts_incremental(
     artists label rides the sentinel rows min-folded — functionally
     dependent on track_id, the dim_track attribute argument."""
     state = _drain_mart(
-        spark, sf_dir, base, _rpt_partials, _rpt_remerge, n_slices,
-        prefix="incr_rpt7_",
+        spark, sf_dir, base, _rpt_partials, _rpt_remerge, prefix="incr_rpt7_"
     )
     per_track = (
         state.groupBy("track_id")
@@ -611,7 +597,6 @@ def stream_rpt_artist_counts_incremental(
 def stream_rpt_track_counts_incremental(
     spark: SparkSession,
     sf_dir: str,
-    n_slices: int = N_SLICES,
     base: str | None = None,
 ) -> DataFrame:
     """Maintain ``rpt_track_counts`` (Q6) incrementally — the trailing-
@@ -632,8 +617,7 @@ def stream_rpt_track_counts_incremental(
     dim_track's attribute columns, making the batch build's broadcast
     dim joins unnecessary here)."""
     state = _drain_mart(
-        spark, sf_dir, base, _rpt_partials, _rpt_remerge, n_slices,
-        prefix="incr_rpt_",
+        spark, sf_dir, base, _rpt_partials, _rpt_remerge, prefix="incr_rpt_"
     )
     return (
         state.groupBy("track_id")

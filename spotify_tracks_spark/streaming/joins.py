@@ -18,83 +18,58 @@ join that runs forever and one that OOMs.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.time_utils import epoch_micros
-from ..sources.tables import normalize_events_ts
+from .drain import events_stream, to_memory
 
 WATERMARK = "1 day"
 
-_COUNTER = iter(range(1_000_000))
 
-
-def stream_click_purchase_join(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = WATERMARK,
-) -> DataFrame:
-    """Purchases joined to same-user clicks in the preceding hour
-    (availableNow drain); returns the emitted pairs."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    name = f"ssj_{next(_COUNTER)}"
+def _click_purchase_pairs(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Purchases joined (``how``) to same-user clicks in the preceding
+    hour; both sides are watermarked streams of the events source."""
 
     def side(event_type: str, prefix: str) -> DataFrame:
         return (
-            normalize_events_ts(
-                spark.readStream.schema(schema)
-                .option("pathGlobFilter", "events.parquet")
-                .parquet(sf_dir)
-            )
+            events_stream(spark, sf_dir)
             .filter(F.col("event_type") == event_type)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
                 F.col("user_id").alias(f"{prefix}_user"),
                 F.col("ts").alias(f"{prefix}_ts"),
             )
-            .withWatermark(f"{prefix}_ts", watermark)
+            .withWatermark(f"{prefix}_ts", WATERMARK)
         )
 
-    try:
-        joined = (
-            side("purchase", "purchase")
-            .join(
-                side("click", "click"),
-                F.expr(
-                    "purchase_user = click_user"
-                    " AND click_ts >= purchase_ts - interval 1 hour"
-                    " AND click_ts <= purchase_ts"
-                ),
-                "inner",
-            )
-            .select(
-                "purchase_id",
-                "click_id",
-                F.col("purchase_user").alias("user_id"),
-                "purchase_ts",
-                "click_ts",
-                (
-                    epoch_micros(F.col("purchase_ts")) - epoch_micros(F.col("click_ts"))
-                ).alias("lag_us"),
-            )
-        )
-        (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ssj_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.table(name)
+    return side("purchase", "purchase").join(
+        side("click", "click"),
+        F.expr(
+            "purchase_user = click_user"
+            " AND click_ts >= purchase_ts - interval 1 hour"
+            " AND click_ts <= purchase_ts"
+        ),
+        how,
+    )
+
+
+def stream_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Purchases joined to same-user clicks in the preceding hour
+    (availableNow drain); returns the emitted pairs."""
+    pairs = _click_purchase_pairs(spark, sf_dir, "inner")
+    return to_memory(
+        pairs.select(
+            "purchase_id",
+            "click_id",
+            F.col("purchase_user").alias("user_id"),
+            "purchase_ts",
+            "click_ts",
+            (
+                epoch_micros(F.col("purchase_ts")) - epoch_micros(F.col("click_ts"))
+            ).alias("lag_us"),
+        ),
+        "append",
+    )
 
 
 # static enrichment dimension: event_type -> (category, weight).  A real
@@ -109,10 +84,7 @@ ENRICH_DIM = (
 )
 
 
-def stream_events_enrich(
-    spark: SparkSession,
-    sf_dir: str,
-) -> DataFrame:
+def stream_events_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join: the events stream enriched against a static
     dimension — the remaining Structured Streaming join shape beside the
     stream-stream interval join (stream-static needs NO watermark and NO
@@ -130,47 +102,25 @@ def stream_events_enrich(
     Output: (category, n_events, weighted_value) where weighted_value =
     Σ value·weight (exact: weights are small literals, one multiply per
     row — same IEEE sequence in the oracle)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     dim = spark.createDataFrame(
         list(ENRICH_DIM), "event_type string, category string, weight double"
     )
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    name = f"enrich_{next(_COUNTER)}"
-    try:
-        stream = normalize_events_ts(
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        enriched = stream.join(F.broadcast(dim), "event_type", "left").select(
+    enriched = (
+        events_stream(spark, sf_dir)
+        .join(F.broadcast(dim), "event_type", "left")
+        .select(
             F.coalesce("category", F.lit("unknown")).alias("category"),
             (F.col("value") * F.coalesce("weight", F.lit(0.0))).alias("wv"),
         )
-        agg = enriched.groupBy("category").agg(
-            F.count("*").alias("n_events"),
-            F.sum("wv").alias("weighted_value"),
-        )
-        (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="enrich_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.table(name)
+    )
+    agg = enriched.groupBy("category").agg(
+        F.count("*").alias("n_events"),
+        F.sum("wv").alias("weighted_value"),
+    )
+    return to_memory(agg, "complete")
 
 
-def stream_click_purchase_join_outer(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = WATERMARK,
-) -> DataFrame:
+def stream_click_purchase_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream interval join — the attribution join that
     also emits purchases WITHOUT a qualifying click (null click columns),
     the hard case of streaming joins: an unmatched left row can only be
@@ -190,58 +140,14 @@ def stream_click_purchase_join_outer(
     Scale shape: identical state bound to the inner join — both sides
     expire by watermark + interval bound; the outer semantics add no
     state, only the null-emit on eviction."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    name = f"ssjo_{next(_COUNTER)}"
-
-    def side(event_type: str, prefix: str) -> DataFrame:
-        return (
-            normalize_events_ts(
-                spark.readStream.schema(schema)
-                .option("pathGlobFilter", "events.parquet")
-                .parquet(sf_dir)
-            )
-            .filter(F.col("event_type") == event_type)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("user_id").alias(f"{prefix}_user"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            )
-            .withWatermark(f"{prefix}_ts", watermark)
-        )
-
-    try:
-        joined = (
-            side("purchase", "purchase")
-            .join(
-                side("click", "click"),
-                F.expr(
-                    "purchase_user = click_user"
-                    " AND click_ts >= purchase_ts - interval 1 hour"
-                    " AND click_ts <= purchase_ts"
-                ),
-                "left_outer",
-            )
-            .select(
-                "purchase_id",
-                "click_id",
-                F.col("purchase_user").alias("user_id"),
-                "purchase_ts",
-                "click_ts",
-            )
-        )
-        (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ssjo_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.table(name)
+    pairs = _click_purchase_pairs(spark, sf_dir, "left_outer")
+    return to_memory(
+        pairs.select(
+            "purchase_id",
+            "click_id",
+            F.col("purchase_user").alias("user_id"),
+            "purchase_ts",
+            "click_ts",
+        ),
+        "append",
+    )

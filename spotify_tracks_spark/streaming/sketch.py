@@ -15,7 +15,7 @@ the drain itself is ``streaming/incremental.py::_drain_fold``, the one
 snapshot-fold protocol in the engine: per-batch state snapshots named by
 batch id, so an at-least-once re-delivery is detected and skipped instead
 of double-added, and ``base=`` resumes a restarted run.  The sketches
-slice their source into ``n_slices`` files drained one per trigger.  Each
+slice their source into ``N_SLICES`` files drained one per trigger.  Each
 drained sketch is hash-equal to its batch-computed twin (same seeded
 portable hash as the batch operators), which is the exact-oracle
 contract.
@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import portable_hash60
-from ..operators.events import CMS_DEPTH, CMS_WIDTH
+from ..operators.events import CMS_DEPTH, CMS_WIDTH, KMV_K, KMV_SPACE
 from ..sources.tables import normalize_events_ts
 from .incremental import _drain_fold
 
@@ -52,27 +52,26 @@ def _drain(
     partials,
     remerge,
     base: str | None,
-    n_slices: int,
     prefix: str,
 ) -> DataFrame:
     """``_drain_fold`` over the ``cols`` projection of the events table,
-    ``n_slices`` files drained one per trigger."""
+    ``N_SLICES`` files drained one per trigger."""
     return _drain_fold(
         spark, sf_dir, "events:" + ",".join(cols), _events(*cols), partials,
-        remerge, base, n_slices, files_per_batch=1, prefix=prefix,
+        remerge, base, N_SLICES, files_per_batch=1, prefix=prefix,
     )
 
 
-def _batch_cells(df: DataFrame, depth: int, width: int) -> DataFrame:
+def _batch_cells(df: DataFrame) -> DataFrame:
     structs = F.array(
         *[
             F.struct(
                 F.lit(j).cast("long").alias("d"),
-                F.pmod(portable_hash60(F.col("user_id"), seed=j), F.lit(width)).alias(
-                    "cell"
-                ),
+                F.pmod(
+                    portable_hash60(F.col("user_id"), seed=j), F.lit(CMS_WIDTH)
+                ).alias("cell"),
             )
-            for j in range(depth)
+            for j in range(CMS_DEPTH)
         ]
     )
     return (
@@ -86,9 +85,6 @@ def _batch_cells(df: DataFrame, depth: int, width: int) -> DataFrame:
 def stream_events_cms(
     spark: SparkSession,
     sf_dir: str,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-    n_slices: int = N_SLICES,
     base: str | None = None,
 ) -> DataFrame:
     """Maintain the user-frequency CMS over a micro-batched event stream
@@ -101,21 +97,21 @@ def stream_events_cms(
     CONSTANT in stream length and key cardinality."""
     final = _drain(
         spark, sf_dir, ("event_type", "user_id"),
-        lambda df: _batch_cells(df, depth, width),
+        _batch_cells,
         lambda u: u.groupBy("d", "cell").agg(F.sum("c").alias("c")),
-        base, n_slices, "stream_cms_",
+        base, "stream_cms_",
     )
     return final.select("d", "cell", F.col("c").cast("long").alias("c"))
 
 
-def _batch_kmv(df: DataFrame, k: int) -> DataFrame:
-    hashed = df.select(
-        "event_type", portable_hash60(F.col("user_id")).alias("h")
-    ).distinct()
+def _kmv_retake(hashed: DataFrame) -> DataFrame:
+    """Union-and-retake: dedup shared users, keep the ``KMV_K`` smallest
+    hashes per type — one batch's sketch, and the lossless KMV merge."""
     w = Window.partitionBy("event_type").orderBy("h")
     return (
-        hashed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        hashed.distinct()
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= KMV_K)
         .select("event_type", "h")
     )
 
@@ -123,8 +119,6 @@ def _batch_kmv(df: DataFrame, k: int) -> DataFrame:
 def stream_events_kmv(
     spark: SparkSession,
     sf_dir: str,
-    k: int | None = None,
-    n_slices: int = N_SLICES,
     base: str | None = None,
 ) -> DataFrame:
     """Maintain the per-type K-Minimum-Values distinct sketch over a
@@ -138,17 +132,13 @@ def stream_events_kmv(
     length and user cardinality, the cardinality twin of the CMS
     frequency fold above.  Output: (event_type, n_kept, kth_hash,
     est_distinct_users)."""
-    from ..operators.events import KMV_K, KMV_SPACE
-
-    if k is None:
-        k = KMV_K
-    final = _drain_kmv_registers(spark, sf_dir, k, n_slices, base)
+    final = _drain_kmv_registers(spark, sf_dir, base)
     sk = final.groupBy("event_type").agg(
         F.count("*").alias("n_kept"), F.max("h").alias("kth_hash")
     )
-    numer = float((k - 1) * KMV_SPACE)
+    numer = float((KMV_K - 1) * KMV_SPACE)
     est = F.when(
-        F.col("n_kept") < k, F.col("n_kept").cast("double")
+        F.col("n_kept") < KMV_K, F.col("n_kept").cast("double")
     ).otherwise(F.lit(numer) / F.col("kth_hash"))
     return sk.select(
         "event_type", "n_kept", "kth_hash", est.alias("est_distinct_users")
@@ -156,38 +146,23 @@ def stream_events_kmv(
 
 
 def _drain_kmv_registers(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int,
-    n_slices: int = N_SLICES,
-    base: str | None = None,
+    spark: SparkSession, sf_dir: str, base: str | None
 ) -> DataFrame:
     """Drain the per-type KMV register fold (union-and-retake per
     micro-batch) and return the final (event_type, h) register frame —
     the shared state both streaming sketch reports read."""
-
-    def remerge(u: DataFrame) -> DataFrame:
-        # union-and-retake: dedup shared users across batches, keep the
-        # k smallest per type — the lossless KMV merge
-        w = Window.partitionBy("event_type").orderBy("h")
-        return (
-            u.distinct()
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("event_type", "h")
-        )
-
     return _drain(
         spark, sf_dir, ("event_type", "user_id"),
-        lambda df: _batch_kmv(df, k), remerge, base, n_slices, "stream_kmv_",
+        lambda df: _kmv_retake(
+            df.select("event_type", portable_hash60(F.col("user_id")).alias("h"))
+        ),
+        _kmv_retake, base, "stream_kmv_",
     )
 
 
 def stream_events_kmv_set_ops(
     spark: SparkSession,
     sf_dir: str,
-    k: int | None = None,
-    n_slices: int = N_SLICES,
     base: str | None = None,
     include_exact: bool = True,
 ) -> DataFrame:
@@ -205,14 +180,12 @@ def stream_events_kmv_set_ops(
     test SF (round-8 advice).  A deployed always-on monitor passes
     ``include_exact=False`` for the registers-only report, which truly
     never re-reads history."""
-    from ..operators.events import KMV_K, _kmv_set_ops_tail
+    from ..operators.events import _kmv_set_ops_tail
 
-    if k is None:
-        k = KMV_K
-    kept = _drain_kmv_registers(spark, sf_dir, k, n_slices, base).persist()
+    kept = _drain_kmv_registers(spark, sf_dir, base).persist()
     try:
         kept.count()
-        return _kmv_set_ops_tail(spark, sf_dir, kept, k, include_exact)
+        return _kmv_set_ops_tail(spark, sf_dir, kept, KMV_K, include_exact)
     finally:
         kept.unpersist()
 
@@ -220,8 +193,6 @@ def stream_events_kmv_set_ops(
 def stream_events_kmv_anotb(
     spark: SparkSession,
     sf_dir: str,
-    k: int | None = None,
-    n_slices: int = N_SLICES,
     base: str | None = None,
     include_exact: bool = True,
 ) -> DataFrame:
@@ -234,14 +205,12 @@ def stream_events_kmv_anotb(
     sketch math reads ≤ k rows of state per type; the exact_* columns
     are a batch-scan validation rider — pass ``include_exact=False``
     for the registers-only always-on shape."""
-    from ..operators.events import KMV_K, _kmv_anotb_tail
+    from ..operators.events import _kmv_anotb_tail
 
-    if k is None:
-        k = KMV_K
-    kept = _drain_kmv_registers(spark, sf_dir, k, n_slices, base).persist()
+    kept = _drain_kmv_registers(spark, sf_dir, base).persist()
     try:
         kept.count()
-        return _kmv_anotb_tail(spark, sf_dir, kept, k, include_exact)
+        return _kmv_anotb_tail(spark, sf_dir, kept, KMV_K, include_exact)
     finally:
         kept.unpersist()
 
@@ -264,10 +233,7 @@ def _batch_hll_registers(df: DataFrame) -> DataFrame:
 
 
 def _drain_hll_registers(
-    spark: SparkSession,
-    sf_dir: str,
-    n_slices: int = N_SLICES,
-    base: str | None = None,
+    spark: SparkSession, sf_dir: str, base: str | None
 ) -> DataFrame:
     """Fold the per-type HLL registers over the micro-batched stream
     (availableNow drain) and return the final (event_type, bucket, m)
@@ -280,14 +246,13 @@ def _drain_hll_registers(
     return _drain(
         spark, sf_dir, ("event_type", "user_id"), _batch_hll_registers,
         lambda u: u.groupBy("event_type", "bucket").agg(F.max("m").alias("m")),
-        base, n_slices, "stream_hll_",
+        base, "stream_hll_",
     )
 
 
 def stream_events_hll_set_ops(
     spark: SparkSession,
     sf_dir: str,
-    n_slices: int = N_SLICES,
     base: str | None = None,
     include_exact: bool = True,
 ) -> DataFrame:
@@ -301,7 +266,7 @@ def stream_events_hll_set_ops(
     for the registers-only always-on shape."""
     from ..operators.events import _hll_set_ops_tail
 
-    reg = _drain_hll_registers(spark, sf_dir, n_slices, base).persist()
+    reg = _drain_hll_registers(spark, sf_dir, base).persist()
     try:
         reg.count()
         return _hll_set_ops_tail(spark, sf_dir, reg, include_exact)
@@ -312,7 +277,6 @@ def stream_events_hll_set_ops(
 def stream_events_hll(
     spark: SparkSession,
     sf_dir: str,
-    n_slices: int = N_SLICES,
     base: str | None = None,
 ) -> DataFrame:
     """Maintain the per-type HyperLogLog registers over a micro-batched
@@ -327,7 +291,7 @@ def stream_events_hll(
     n_zero_regs, reg_sum_e61, est_distinct_users)."""
     from ..operators.events import HLL_EST_NUMER, HLL_M
 
-    reg = _drain_hll_registers(spark, sf_dir, n_slices, base)
+    reg = _drain_hll_registers(spark, sf_dir, base)
     agg = reg.groupBy("event_type").agg(
         F.count("*").alias("n_present"),
         F.sum(
@@ -383,7 +347,6 @@ def _batch_bloom_words(df: DataFrame) -> DataFrame:
 def stream_events_bloom(
     spark: SparkSession,
     sf_dir: str,
-    n_slices: int = N_SLICES,
     base: str | None = None,
 ) -> DataFrame:
     """Maintain a Bloom filter of every user ever seen over a
@@ -400,14 +363,13 @@ def stream_events_bloom(
         spark, sf_dir, ("event_type", "user_id"),
         lambda df: _batch_bloom_words(df.select("user_id").distinct()),
         lambda u: u.groupBy("word").agg(F.bit_or("bits").alias("bits")),
-        base, n_slices, "stream_bloom_",
+        base, "stream_bloom_",
     )
 
 
 def stream_events_quantile_hist(
     spark: SparkSession,
     sf_dir: str,
-    n_slices: int = N_SLICES,
     base: str | None = None,
 ) -> DataFrame:
     """Streaming quantile-sketch maintenance: the equi-width bin vector
@@ -457,7 +419,7 @@ def stream_events_quantile_hist(
         lambda u: u.groupBy("event_type", "bucket", "lo", "w").agg(
             F.sum("n").alias("n")
         ),
-        base, n_slices, "stream_qhist_",
+        base, "stream_qhist_",
     )
     return quantiles_from_hist(final.withColumn("n", F.col("n").cast("long")))
 
@@ -465,7 +427,6 @@ def stream_events_quantile_hist(
 def stream_events_sequential_ab(
     spark: SparkSession,
     sf_dir: str,
-    n_slices: int = N_SLICES,
     base: str | None = None,
 ) -> DataFrame:
     """Streaming maintenance of the group-sequential A/B monitor: the
@@ -513,7 +474,7 @@ def stream_events_sequential_ab(
 
     state = _drain(
         spark, sf_dir, ("user_id", "event_type", "ts"), _partials, _remerge,
-        base, n_slices, "stream_seq_ab_",
+        base, "stream_seq_ab_",
     )
     users = state.filter(F.col("grain") == "u").select(
         F.col("day").alias("fp_day"),
@@ -529,7 +490,6 @@ def stream_docs_heavy_terms(
     spark: SparkSession,
     sf_dir: str,
     k: int | None = None,
-    n_slices: int = N_SLICES,
     base: str | None = None,
 ) -> DataFrame:
     """Streaming fold of ``text_heavy_terms_mg``: maintain a single
@@ -579,7 +539,7 @@ def stream_docs_heavy_terms(
             lambda df: df.select(F.explode(words).alias("tok"))
             .groupBy("tok")
             .agg(F.count("*").alias("c")),
-            remerge, base, n_slices, files_per_batch=1, prefix="stream_mg_",
+            remerge, base, N_SLICES, files_per_batch=1, prefix="stream_mg_",
         ).select("tok")
     finally:
         while spent:

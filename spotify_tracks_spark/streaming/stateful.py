@@ -3,13 +3,19 @@
 built-in streaming aggregates can't express (a session's extent depends on
 the *data*, not a fixed window).
 
-Per user_id, events accumulate into sessions split on >gap quiet periods;
-state carries the open tail across micro-batches (an in-flight session is
-merged with the next batch's events, so sessions spanning batch boundaries
-are stitched correctly — exercised by a multi-batch test).  On the final
-batch of an availableNow drain the remaining open sessions are flushed, so
-a fully-drained run equals the batch window-function sessionization
-(operators/events.py) — which is exactly the oracle used to check it.
+Per user_id, events accumulate into sessions split on >gap quiet periods.
+Two tails, chosen by ``flush_tail``:
+
+- flush (the default, and what the registered entry runs): at the end of
+  EVERY micro-batch each key's open session is closed and emitted and its
+  state removed.  So the result equals the batch window-function
+  sessionization (operators/events.py, the oracle used to check it) only
+  for a one-batch drain — the registered single-file source — and a
+  session spanning a batch boundary comes out split.
+- carry: the open tail stays in state and is merged with the next
+  batch's events, so sessions spanning batch boundaries are stitched
+  correctly; only closed sessions are emitted (exercised by a
+  multi-batch test).
 
 Scale shape: state shards by user_id hash across executors; per-key state
 is one (start, end, count) tuple — O(active users), not O(events).  The
@@ -19,14 +25,17 @@ caller's repartition+sort, not collected to the driver.
 
 from __future__ import annotations
 
+import functools
+import tempfile
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..sources.tables import normalize_events_ts
+from .drain import run
 
 GAP_MINUTES = 30
 
@@ -47,58 +56,12 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _sessionize_group(
+def _sessionize(
     key: tuple,
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
+    flush_tail: bool,
 ) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    gap_s = GAP_MINUTES * 60
-
-    ts_us: list[int] = []
-    for pdf in pdfs:
-        ts_us.extend(int(t.value) // 1_000 for t in pdf["ts"])
-    ts_us.sort()
-
-    if state.exists:
-        start, end, count = state.get
-    else:
-        start = end = count = None
-
-    closed: list[tuple[int, int, int, int]] = []
-    for t in ts_us:
-        if start is None:
-            start, end, count = t, t, 1
-        elif t // 1_000_000 - end // 1_000_000 > gap_s:
-            closed.append((user_id, start, end, count))
-            start, end, count = t, t, 1
-        else:
-            end, count = max(end, t), count + 1
-
-    # availableNow drain: flush the open tail so the result is total
-    # (equals batch sessionization).  A continuous run uses the carry
-    # variant below instead.
-    if start is not None:
-        closed.append((user_id, start, end, count))
-        state.remove()
-    if not closed:
-        return iter(())
-
-    out = pd.DataFrame(
-        closed, columns=["user_id", "start_us", "end_us", "n_events"]
-    )
-    out["session_start"] = pd.to_datetime(out.pop("start_us"), unit="us")
-    out["session_end"] = pd.to_datetime(out.pop("end_us"), unit="us")
-    return iter([out[["user_id", "session_start", "session_end", "n_events"]]])
-
-
-def _sessionize_group_carry(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Multi-batch variant: carries the open tail in state instead of
-    flushing, emitting only *closed* sessions per batch."""
     (user_id,) = key
     gap_s = GAP_MINUTES * 60
 
@@ -122,9 +85,14 @@ def _sessionize_group_carry(
             end, count = max(end, t), count + 1
 
     if start is not None:
-        state.update((start, end, count))
+        if flush_tail:
+            closed.append((user_id, start, end, count))
+            state.remove()
+        else:
+            state.update((start, end, count))
     if not closed:
         return iter(())
+
     out = pd.DataFrame(closed, columns=["user_id", "start_us", "end_us", "n_events"])
     out["session_start"] = pd.to_datetime(out.pop("start_us"), unit="us")
     out["session_end"] = pd.to_datetime(out.pop("end_us"), unit="us")
@@ -140,43 +108,30 @@ def stream_sessionize(
 ) -> DataFrame:
     """Run stateful sessionization over a parquet stream (availableNow) and
     return the emitted sessions as a batch DataFrame."""
-    import tempfile
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sample = spark.read.option("pathGlobFilter", glob).parquet(src_dir)
-    schema = sample.schema
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    schema = spark.read.option("pathGlobFilter", glob).parquet(src_dir).schema
     out_dir = tempfile.mkdtemp(prefix="stream_sess_out_")
-    fn = _sessionize_group if flush_tail else _sessionize_group_carry
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", glob)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", glob)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
+    )
+    sessions = (
+        normalize_events_ts(stream)
+        .select("user_id", "ts")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            functools.partial(_sessionize, flush_tail=flush_tail),
+            outputStructType=OUT_SCHEMA,
+            stateStructType=STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        sessions = (
-            normalize_events_ts(stream)
-            .select("user_id", "ts")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                fn,
-                outputStructType=OUT_SCHEMA,
-                stateStructType=STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        (
-            sessions.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
+    )
+    run(
+        spark,
+        sessions.writeStream.format("parquet").option("path", out_dir),
+        checkpoint_dir,
+    )
     return spark.read.parquet(out_dir)

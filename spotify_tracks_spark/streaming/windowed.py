@@ -17,119 +17,44 @@ shard.  The watermark expires state; no unbounded growth.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..sources.tables import normalize_events_ts
+from .drain import events_stream, to_memory
 
 WINDOW = "1 day"
 WATERMARK = "1 day"
-
-_COUNTER = iter(range(1_000_000))
+SLIDE = "12 hours"
+INNER_WINDOW = "10 minutes"
 
 
 def stream_events_windowed(
-    spark: SparkSession,
-    sf_dir: str,
-    window: str = WINDOW,
-    watermark: str = WATERMARK,
+    spark: SparkSession, sf_dir: str, slide: str | None = None
 ) -> DataFrame:
-    """Tumbling-window event counts per type over the events stream
-    (availableNow drain); returns the emitted (finalized) windows."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    """Event counts per type and 1-day window over the events stream
+    (availableNow drain); returns the emitted (finalized) windows.
 
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    name = f"win_{next(_COUNTER)}"
-    try:
-        agg = (
-            normalize_events_ts(
-                spark.readStream.schema(schema)
-                .option("pathGlobFilter", "events.parquet")
-                .parquet(sf_dir)
-            )
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window).alias("win"), "event_type")
-            .agg(F.count("*").alias("n_events"))
-            .select(
-                F.col("win.start").alias("window_start"),
-                F.col("win.end").alias("window_end"),
-                "event_type",
-                "n_events",
-            )
+    ``slide=None`` is tumbling.  ``slide=SLIDE`` (12 h) is the sliding
+    form dashboards use when tumbling edges are too jumpy: each event
+    lands in window/slide = 2 overlapping windows.  Same emission
+    contract either way, so the drained result equals the batch bucket
+    expansion the oracle computes.  Sliding state doubles (2 open windows
+    per key instead of 1) but stays watermark-bounded; Spark implements
+    the multi-window assignment as an Expand (×2) BEFORE the partial
+    aggregate, so the shuffle carries partial counts, not duplicated
+    events."""
+    agg = (
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", WINDOW, slide).alias("win"), "event_type")
+        .agg(F.count("*").alias("n_events"))
+        .select(
+            F.col("win.start").alias("window_start"),
+            F.col("win.end").alias("window_end"),
+            "event_type",
+            "n_events",
         )
-        (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="streamwin_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.table(name)
-
-SLIDE = "12 hours"
-
-
-def stream_events_sliding(
-    spark: SparkSession,
-    sf_dir: str,
-    window: str = WINDOW,
-    slide: str = SLIDE,
-    watermark: str = WATERMARK,
-) -> DataFrame:
-    """Sliding-window event counts per type (window 1 day, slide 12 h):
-    each event lands in window/slide = 2 overlapping windows — the
-    smoothing form dashboards use when tumbling edges are too jumpy.
-
-    Same append-mode/availableNow contract as the tumbling operator: a
-    window emits once the watermark passes its end, so the drained
-    result equals the batch two-bucket expansion the oracle computes.
-    State doubles vs tumbling (2 open windows per key instead of 1) but
-    stays bounded by (#open windows × #types); the watermark still
-    expires every window it passes.  Spark implements the multi-window
-    assignment as an Expand (×2) BEFORE the partial aggregate, so the
-    shuffle carries partial counts, not duplicated events."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    name = f"slide_{next(_COUNTER)}"
-    try:
-        agg = (
-            normalize_events_ts(
-                spark.readStream.schema(schema)
-                .option("pathGlobFilter", "events.parquet")
-                .parquet(sf_dir)
-            )
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window, slide).alias("win"), "event_type")
-            .agg(F.count("*").alias("n_events"))
-            .select(
-                F.col("win.start").alias("window_start"),
-                F.col("win.end").alias("window_end"),
-                "event_type",
-                "n_events",
-            )
-        )
-        (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="streamslide_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.table(name)
+    )
+    return to_memory(agg, "append")
 
 
 def stream_events_update_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -148,45 +73,15 @@ def stream_events_update_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     unwindowed running aggregate keeps |keys| state rows forever, which
     is the documented cost of update-mode dashboards at 100 TB — bounded
     here by |event types|."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    name = f"upd_{next(_COUNTER)}"
-    try:
-        agg = (
-            normalize_events_ts(
-                spark.readStream.schema(schema)
-                .option("pathGlobFilter", "events.parquet")
-                .parquet(sf_dir)
-            )
-            .groupBy("event_type")
-            .agg(F.count("*").alias("n_events"))
-        )
-        (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="streamupd_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.table(name)
+    agg = (
+        events_stream(spark, sf_dir)
+        .groupBy("event_type")
+        .agg(F.count("*").alias("n_events"))
+    )
+    return to_memory(agg, "update")
 
 
-INNER_WINDOW = "10 minutes"
-
-
-def stream_events_peak_rate(
-    spark: SparkSession,
-    sf_dir: str,
-    inner: str = INNER_WINDOW,
-    outer: str = WINDOW,
-    watermark: str = WATERMARK,
-) -> DataFrame:
+def stream_events_peak_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CHAINED stateful aggregation — window-over-window: 10-minute
     tumbling counts per type, re-aggregated into the per-day PEAK
     10-minute rate.  Two stateful operators in one streaming query, the
@@ -206,44 +101,22 @@ def stream_events_peak_rate(
     Scale shape: state = (#open 10-min windows + #open day windows) ×
     #types per shard, watermark-bounded; the second stage's input is the
     inner AGGREGATE stream (144 rows/day/type), never the log."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    name = f"peak_{next(_COUNTER)}"
-    try:
-        inner_agg = (
-            normalize_events_ts(
-                spark.readStream.schema(schema)
-                .option("pathGlobFilter", "events.parquet")
-                .parquet(sf_dir)
-            )
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", inner).alias("win10"), "event_type")
-            .agg(F.count("*").alias("n_events"))
+    inner_agg = (
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", INNER_WINDOW).alias("win10"), "event_type")
+        .agg(F.count("*").alias("n_events"))
+    )
+    outer_agg = (
+        inner_agg.groupBy(
+            F.window(F.col("win10"), WINDOW).alias("day_win"), "event_type"
         )
-        outer_agg = (
-            inner_agg.groupBy(
-                F.window(F.col("win10"), outer).alias("day_win"), "event_type"
-            )
-            .agg(F.max("n_events").alias("peak_10min_events"))
-            .select(
-                F.col("day_win.start").alias("day_start"),
-                F.col("day_win.end").alias("day_end"),
-                "event_type",
-                "peak_10min_events",
-            )
+        .agg(F.max("n_events").alias("peak_10min_events"))
+        .select(
+            F.col("day_win.start").alias("day_start"),
+            F.col("day_win.end").alias("day_end"),
+            "event_type",
+            "peak_10min_events",
         )
-        (
-            outer_agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="streampeak_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.table(name)
+    )
+    return to_memory(outer_agg, "append")

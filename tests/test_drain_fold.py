@@ -102,3 +102,26 @@ def test_drain_fold_reslices_a_changed_input(spark, tmp_path):
     [second] = slice_dirs()
     assert second != first
     shutil.rmtree(second)
+
+
+def test_memory_drains_leave_nothing_behind(spark, tmp_path, monkeypatch):
+    """A memory-sink drain returns its rows and removes what it made: no
+    checkpoint dir under the temp root, no sink view in the catalog, no
+    query left running.  Covers an append-mode and a complete-mode drain."""
+    import os
+    import tempfile
+
+    from spotify_tracks_spark.streaming import (
+        stream_events_enrich,
+        stream_events_windowed,
+    )
+
+    from .conftest import SF_SMOKE
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    before = {t.name for t in spark.catalog.listTables()}
+    for drain in (stream_events_windowed, stream_events_enrich):
+        assert drain(spark, SF_SMOKE).count() > 0
+    assert os.listdir(tmp_path) == []
+    assert {t.name for t in spark.catalog.listTables()} == before
+    assert spark.streams.active == []
