@@ -4,16 +4,21 @@ The reference declares four ``unique`` + ``not_null`` test pairs
 (dbt_spotify/models/marts/_spotify__models.yml:9-11,24-26,48-50,85-87),
 executed by ``dbt build``.  ``run_reference_checks`` ports them 1:1.
 
-Each check is a single aggregate pass (no collect of data rows): uniqueness
-via ``count == count_distinct`` and null presence via a conditional count,
-both in one job per table.
+Each check is one Spark action that collects no data rows: uniqueness via
+``count == count_distinct`` and null presence via a conditional count, in
+one aggregate per table, and each relationship test as one left-anti join
+count.  Under AQE the six actions launch 18 jobs (one per query stage).
+They are independent, so ``run_reference_checks`` runs them concurrently.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, functions as F
+
+from .session import run_concurrently
 
 
 @dataclass(frozen=True)
@@ -74,21 +79,21 @@ REFERENCE_CHECKS = (
 
 
 def run_reference_checks(models: dict[str, DataFrame]) -> list[CheckResult]:
-    results: list[CheckResult] = []
-    for table, column in REFERENCE_CHECKS:
-        results.extend(check_unique_not_null(models[table], table, column))
+    """Every reference check, as concurrent actions; the results keep the
+    serial order (each ``unique``/``not_null`` pair, then the two
+    ``relationships`` tests)."""
+    fct = models["fct_played_track"]
+    actions = [
+        partial(check_unique_not_null, models[table], table, column)
+        for table, column in REFERENCE_CHECKS
+    ]
     # the two generic dbt test classes the reference doesn't declare but
     # the mart DAG satisfies by construction — run as regression guards
-    results.append(
-        check_relationships(
-            models["fct_played_track"], "fct_played_track", "track_id",
-            models["dim_track"], "track_id",
-        )
-    )
-    results.append(
-        check_relationships(
-            models["fct_played_track"], "fct_played_track", "album_id",
-            models["dim_album"], "album_id",
-        )
-    )
-    return results
+    def relationship(column: str, parent: str) -> list[CheckResult]:
+        return [check_relationships(fct, "fct_played_track", column, models[parent], column)]
+
+    actions += [
+        partial(relationship, column, parent)
+        for column, parent in (("track_id", "dim_track"), ("album_id", "dim_album"))
+    ]
+    return [r for rs in run_concurrently(fct.sparkSession, actions) for r in rs]

@@ -8,8 +8,8 @@ Spark-first shape: everything here is a *sink* stage — no relational
 semantics.  At 100 TB marts are small aggregates by construction (the
 dims and reports are bounded by entity counts, not fact rows), so each
 mart leaves the cluster in ONE Arrow collect (``DataFrame.toArrow``: one
-job per mart, not one per partition), and a driver-side publish of
-*marts* stays cheap even when facts do not.  The marts
+job per mart, not one per partition; the marts' collects run concurrently),
+and a driver-side publish of *marts* stays cheap even when facts do not.  The marts
 ``pipeline.run_models`` returns are cached, so the collect reads the
 result the model writes materialized instead of re-running the DAG.
 Timestamps are rendered in the session time zone, never the driver
@@ -27,6 +27,8 @@ from zoneinfo import ZoneInfo
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
+
+from ..session import run_concurrently
 
 _SQLITE_TYPES = {
     "string": "TEXT",
@@ -71,10 +73,15 @@ def copy_to_sqlite(models: dict[str, DataFrame], db_path: str) -> None:
     """Cross-DB copy: DROP + CREATE + INSERT each mart into a SQLite file
     (mirrors ATTACH/CTAS at dbt_build_and_load_turso.py:53-79).  Each mart
     is collected with one ``toArrow`` call, so it must fit in driver
-    memory — true of the entity-bounded marts this sink publishes."""
+    memory — true of the entity-bounded marts this sink publishes.  The
+    collects run concurrently on a driver thread pool, one thread per mart
+    (``session.run_concurrently``); the DDL and inserts then run serially
+    on the one connection, in ``models`` order."""
+    dfs = list(models.values())
+    tables = run_concurrently(dfs[0].sparkSession, [df.toArrow for df in dfs]) if dfs else []
     conn = sqlite3.connect(db_path)
     try:
-        for name, df in models.items():
+        for (name, df), table in zip(models.items(), tables):
             cols = ", ".join(
                 f'"{f.name}" {_sqlite_type(f.dataType.simpleString())}'
                 for f in df.schema.fields
@@ -83,7 +90,6 @@ def copy_to_sqlite(models: dict[str, DataFrame], db_path: str) -> None:
             conn.execute(f'CREATE TABLE "{name}" ({cols})')
             placeholders = ", ".join("?" * len(df.columns))
             tz = ZoneInfo(df.sparkSession.conf.get("spark.sql.session.timeZone"))
-            table = df.toArrow()
             conn.executemany(
                 f'INSERT INTO "{name}" VALUES ({placeholders})',
                 zip(*(_column(c, tz) for c in table.columns)),
